@@ -1,8 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField,
+  StructType}
 import graft.expressions.DotProduct
 import core._
 
@@ -1620,16 +1623,16 @@ object VectorQ {
     * tie-break cannot reproduce it.
     *
     * Determinism: rel and every pairwise sim are r6-rounded cosines
-    * (the VectorQ ranking convention), the score is one mirrored double
-    * expression over rounded inputs, and every argmax carries a vec_id
-    * tiebreak. Scale shape: greedy selection is inherently sequential
-    * in k, but each step is one bounded job — candidates × selected
-    * (≤30×8 pairs, broadcast side ≤8 rows) + a top-1
-    * TakeOrderedAndProject; the corpus-sized work happens ONCE in the
-    * candidate stage, which at 100 TB swaps to any ANN tier (the
-    * knn_classify argument: MMR needs the candidate SET, not exact
-    * global order). Per-step localCheckpoint keeps the 8-step plan
-    * linear (the LPA pattern). */
+    * (the VectorQ ranking convention) computed by Spark, the score is
+    * one mirrored double expression over rounded inputs, and every
+    * argmax carries a vec_id tiebreak ([[mmrGreedy]]). Scale shape: the
+    * corpus-sized work happens ONCE, in the distributed candidate stage,
+    * which at 100 TB swaps to any ANN tier (the knn_classify argument:
+    * MMR needs the candidate SET, not exact global order). Everything
+    * after it works on the fixed 30-row pool whatever the corpus size:
+    * one job computes the pool's ≤900 pairwise sims and collects them,
+    * and the inherently sequential greedy runs on the driver, so its 8
+    * steps cost no job launches, plans or checkpoints. */
   val mmrSelect: QFn = (s, dir) => {
     val e = unitBase(s, dir)
     val q = e.filter(col("vec_id") === 0)
@@ -1642,31 +1645,58 @@ object VectorQ {
       .orderBy(col("rel").desc, col("vec_id"))
       .limit(30)
       .ckpt()
-    val first = cand.orderBy(col("rel").desc, col("vec_id")).limit(1)
-      .select(lit(1L).as("step"), col("vec_id"), col("v"), col("nrm"),
-        col("rel"), lit(0.0).as("max_sim"),
-        (lit(0.7) * col("rel") - lit(0.3) * lit(0.0)).as("score"))
-    var sel = first.ckpt()
-    for (k <- 2 to 8) {
-      val prev = broadcast(sel.select(col("vec_id").as("s_id"),
-        col("v").as("sv"), col("nrm").as("snrm")))
-      val pick = cand
-        .join(sel.select(col("vec_id")), Seq("vec_id"), "left_anti")
-        .crossJoin(prev)
-        .groupBy(col("vec_id"), col("v"), col("nrm"), col("rel"))
-        .agg(max(r6(gdot(col("v"), col("sv")) /
-          (col("nrm") * col("snrm")))).as("max_sim"))
-        .withColumn("score",
-          lit(0.7) * col("rel") - lit(0.3) * col("max_sim"))
-        .orderBy(col("score").desc, col("vec_id"))
-        .limit(1)
-        .select(lit(k.toLong).as("step"), col("vec_id"), col("v"),
-          col("nrm"), col("rel"), col("max_sim"), col("score"))
-      sel = sel.unionAll(pick).ckpt()
-    }
-    sel.select(col("step"), col("vec_id"), col("rel"),
+    val pairs = cand
+      .crossJoin(broadcast(cand.select(col("vec_id").as("s_id"),
+        col("v").as("sv"), col("nrm").as("snrm"))))
+      .select(col("vec_id"), col("rel"), col("s_id"),
+        r6(gdot(col("v"), col("sv")) / (col("nrm") * col("snrm"))).as("sim"))
+      .collect()
+    val picks = mmrGreedy(
+      pairs.map(r => r.getLong(0) -> r.getDouble(1)).toMap,
+      pairs.map(r => (r.getLong(0), r.getLong(2)) -> r.getDouble(3)).toMap,
+      8)
+    val schema = StructType(Seq(StructField("step", LongType, false),
+      StructField("vec_id", LongType), StructField("rel", DoubleType),
+      StructField("max_sim", DoubleType), StructField("score", DoubleType)))
+    s.createDataFrame(picks.map(p =>
+        Row(p.step, p.vecId, p.rel, p.maxSim, p.score)).asJava, schema)
+      .select(col("step"), col("vec_id"), col("rel"),
         r6(col("max_sim")).as("max_sim"), r6(col("score")).as("mmr_score"))
       .orderBy(col("step"))
+  }
+
+  /** One greedy MMR pick, before the output's r6 rounding. */
+  private[graft] final case class MmrPick(step: Long, vecId: Long,
+      rel: Double, maxSim: Double, score: Double)
+
+  /** The greedy of [[mmrSelect]] over a bounded pool: `rel` by vec_id,
+    * `sim` by (candidate, selected) vec_id. Each step scores every
+    * unpicked candidate 0.7·rel − 0.3·max_sim, where max_sim is the max
+    * of its sims to the picks so far (0.0 at step 1, so step 1 is the
+    * relevance argmax), and picks by (score DESC, vec_id ASC). Doubles
+    * compare as in Spark's sort and max (−0.0 = 0.0, NaN above
+    * everything). Stops after `k` picks or when the pool runs out. */
+  private[graft] def mmrGreedy(rel: Map[Long, Double],
+      sim: Map[(Long, Long), Double], k: Int): Seq[MmrPick] = {
+    def cmp(a: Double, b: Double): Int =
+      if (a == b) 0 else java.lang.Double.compare(a, b)
+    var picks = Vector.empty[MmrPick]
+    var left = rel.keySet
+    while (picks.length < k && left.nonEmpty) {
+      val scored = left.toSeq.map { c =>
+        val maxSim = if (picks.isEmpty) 0.0 else picks
+          .map(p => sim((c, p.vecId)))
+          .reduce((a, b) => if (cmp(b, a) > 0) b else a)
+        (c, maxSim, 0.7 * rel(c) - 0.3 * maxSim)
+      }
+      val (id, maxSim, score) = scored.reduce { (a, b) =>
+        val c = cmp(b._3, a._3)
+        if (c > 0 || (c == 0 && b._1 < a._1)) b else a
+      }
+      picks :+= MmrPick(picks.length + 1L, id, rel(id), maxSim, score)
+      left -= id
+    }
+    picks
   }
 
   val queries: Map[String, QFn] = Map(

@@ -51,21 +51,17 @@ class GoldenSpec extends SparkSpec {
         assert(GoldenGen.digest(rows) == expH,
           s"[$axis] content hash != golden")
       }
-      spark.conf.set("spark.sql.shuffle.partitions", "13")
-      check("shuffle=13")
-      // third axis: input-split perturbation — a tiny maxPartitionBytes
-      // multiplies scan partitions, stressing map-side partials, object
-      // aggregates, and iterative loops under a different input layout
-      // (the speculative-retry / cluster-vs-local hazard the shuffle
-      // axis alone can't reach). try/finally: a throwing collect must
-      // not leak the 64 KiB split size into every later test.
-      val priorSplit = spark.conf.get("spark.sql.files.maxPartitionBytes")
-      try {
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "65536")
-        check("split=64KiB")
-      } finally {
-        spark.conf.set("spark.sql.files.maxPartitionBytes", priorSplit)
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
+      // Both axes run inside withConfs, so a failing check on either
+      // leaks neither 13 partitions nor the 64 KiB split size into later
+      // tests. The split axis multiplies scan partitions, stressing
+      // map-side partials, object aggregates and iterative loops under a
+      // different input layout (the speculative-retry / cluster-vs-local
+      // hazard the shuffle axis alone can't reach).
+      withConfs("spark.sql.shuffle.partitions" -> "13") {
+        check("shuffle=13")
+        withConfs("spark.sql.files.maxPartitionBytes" -> "65536") {
+          check("split=64KiB")
+        }
       }
     }
   }

@@ -372,6 +372,52 @@ class OperatorSpec extends SparkSpec {
       "MMR set is no more diverse than the relevance-only top-8")
   }
 
+  /** Hand-built MMR pool: 4 and 7 tie on score at step 2 (same rel, same
+    * sim to the step-1 pick); 2 and 6 score -0.0 and 0.0 at step 4. Each
+    * case runs with the ids iterated up and down, so neither the
+    * tiebreak nor the zero comparison can pass by iteration order. */
+  private val mmrRel = Seq(1L -> 0.9, 2L -> -0.0, 4L -> 0.5, 6L -> 0.0,
+    7L -> 0.5)
+  private val mmrSim = {
+    val close = Map((1L, 4L) -> 0.2, (1L, 7L) -> 0.2, (4L, 7L) -> 0.9)
+    (for ((a, _) <- mmrRel; (b, _) <- mmrRel)
+      yield (a, b) -> close.getOrElse((a min b, a max b), 0.0)).toMap
+  }
+  private def mmrPicks(k: Int): Seq[Seq[graft.queries.VectorQ.MmrPick]] =
+    Seq(Ordering.Long, Ordering.Long.reverse).map(ord =>
+      graft.queries.VectorQ.mmrGreedy(
+        scala.collection.immutable.TreeMap(mmrRel: _*)(ord), mmrSim, k))
+
+  test("mmrGreedy: step 1 is the relevance argmax with max_sim 0.0") {
+    mmrPicks(1).foreach { p =>
+      assert(p.map(x => (x.step, x.vecId, x.rel, x.maxSim, x.score)) ==
+        Seq((1L, 1L, 0.9, 0.0, 0.7 * 0.9)))
+    }
+  }
+
+  test("mmrGreedy: a score tie goes to the lower vec_id") {
+    mmrPicks(2).foreach { p =>
+      assert(p(1).score == 0.7 * 0.5 - 0.3 * 0.2)
+      assert(p.map(_.vecId) == Seq(1L, 4L), "tie must go to vec_id 4, not 7")
+    }
+  }
+
+  test("mmrGreedy: -0.0 and 0.0 scores compare equal, so vec_id decides") {
+    mmrPicks(4).foreach { p =>
+      assert(java.lang.Double.compare(p(3).score, 0.0) < 0,
+        "step 4's pick must score -0.0")
+      assert(p.map(_.vecId) == Seq(1L, 4L, 7L, 2L))
+      assert(p(2).maxSim == 0.9, "max_sim is the max over all picks")
+    }
+  }
+
+  test("mmrGreedy: a pool smaller than k stops early") {
+    mmrPicks(8).foreach { p =>
+      assert(p.map(_.step) == Seq(1L, 2L, 3L, 4L, 5L))
+      assert(p.map(_.vecId) == Seq(1L, 4L, 7L, 2L, 6L))
+    }
+  }
+
   test("benford_audit: all nine digits, shares sum to 1, expectations " +
     "are the Benford masses") {
     val rows = SparkEntry.queries("benford_audit")(spark, sf).collect()

@@ -41,9 +41,14 @@ class ScalingSpec extends SparkSpec {
     * four-tier measurement sweeps including the synthetic 10× expansion
     * make this the single heaviest suite (~8.5 min), and its gates are
     * scaling-regression MEASUREMENTS, not per-change correctness checks.
-    * `sbt -Dgraft.slowTests=true test` runs it. */
-  override def tags: Map[String, Set[String]] =
-    testNames.iterator.map(_ -> Set(SlowTest.name)).toMap
+    * `sbt -Dgraft.slowTests=true test` runs it. Merged into each test's
+    * own tags, so a per-test `taggedAs` still applies. */
+  override def tags: Map[String, Set[String]] = {
+    val own = super.tags
+    testNames.iterator
+      .map(n => n -> (own.getOrElse(n, Set.empty[String]) + SlowTest.name))
+      .toMap
+  }
 
   /** Three decades of measurement: the real fixture tiers plus the
     * deterministic 10× expansion of sf0.1 (ScaleSynth) — the r7 verdict's
