@@ -269,53 +269,69 @@ object StreamQ {
       s.readStream.schema(raw).parquet(inbox(s, dir)), raw("ts").dataType)
   }
 
-  /** Pin shuffle partitions for the duration of one streaming run — the
-    * standard streaming-job tuning: state-store count = shuffle
-    * partitions is FROZEN into the checkpoint at first batch, and every
-    * micro-batch pays per-store open/commit/snapshot overhead, so a
-    * stateful query sizes partitions to its state cardinality and
-    * throughput, not to the batch session's scan parallelism (32 here).
-    * 8 partitions ≈ 4× less fixed state overhead per batch; at real
-    * scale the same knob goes UP with state size — the point is that
-    * it is a per-query decision, which each fresh checkpoint makes
-    * safely. Delegates to core.withShuffleParts — ONE save/set/restore
-    * implementation (r12 advisory: two verbatim copies meant two places
-    * to get the non-reentrancy contract wrong). */
+  /** The scope every streaming run starts its query in. It pins three
+    * session confs and restores them in finally:
+    *
+    *   - `spark.sql.shuffle.partitions` = n. The state-store count equals
+    *     the shuffle partitions and is frozen into the checkpoint at the
+    *     first batch, and every micro-batch pays per-store open/commit
+    *     overhead, so a stateful query sizes partitions to its state, not
+    *     to the batch session's scan parallelism. Each run starts a fresh
+    *     checkpoint, so the choice is safe per query. Delegates to
+    *     core.withShuffleParts and its in-flight guard.
+    *   - `spark.sql.streaming.checkpointFileManagerClass` = the
+    *     FileSystem-based checkpoint manager. Spark's default for `file:`
+    *     is FileContext-based, and without native Hadoop its atomic rename
+    *     (ChecksumFs.renameInternal → getFileLinkStatus → FileUtil.readLink)
+    *     starts a `readlink` child process for every offset, commit,
+    *     source-log, state-delta and schema file and every `.crc`. The
+    *     FileSystem manager renames through RawLocalFileSystem.rename, a
+    *     POSIX rename, which is atomic on the local disk where every
+    *     StreamQ checkpoint lives (under core.scratchRoot). Spark's
+    *     checkpoint checksums (the `N.delta.crc` files) still wrap it.
+    *   - `spark.sql.artifact.isolation.enabled` = false. Each query runs
+    *     in a clone of the session, and the clone reads this conf when
+    *     it is created at `.start()`. With isolation on, every job of the
+    *     clone carries the clone's fresh session id, and the executor
+    *     builds a new class loader per id. Spark's codegen cache is keyed
+    *     by the context class loader, so every run compiled its
+    *     generated code again (20 compiles on the full outer join) and
+    *     loaded new classes for the JIT to compile again. StreamQ adds no
+    *     jars, files or classes to any session, so isolation has nothing
+    *     to isolate; tasks use the executor's default class loader. */
   private def withStreamPartitions[T](s: SparkSession, n: Int = 8)
-      (body: => T): T = core.withShuffleParts(s, n)(body)
+      (body: => T): T = core.withShuffleParts(s, n) {
+    core.withConfs(s)(
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        ("org.apache.spark.sql.execution.streaming.checkpointing." +
+          "FileSystemBasedCheckpointFileManager"),
+      "spark.sql.artifact.isolation.enabled" -> "false")(body)
+  }
 
   /** Pin the RocksDB state-store provider for one run — the provider
     * transformWithState requires (and the one that holds 100 TB state);
-    * restored in finally so the session default is untouched. */
-  private def withRocksDb[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    // Changelog checkpointing (r16): per-batch commit uploads the DELTA
-    // instead of a full RocksDB snapshot — commit cost becomes ∝ batch
-    // updates rather than ∝ state size, the property that matters when
-    // per-key state is GB-sized at 100 TB (snapshots amortize in
-    // background maintenance). Measured locally: commitMs per batch
-    // roughly halves (e.g. stream_timer_exec ~300 → ~160 summed across
-    // the 4 stores); wall delta is small at sf0.1 because commits
-    // overlap across partitions. Values unchanged — only the checkpoint
-    // substrate differs, and each run starts a fresh checkpoint.
-    val clKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prior = s.conf.getOption(key)
-    val priorCl = s.conf.getOption(clKey)
-    s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    s.conf.set(clKey, "true")
-    try body finally {
-      prior match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-      priorCl match {
-        case Some(v) => s.conf.set(clKey, v)
-        case None => s.conf.unset(clKey)
-      }
-    }
-  }
+    * restored in finally so the session default is untouched.
+    *
+    * Changelog checkpointing (r16): per-batch commit uploads the DELTA
+    * instead of a full RocksDB snapshot — commit cost becomes ∝ batch
+    * updates rather than ∝ state size, the property that matters when
+    * per-key state is GB-sized at 100 TB (snapshots amortize in
+    * background maintenance). Measured locally: commitMs per batch
+    * roughly halves (e.g. stream_timer_exec ~300 → ~160 summed across
+    * the 4 stores); wall delta is small at sf0.1 because commits
+    * overlap across partitions. Values unchanged — only the checkpoint
+    * substrate differs, and each run starts a fresh checkpoint. One
+    * setting for all five RocksDB keys: under the FileSystem checkpoint
+    * manager, changelog on was faster than off on every one of them
+    * (sf0.1, 4 vCPU, 4 JVMs per side; stream_init_state_exec median
+    * 2.23 s on vs 2.42 s off). */
+  private def withRocksDb[T](s: SparkSession)(body: => T): T =
+    core.withConfs(s)(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        ("org.apache.spark.sql.execution.streaming." +
+          "state.RocksDBStateStoreProvider"),
+      "spark.sql.streaming.stateStore.rocksdb." +
+        "changelogCheckpointing.enabled" -> "true")(body)
 
   /** Run `plan` to a parquet directory with Trigger.AvailableNow and a
     * fresh checkpoint, then return the re-read result. Complete mode via

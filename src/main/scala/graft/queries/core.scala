@@ -44,6 +44,19 @@ object core {
   def t(s: SparkSession, dir: String, name: String): DataFrame =
     graft.Tables(s, dir, name)
 
+  /** Set session confs for the duration of `body`, then restore each to
+    * its prior value in finally, unsetting any key that was absent
+    * before. The one save/set/restore scope for session conf; nesting is
+    * safe because each scope restores exactly what it saw on entry. */
+  def withConfs[T](s: SparkSession)(kv: (String, String)*)(body: => T): T = {
+    val prior = kv.map { case (k, _) => k -> s.conf.getOption(k) }
+    try { kv.foreach { case (k, v) => s.conf.set(k, v) }; body }
+    finally prior.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
   /** Run eager (checkpointing) plan rounds at a reduced shuffle-partition
     * count — iterative stages whose state is DOMAIN-sized (vocabulary,
     * labels) pay per-partition job overhead × rounds at the session's
@@ -66,12 +79,8 @@ object core {
       "withShuffleParts nested or raced on one session — the restore " +
         "of spark.sql.shuffle.partitions would be clobbered; run keys " +
         "sequentially per session")
-    val prior = s.conf.get("spark.sql.shuffle.partitions")
-    try { s.conf.set("spark.sql.shuffle.partitions", n.toString); body }
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", prior)
-      shufflePartsInFlight.remove(s)
-    }
+    try withConfs(s)("spark.sql.shuffle.partitions" -> n.toString)(body)
+    finally shufflePartsInFlight.remove(s)
   }
 
   // ---- two-phase (bucketed) prefix aggregation -------------------------

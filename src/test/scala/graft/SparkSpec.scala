@@ -24,15 +24,8 @@ trait SparkSpec extends AnyFunSuite {
   val sf: String = "/root/testdata/sf0.001"
 
   /** Set session confs for the duration of `body`, then restore each to
-    * its prior value (unset where previously absent). The ONE
-    * set-and-restore implementation for every conf-toggling spec — each
-    * hand-rolled copy is a chance to get the unset branch wrong. */
-  def withConfs[T](kv: (String, String)*)(body: => T): T = {
-    val prior = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try { kv.foreach { case (k, v) => spark.conf.set(k, v) }; body }
-    finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+    * its prior value (unset where previously absent); delegates to the
+    * engine's one scope, core.withConfs. */
+  def withConfs[T](kv: (String, String)*)(body: => T): T =
+    graft.queries.core.withConfs(spark)(kv: _*)(body)
 }

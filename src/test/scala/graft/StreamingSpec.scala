@@ -285,4 +285,62 @@ class StreamingSpec extends SparkSpec {
     assert(sunk.agg(sum("n")).collect()(0).getLong(0) ==
       batchRef.agg(sum("n")).collect()(0).getLong(0))
   }
+
+  private val ckptManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  test("StreamQ checkpoints keep Spark's per-file checksums and the " +
+      "checkpoint manager pin does not outlive the run") {
+    val runs = new java.io.File(graft.queries.core.scratchRoot,
+      "stream_fojoin")
+    def runDirs = Option(runs.listFiles()).toSet.flatten
+    val before = runDirs
+    graft.queries.StreamQ.queries("stream_full_outer_join_exec")(spark, sf)
+      .collect()
+    val added = runDirs -- before
+    assert(added.size == 1, s"expected one new run dir, got $added")
+    // ckpt/state/<op>/<partition>/<store>/N.delta
+    val deltas = for {
+      p <- new java.io.File(added.head, "ckpt/state/0").listFiles().toSeq
+      store <- p.listFiles().toSeq if store.isDirectory
+      f <- store.listFiles().toSeq if f.getName.matches("\\d+\\.delta")
+    } yield f
+    assert(deltas.nonEmpty, "the run wrote no state delta files")
+    val missing = deltas.filterNot(f =>
+      new java.io.File(f.getParentFile, f.getName + ".crc").isFile)
+    assert(missing.isEmpty, s"delta files without a checksum: $missing")
+    assert(spark.conf.getOption(ckptManagerKey).isEmpty,
+      s"$ckptManagerKey leaked into the session after the run")
+  }
+
+  test("a repeated StreamQ run reuses Spark's compiled code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val isolationKey = "spark.sql.artifact.isolation.enabled"
+    val isolationBefore = spark.conf.get(isolationKey)
+    def run() = graft.queries.StreamQ.queries("stream_full_outer_join_exec")(
+      spark, sf).collect()
+    val first = run()
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(run().toSet == first.toSet)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+      "the second run compiled generated code again")
+    assert(spark.conf.get(isolationKey) == isolationBefore)
+  }
+
+  test("core.withConfs restores a prior value and unsets an absent key " +
+      "when the body throws") {
+    val had = "spark.sql.files.maxPartitionBytes"
+    val absent = ckptManagerKey
+    withConfs(had -> "1234567") {
+      assert(spark.conf.getOption(absent).isEmpty)
+      intercept[IllegalStateException] {
+        graft.queries.core.withConfs(spark)(had -> "65536", absent -> "x") {
+          assert(spark.conf.get(had) == "65536")
+          assert(spark.conf.get(absent) == "x")
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(spark.conf.get(had) == "1234567")
+      assert(spark.conf.getOption(absent).isEmpty)
+    }
+  }
 }
