@@ -3,25 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // The whole-stage-codegen class cache defaults to 100 entries —
-      // fine per query, but the de-correlated protocol interleaves the
-      // FULL inventory between a key's passes, so by the time pass 2
-      // runs, 200+ other keys have evicted its generated classes and
-      // every pass pays Janino compile + fresh JIT again (measured: a
-      // uniform ~1.5× inflation across ALL keys vs the back-to-back
-      // anchor, the exact signature that distinguishes cache eviction
-      // from co-tenant bursts). Static conf, so it must be set here at
-      // session build. ~2k codegen units across the inventory; 10k
-      // gives headroom without meaningful memory cost.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietNoisy()
+    val spark = Session.build()
     // Deterministic warm-up: touch every table once before the timed loop
     // so one-time session costs (first parquet read per table, codegen/JIT
     // of the scan path) don't land on whichever query map-order runs

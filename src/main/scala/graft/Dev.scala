@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc dev harness: time / explain a single contract query.
   * Usage: runMain graft.Dev <queryName> <sfDir> [explain|time|show]
   * (time, dump and dumpstages also take a comma-separated key list) */
@@ -10,14 +8,7 @@ object Dev {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val mode = if (args.length > 2) args(2) else "time"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     def fn = SparkEntry.queries(name)
     mode match {
       // run once with a streaming listener printing per-batch durations

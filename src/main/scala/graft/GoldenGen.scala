@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
-import org.apache.spark.sql.SparkSession
 
 /** Regenerates the golden results file used by GoldenSpec:
   *   runMain graft.GoldenGen
@@ -18,13 +17,7 @@ object GoldenGen {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(4)
     val lines = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val rows = fn(spark, "/root/testdata/sf0.001").collect()
       s"$name\t${rows.length}\t${digest(rows)}"

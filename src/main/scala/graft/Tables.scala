@@ -204,25 +204,8 @@ object Tables {
     prepareSession(spark)
     rowCounts.getOrElseUpdate(
       (sessionKey(spark), sfDir, name), {
-        val v1Key = "spark.sql.sources.useV1SourceList"
-        val aggKey = "spark.sql.parquet.aggregatePushdown"
-        val priorV1 = spark.conf.getOption(v1Key)
-        val priorAgg = spark.conf.getOption(aggKey)
-        try {
-          spark.conf.set(v1Key,
-            priorV1.getOrElse("").split(",").map(_.trim)
-              .filter(s => s.nonEmpty && s != "parquet").mkString(","))
-          spark.conf.set(aggKey, "true")
+        withV2Parquet(spark) {
           spark.read.parquet(s"$sfDir/$name.parquet").count()
-        } finally {
-          priorV1 match {
-            case Some(v) => spark.conf.set(v1Key, v)
-            case None => spark.conf.unset(v1Key)
-          }
-          priorAgg match {
-            case Some(v) => spark.conf.set(aggKey, v)
-            case None => spark.conf.unset(aggKey)
-          }
         }
       })
   }
@@ -246,32 +229,27 @@ object Tables {
     prepareSession(spark)
     colMaxes.getOrElseUpdate(
       (sessionKey(spark), sfDir, name, column), {
-        val v1Key = "spark.sql.sources.useV1SourceList"
-        val aggKey = "spark.sql.parquet.aggregatePushdown"
-        val priorV1 = spark.conf.getOption(v1Key)
-        val priorAgg = spark.conf.getOption(aggKey)
-        try {
-          spark.conf.set(v1Key,
-            priorV1.getOrElse("").split(",").map(_.trim)
-              .filter(s => s.nonEmpty && s != "parquet").mkString(","))
-          spark.conf.set(aggKey, "true")
+        withV2Parquet(spark) {
           // NULL aggregate (empty table / all-NULL column) → 0, not NPE
           // (r13 advisory): degenerate corpora yield NULL results, never
           // crashes; idBucket with domainMax 0 gives width 1, safe.
           Option(spark.read.parquet(s"$sfDir/$name.parquet")
             .agg(max(col(column)))
             .first().getAs[Number](0)).map(_.longValue()).getOrElse(0L)
-        } finally {
-          priorV1 match {
-            case Some(v) => spark.conf.set(v1Key, v)
-            case None => spark.conf.unset(v1Key)
-          }
-          priorAgg match {
-            case Some(v) => spark.conf.set(aggKey, v)
-            case None => spark.conf.unset(aggKey)
-          }
         }
       })
+  }
+
+  /** Run `body` with parquet on the V2 source (dropped from
+    * `useV1SourceList`, computed from its prior value) and aggregate
+    * pushdown on — the footer-statistics read path of the two stats
+    * lookups above. Restored in finally through core.withConfs. */
+  private def withV2Parquet[T](spark: SparkSession)(body: => T): T = {
+    val v1Key = "spark.sql.sources.useV1SourceList"
+    val v1 = spark.conf.getOption(v1Key).getOrElse("").split(",")
+      .map(_.trim).filter(s => s.nonEmpty && s != "parquet").mkString(",")
+    graft.queries.core.withConfs(spark)(
+      v1Key -> v1, "spark.sql.parquet.aggregatePushdown" -> "true")(body)
   }
 
   /** The ONE dual-vintage `ts` normalization, shared by the batch loader,

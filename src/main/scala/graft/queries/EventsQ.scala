@@ -342,14 +342,11 @@ object EventsQ {
     // joins instead of 8 vector steps (the log₂ trick), and the answer
     // needs no vector at all: M⁸'s START row IS the 8-step absorption
     // mass. The ≤250-row model chain runs under ONE shuffle partition
-    // (the withStreamPartitions device, restored in finally; the
+    // (core.withShuffleParts, restored in finally; the
     // corpus-sized transition work was checkpointed above at full
     // parallelism). Each product term is DECIMAL(16,12)-pinned before
     // the order-free sum, mirrored in the oracle's squaring CTEs.
-    val prior = s.conf.get("spark.sql.shuffle.partitions")
-    var v: org.apache.spark.sql.DataFrame = null
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", "1")
+    val v = core.withShuffleParts(s, 1) {
       var m = variants
         .filter(col("variant") === "none" || col("src") =!= col("variant"))
         .unionByName(redirect).unionByName(loops)
@@ -364,10 +361,10 @@ object EventsQ {
           .groupBy(col("variant"), col("src"), col("dst"))
           .agg(dbl(sum(dec(col("pa") * col("pb"), 16, 12))).as("p"))
       }
-      v = m.filter(col("src") === "START")
+      m.filter(col("src") === "START")
         .select(col("variant"), col("dst").as("st"), col("p").as("mass"))
         .ckpt()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prior)
+    }
     // ≤5 rows, but FOUR downstream consumers (p_full, effects, total,
     // report) would each replay the 8-step × 5-variant join chain —
     // checkpoint once (measured 7.1 s → the chain runs once).

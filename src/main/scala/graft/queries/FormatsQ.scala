@@ -429,12 +429,9 @@ object FormatsQ {
     // (bkt) — same-bkt rows co-reside, so clustering by (bkt, id) is
     // satisfied; Spark only accepts that reasoning with the
     // requireAllClusterKeysForCoPartition guard relaxed.
-    val confs = Seq(
+    core.withConfs(s)(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
-      "spark.sql.requireAllClusterKeysForCoPartition" -> "false")
-    val prior = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      "spark.sql.requireAllClusterKeysForCoPartition" -> "false") {
       val a = s.read.format("graft.sources.RangeSource")
         .option("rows", 5000).option("buckets", 8).load()
       val b = s.read.format("graft.sources.RangeSource")
@@ -447,9 +444,6 @@ object FormatsQ {
           sum(col("b.id")).as("sum_id_b"))
         .orderBy(col("bkt"))
         .ckpt()
-    } finally prior.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 

@@ -252,10 +252,8 @@ object ModernQ {
     * hash-match proves. */
   val sqlScripting: QFn = (s, dir) => {
     views(s, dir, "orders")
-    val key = "spark.sql.scripting.enabled"
-    val prior = s.conf.getOption(key)
-    s.conf.set(key, "true")
-    try s.sql("""BEGIN
+    core.withConfs(s)("spark.sql.scripting.enabled" -> "true") {
+      s.sql("""BEGIN
       DECLARE thr DOUBLE DEFAULT 0.0;
       SET thr = (SELECT CAST(sum(CAST(o_totalprice AS DECIMAL(18,4)))
                    AS DOUBLE) / count(*) FROM orders);
@@ -265,9 +263,6 @@ object ModernQ {
       FROM orders WHERE o_totalprice > thr
       GROUP BY o_orderpriority ORDER BY o_orderpriority;
     END""")
-    finally prior match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
     }
   }
 

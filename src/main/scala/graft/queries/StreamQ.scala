@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
 import core._
 
 /** Cumulative (event count, exact scaled value sum) per user — the
@@ -218,22 +218,27 @@ class ListMapAuditProcessor
   * streaming ENGINE (source tracking, state store, sink commit), not just
   * the window arithmetic.
   *
-  * Execution shape per key:
-  *   - the events parquet is staged once per (JVM, fixture dir) into a
-  *     scratch "inbox" directory (file streams read directories);
-  *   - each invocation runs a FRESH query (own checkpoint + output dir),
-  *     so the timed/benched unit is the whole streaming execution, and
-  *     repeated runs can't alias through stale sink state;
-  *   - aggregations sink via `foreachBatch` in Complete mode (the file
-  *     sink is append-only by design; Complete + overwrite-per-batch is
-  *     the standard bounded-cardinality pattern — state is one row per
-  *     (window × type) or session, NOT per event, so it holds at 100 TB
-  *     exactly where the batch twin's shuffle does);
-  *   - the dedup key uses the append-mode file sink directly — streaming
-  *     `dropDuplicates` state emits each key once, and the output
-  *     projects ONLY the dedup key columns, so the result is a set and
-  *     arrival order (which the engine does not define) can't leak into
-  *     the hash.
+  * Execution shape per key: the key builds its streaming plan and hands
+  * it to [[runStream]], the one place a StreamQ query starts. It gives
+  * every invocation a FRESH run dir `<scratchRoot>/<tag>/<id>/{ckpt,out}`
+  * (so the timed/benched unit is the whole streaming execution, and
+  * repeated runs can't alias through stale sink state), scopes the
+  * session confs of the run, drains the input with `AvailableNow`, and
+  * picks the sink from the output mode:
+  *   - append → the file sink (parquet, or AuditSink for the DSv2 write
+  *     key). Append keys project only set-valued columns (the dedup key,
+  *     the joined event ids, ...), so arrival order (which the engine
+  *     does not define) can't leak into the hash;
+  *   - complete → `foreachBatch` overwrite. The file sink is append-only
+  *     by design; Complete + overwrite-per-batch is the standard
+  *     bounded-cardinality pattern — state is one row per (window × type)
+  *     or session, NOT per event, so it holds at 100 TB exactly where the
+  *     batch twin's shuffle does;
+  *   - update → `foreachBatch` append, keeping every emission gradable.
+  * Inputs come from two stagers: `sourceEvents` copies the events
+  * parquet into a per-(JVM, fixture dir) inbox (file streams read
+  * directories), and [[stage]] lands the deterministic md5/ntile batch
+  * split one file per micro-batch for the replay keys.
   *
   * Late data / watermark-drop behavior is graded two ways: the
   * fixed-clock MemoryStream demo stays in StreamingSpec (SURVEY §2.9
@@ -269,15 +274,89 @@ object StreamQ {
       s.readStream.schema(raw).parquet(inbox(s, dir)), raw("ts").dataType)
   }
 
-  /** The scope every streaming run starts its query in. It pins three
-    * session confs and restores them in finally:
+  /** The deterministic batch split shared by every replay key and its
+    * oracle: events in md5(event_id) order — SCRAMBLED relative to event
+    * time — cut into `n` ntile batches, numbered in column `b`. */
+  private def batchSplit(s: SparkSession, dir: String, n: Int): DataFrame =
+    t(s, dir, "events").withColumn("b", ntile(n).over(
+      org.apache.spark.sql.expressions.Window
+        .orderBy(md5(col("event_id").cast("string")), col("event_id"))))
+
+  /** Stage `batches` of the n-way split into `box`, one single-file
+    * micro-batch each (`batch-0N.parquet`), calling `landed(N)` once
+    * batch N is in place. File order is pinned by both name and
+    * modification time, so `maxFilesPerTrigger=1` replays the same batch
+    * sequence every run. Staging is a one-time dev-scale sort; at
+    * production scale the equivalent is the ingest log's own arrival
+    * order — the point here is determinism, not the staging plan.
     *
-    *   - `spark.sql.shuffle.partitions` = n. The state-store count equals
-    *     the shuffle partitions and is frozen into the checkpoint at the
-    *     first batch, and every micro-batch pays per-store open/commit
-    *     overhead, so a stateful query sizes partitions to its state, not
-    *     to the batch session's scan parallelism. Each run starts a fresh
-    *     checkpoint, so the choice is safe per query. Delegates to
+    * Idempotent re-entry: a partial staging (crash/interrupt mid-loop)
+    * must not wedge the keys sharing an inbox for the rest of the JVM, so
+    * each batch is written to `_tmpN/` with overwrite, its part file is
+    * moved over any earlier debris with REPLACE_EXISTING, and completion
+    * is marked by `_staged` only after every batch landed — a retry
+    * restages cleanly. The file source skips `_`-prefixed names. */
+  private def stage(s: SparkSession, dir: String, box: java.io.File,
+      n: Int, batches: Seq[Int])(landed: Int => Unit = _ => ()): String = {
+    val done = new java.io.File(box, "_staged")
+    if (!done.exists()) {
+      box.mkdirs()
+      // one sort, checkpointed for the filtered writes, released after
+      val batched = batchSplit(s, dir, n).ckpt()
+      try {
+        for (i <- batches) {
+          val tmp = new java.io.File(box, s"_tmp$i")
+          batched.filter(col("b") === i).drop("b")
+            .coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
+          val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
+          val dest = new java.io.File(box, f"batch-$i%02d.parquet")
+          java.nio.file.Files.move(part.toPath, dest.toPath,
+            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          dest.setLastModified(1700000000000L + i * 60000L)
+          tmp.listFiles().foreach(_.delete()); tmp.delete()
+          landed(i)
+        }
+        java.nio.file.Files.createFile(done.toPath)
+      } finally batched.unpersist()
+    }
+    box.getAbsolutePath
+  }
+
+  /** The replay keys' stream source: `batches` of the 5-way split, staged
+    * once per (JVM, dir) into the inbox `tag`, read one file per trigger. */
+  private def replay(s: SparkSession, dir: String, tag: String = "late_inbox",
+      batches: Seq[Int] = 1 to 5): DataFrame = {
+    val box = synchronized {
+      stage(s, dir, new java.io.File(scratch(dir, tag)), 5, batches)()
+    }
+    s.readStream.schema(s.read.parquet(box).schema)
+      .option("maxFilesPerTrigger", "1").parquet(box)
+  }
+
+  /** A fresh run dir `<scratchRoot>/<tag>/<8-char id>`. */
+  private def runDir(tag: String): java.io.File =
+    new java.io.File(core.scratchRoot,
+      s"$tag/" + java.util.UUID.randomUUID().toString.take(8))
+
+  /** Run `plan` to termination with `Trigger.AvailableNow` and a fresh
+    * checkpoint at `run/ckpt`, writing `run/out`; returns that output path
+    * and the terminated query (whose `recentProgress` stays readable). The
+    * sink follows from `mode`: append → the file sink of `format`;
+    * complete → foreachBatch overwrite, so the final batch leaves exactly
+    * the converged result; update → foreachBatch append of each batch's
+    * changed groups.
+    *
+    * The query starts in one conf scope, restored in finally on success
+    * and failure alike:
+    *   - `spark.sql.shuffle.partitions` = `parts`. The state-store count
+    *     equals the shuffle partitions and is frozen into the checkpoint
+    *     at the first batch, and every micro-batch pays per-store
+    *     open/commit overhead, so a stateful query sizes partitions to its
+    *     state, not to the batch session's scan parallelism (r7
+    *     re-measure: the single-data-batch join pays per-store open/commit
+    *     on BOTH sides per batch, so 8 → 4 saved ~0.5 s/key at sf0.1; at
+    *     real scale the knob rises with state volume). Each run starts a
+    *     fresh checkpoint, so the choice is safe per query. Goes through
     *     core.withShuffleParts and its in-flight guard.
     *   - `spark.sql.streaming.checkpointFileManagerClass` = the
     *     FileSystem-based checkpoint manager. Spark's default for `file:`
@@ -290,88 +369,82 @@ object StreamQ {
     *     StreamQ checkpoint lives (under core.scratchRoot). Spark's
     *     checkpoint checksums (the `N.delta.crc` files) still wrap it.
     *   - `spark.sql.artifact.isolation.enabled` = false. Each query runs
-    *     in a clone of the session, and the clone reads this conf when
-    *     it is created at `.start()`. With isolation on, every job of the
-    *     clone carries the clone's fresh session id, and the executor
-    *     builds a new class loader per id. Spark's codegen cache is keyed
-    *     by the context class loader, so every run compiled its
-    *     generated code again (20 compiles on the full outer join) and
-    *     loaded new classes for the JIT to compile again. StreamQ adds no
-    *     jars, files or classes to any session, so isolation has nothing
-    *     to isolate; tasks use the executor's default class loader. */
-  private def withStreamPartitions[T](s: SparkSession, n: Int = 8)
-      (body: => T): T = core.withShuffleParts(s, n) {
-    core.withConfs(s)(
-      "spark.sql.streaming.checkpointFileManagerClass" ->
-        ("org.apache.spark.sql.execution.streaming.checkpointing." +
-          "FileSystemBasedCheckpointFileManager"),
-      "spark.sql.artifact.isolation.enabled" -> "false")(body)
-  }
-
-  /** Pin the RocksDB state-store provider for one run — the provider
-    * transformWithState requires (and the one that holds 100 TB state);
-    * restored in finally so the session default is untouched.
-    *
-    * Changelog checkpointing (r16): per-batch commit uploads the DELTA
-    * instead of a full RocksDB snapshot — commit cost becomes ∝ batch
-    * updates rather than ∝ state size, the property that matters when
-    * per-key state is GB-sized at 100 TB (snapshots amortize in
-    * background maintenance). Measured locally: commitMs per batch
-    * roughly halves (e.g. stream_timer_exec ~300 → ~160 summed across
-    * the 4 stores); wall delta is small at sf0.1 because commits
-    * overlap across partitions. Values unchanged — only the checkpoint
-    * substrate differs, and each run starts a fresh checkpoint. One
-    * setting for all five RocksDB keys: under the FileSystem checkpoint
-    * manager, changelog on was faster than off on every one of them
-    * (sf0.1, 4 vCPU, 4 JVMs per side; stream_init_state_exec median
-    * 2.23 s on vs 2.42 s off). */
-  private def withRocksDb[T](s: SparkSession)(body: => T): T =
-    core.withConfs(s)(
+    *     in a clone of the session, and the clone reads this conf when it
+    *     is created at start. With isolation on, every job of the clone
+    *     carries the clone's fresh session id, and the executor builds a
+    *     new class loader per id. Spark's codegen cache is keyed by the
+    *     context class loader, so every run compiled its generated code
+    *     again (20 compiles on the full outer join) and loaded new classes
+    *     for the JIT to compile again. StreamQ adds no jars, files or
+    *     classes to any session, so isolation has nothing to isolate;
+    *     tasks use the executor's default class loader.
+    *   - with `rocksDb`, the RocksDB state-store provider — the one
+    *     transformWithState requires (and the one that holds 100 TB
+    *     state) — with changelog checkpointing (r16): per-batch commit
+    *     uploads the DELTA instead of a full RocksDB snapshot, so commit
+    *     cost is ∝ batch updates rather than ∝ state size (snapshots
+    *     amortize in background maintenance). Values unchanged — only the
+    *     checkpoint substrate differs. Under the FileSystem checkpoint
+    *     manager, changelog on was faster than off on all five RocksDB
+    *     keys (sf0.1, 4 vCPU, 4 JVMs per side; stream_init_state_exec
+    *     median 2.23 s on vs 2.42 s off). */
+  private[graft] def runStream(s: SparkSession, tag: String, mode: String,
+      parts: Int = 4, rocksDb: Boolean = false, format: String = "parquet")(
+      plan: DataFrame, run: java.io.File = runDir(tag))
+      : (String, StreamingQuery) = {
+    val out = new java.io.File(run, "out").getAbsolutePath
+    val rocks = if (!rocksDb) Nil else Seq(
       "spark.sql.streaming.stateStore.providerClass" ->
         ("org.apache.spark.sql.execution.streaming." +
           "state.RocksDBStateStoreProvider"),
       "spark.sql.streaming.stateStore.rocksdb." +
-        "changelogCheckpointing.enabled" -> "true")(body)
-
-  /** Run `plan` to a parquet directory with Trigger.AvailableNow and a
-    * fresh checkpoint, then return the re-read result. Complete mode via
-    * foreachBatch: each micro-batch overwrites the output with the full
-    * current state; the final batch leaves exactly the converged result. */
-  private def runComplete(s: SparkSession, plan: DataFrame, tag: String)
-      : DataFrame = {
-    val run = s"$tag/" + java.util.UUID.randomUUID().toString.take(8)
-    val out = new java.io.File(core.scratchRoot, s"$run/out").getAbsolutePath
-    withStreamPartitions(s) {
-      val q = plan.writeStream
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          // NOT coalesce(1) (r16 — tried and REVERTED): coalesce on the
-          // batch view collapses the Complete-mode state-store restore
-          // into one task (narrow dependency), measured +50% on
-          // range_stream_exec warm; the 8-file-per-batch commit it
-          // would save is not the bottleneck.
-          b.write.mode("overwrite").parquet(out); ()
-        }
-        .outputMode("complete")
-        .option("checkpointLocation",
-          new java.io.File(core.scratchRoot, s"$run/ckpt").getAbsolutePath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        "changelogCheckpointing.enabled" -> "true")
+    core.withShuffleParts(s, parts) {
+      core.withConfs(s)(Seq(
+        "spark.sql.streaming.checkpointFileManagerClass" ->
+          ("org.apache.spark.sql.execution.streaming.checkpointing." +
+            "FileSystemBasedCheckpointFileManager"),
+        "spark.sql.artifact.isolation.enabled" -> "false") ++ rocks: _*) {
+        val w = plan.writeStream.outputMode(mode)
+        val sink =
+          if (mode == "append") w.format(format).option("path", out)
+          else {
+            val save = if (mode == "complete") "overwrite" else "append"
+            w.foreachBatch { (b: DataFrame, _: Long) =>
+              // NOT coalesce(1) (r16 — tried and REVERTED): coalesce on the
+              // batch view collapses the Complete-mode state-store restore
+              // into one task (narrow dependency), measured +50% on
+              // range_stream_exec warm; the 8-file-per-batch commit it
+              // would save is not the bottleneck.
+              b.write.mode(save).parquet(out); ()
+            }
+          }
+        val q = sink
+          .option("checkpointLocation",
+            new java.io.File(run, "ckpt").getAbsolutePath)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        (out, q)
+      }
     }
-    s.read.parquet(out)
   }
+
+  /** [[runStream]] to parquet, re-read as a batch DataFrame. */
+  private def streamed(s: SparkSession, tag: String, mode: String,
+      parts: Int = 4, rocksDb: Boolean = false)(plan: DataFrame): DataFrame =
+    s.read.parquet(runStream(s, tag, mode, parts, rocksDb)(plan)._1)
 
   /** qtumble_hourly's aggregation executed BY the streaming engine;
     * oracle is qtumble_hourly's SQL verbatim. */
   val streamTumbleExec: QFn = (s, dir) =>
-    runComplete(s,
+    streamed(s, "stream_tumble", "complete", 8)(
       sourceEvents(s, dir)
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           dbl(sum(dec(col("value"), 14, 4))).as("sum_value"))
         .select(unix_timestamp(col("window.start")).as("bucket_ts"),
-          col("event_type"), col("n"), col("sum_value")),
-      "stream_tumble")
+          col("event_type"), col("n"), col("sum_value")))
       .orderBy(col("bucket_ts"), col("event_type"))
 
   /** Streaming global TOP-K (r9) — ORDER BY + LIMIT on top of a stateful
@@ -387,29 +460,27 @@ object StreamQ {
     * deterministic. Downstream of the windowed agg the sort runs on
     * hours×types rows — bounded state at any event volume. */
   val streamTopkExec: QFn = (s, dir) =>
-    runComplete(s,
+    streamed(s, "stream_topk", "complete", 8)(
       sourceEvents(s, dir)
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(unix_timestamp(col("window.start")).as("bucket_ts"),
           col("event_type"), col("n"))
         .orderBy(col("n").desc, col("bucket_ts"), col("event_type"))
-        .limit(20),
-      "stream_topk")
+        .limit(20))
       .orderBy(col("n").desc, col("bucket_ts"), col("event_type"))
 
   /** Native session_window executed by the streaming engine; oracle is
     * the lag/cumsum sessionization (session_window_native's contract). */
   val streamSessionExec: QFn = (s, dir) =>
-    runComplete(s,
+    streamed(s, "stream_session", "complete", 8)(
       sourceEvents(s, dir)
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n_events"))
         .select(col("user_id"),
           unix_micros(col("session_window.start")).as("start_us"),
           unix_micros(col("session_window.end")).as("end_us"),
-          col("n_events")),
-      "stream_session")
+          col("n_events")))
       .orderBy(col("user_id"), col("start_us"))
 
   /** Sliding 1 h / 15 m windows executed by the streaming engine — each
@@ -418,15 +489,14 @@ object StreamQ {
     * `win_sliding`'s SQL verbatim: same answer, the engine's overlapping
     * window assignment did the computing. */
   val streamSlidingExec: QFn = (s, dir) =>
-    runComplete(s,
+    streamed(s, "stream_sliding", "complete", 8)(
       sourceEvents(s, dir)
         .groupBy(window(col("ts"), "1 hour", "15 minutes"),
           col("event_type"))
         .agg(count(lit(1)).as("n"),
           dbl(sum(dec(col("value"), 14, 4))).as("sum_value"))
         .select(unix_timestamp(col("window.start")).as("win_start"),
-          col("event_type"), col("n"), col("sum_value")),
-      "stream_sliding")
+          col("event_type"), col("n"), col("sum_value")))
       .orderBy(col("win_start"), col("event_type"))
 
   /** UPDATE output mode through the real engine — the third and last
@@ -442,55 +512,59 @@ object StreamQ {
     * batch's update set — the streaming-upsert pattern (at scale the
     * sink is a keyed store; the append log here keeps the emissions
     * themselves gradable). */
-  val streamUpdateExec: QFn = (s, dir) => {
-    val box = lateInbox(s, dir)
-    val run = "update_exec/" + java.util.UUID.randomUUID().toString.take(8)
-    val out = new java.io.File(core.scratchRoot, s"$run/out").getAbsolutePath
-    val schema = s.read.parquet(box).schema
-    withStreamPartitions(s, 4) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(box)
+  val streamUpdateExec: QFn = (s, dir) =>
+    streamed(s, "update_exec", "update")(
+      replay(s, dir)
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(unix_timestamp(col("window.start")).as("bucket_ts"),
-          col("event_type"), col("n"))
-        .writeStream
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("append").parquet(out); ()
-        }
-        .outputMode("update")
-        .option("checkpointLocation",
-          new java.io.File(core.scratchRoot, s"$run/ckpt").getAbsolutePath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(out)
+          col("event_type"), col("n")))
       .orderBy(col("bucket_ts"), col("event_type"), col("n"))
-  }
 
   /** Streaming dropDuplicates state → append-mode FILE sink (the real
     * streaming parquet sink with its _spark_metadata commit log). Output
     * projects only the dedup key, so the engine's arrival-order choice of
     * representative row cannot reach the hash. */
-  val streamDedupExec: QFn = (s, dir) => {
-    val run = "stream_dedup/" + java.util.UUID.randomUUID().toString.take(8)
-    val out = new java.io.File(core.scratchRoot, s"$run/out").getAbsolutePath
-    withStreamPartitions(s) {
-      val q = sourceEvents(s, dir)
+  val streamDedupExec: QFn = (s, dir) =>
+    streamed(s, "stream_dedup", "append", 8)(
+      sourceEvents(s, dir)
         .dropDuplicates("user_id", "event_type")
-        .select(col("user_id"), col("event_type"))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation",
-          new java.io.File(core.scratchRoot, s"$run/ckpt").getAbsolutePath)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(out).orderBy(col("user_id"), col("event_type"))
+        .select(col("user_id"), col("event_type")))
+      .orderBy(col("user_id"), col("event_type"))
+
+  /** Clicks ⋈ views, the input of every interval-join key: both sides
+    * carry 8 h watermarks and the join carries the time-bound range
+    * condition (views in the 4 hours up to each click, on user_id), so
+    * state for both inputs is provably evictable. `clickValue` adds the
+    * click's `value` as `cval` — stream_join_agg_exec's sum input; every
+    * other key keeps it out of the join state. */
+  private def clickViewJoin(s: SparkSession, dir: String, how: String,
+      clickValue: Boolean = false): DataFrame = {
+    val clicks = sourceEvents(s, dir)
+      .filter(col("event_type") === "click")
+      .select(Seq(col("event_id").as("click_id"), col("user_id"),
+        col("ts").as("cts")) ++
+        (if (clickValue) Seq(col("value").as("cval")) else Nil): _*)
+      .withWatermark("cts", "8 hours")
+    val views = sourceEvents(s, dir)
+      .filter(col("event_type") === "view")
+      .select(col("event_id").as("view_id"), col("user_id").as("vuser"),
+        col("ts").as("vts"))
+      .withWatermark("vts", "8 hours")
+    clicks.join(views,
+      col("user_id") === col("vuser") &&
+        col("vts") >= col("cts") - expr("INTERVAL 4 HOURS") &&
+        col("vts") <= col("cts"),
+      how)
   }
+
+  /** An interval join to the file sink, re-read as its (click_id,
+    * view_id) set. */
+  private def joinPairs(s: SparkSession, dir: String, tag: String,
+      how: String): DataFrame =
+    streamed(s, tag, "append")(
+      clickViewJoin(s, dir, how).select(col("click_id"), col("view_id")))
+      .orderBy(col("click_id"), col("view_id"))
 
   /** Stream-stream interval join through the real engine — the stateful
     * symmetric hash join, the hardest streaming operator: clicks ⋈ views
@@ -505,40 +579,8 @@ object StreamQ {
     * Single AvailableNow batch over the staged file ⇒ no row can be
     * late relative to the watermark, so the on-time path is exactly the
     * batch join and the DuckDB oracle grades it. */
-  val streamJoinExec: QFn = (s, dir) => {
-    val run = "stream_join/" + java.util.UUID.randomUUID().toString.take(8)
-    val out = new java.io.File(core.scratchRoot, s"$run/out").getAbsolutePath
-    // Join state partitions pinned to 4 (r7 re-measure: the single-data-
-    // batch join pays per-store open/commit on BOTH sides per batch, so
-    // fewer, fatter stores win at this state size — 8→4 saved ~0.5 s/key
-    // at sf0.1; at real scale the knob rises with state volume).
-    val clicks = sourceEvents(s, dir)
-      .filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"),
-        col("ts").as("cts"))
-      .withWatermark("cts", "8 hours")
-    val views = sourceEvents(s, dir)
-      .filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id").as("vuser"),
-        col("ts").as("vts"))
-      .withWatermark("vts", "8 hours")
-    withStreamPartitions(s, 4) {
-      val q = clicks.join(views,
-          col("user_id") === col("vuser") &&
-            col("vts") >= col("cts") - expr("INTERVAL 4 HOURS") &&
-            col("vts") <= col("cts"))
-        .select(col("click_id"), col("view_id"))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation",
-          new java.io.File(core.scratchRoot, s"$run/ckpt").getAbsolutePath)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(out).orderBy(col("click_id"), col("view_id"))
-  }
+  val streamJoinExec: QFn = (s, dir) =>
+    joinPairs(s, dir, "stream_join", "inner")
 
   /** Stream-stream LEFT OUTER interval join through the real engine —
     * the operator that completes the §2.19 join family. Inner results
@@ -559,37 +601,8 @@ object StreamQ {
     * late-input filter; the state eviction predicate is `cts < wm`
     * since the latest qualifying view has vts = cts). The oracle
     * replays that rule; output (click_id, view_id-nullable) is a set. */
-  val streamOuterJoinExec: QFn = (s, dir) => {
-    val run = "stream_ojoin/" + java.util.UUID.randomUUID().toString.take(8)
-    val out = new java.io.File(core.scratchRoot, s"$run/out").getAbsolutePath
-    val clicks = sourceEvents(s, dir)
-      .filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"),
-        col("ts").as("cts"))
-      .withWatermark("cts", "8 hours")
-    val views = sourceEvents(s, dir)
-      .filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id").as("vuser"),
-        col("ts").as("vts"))
-      .withWatermark("vts", "8 hours")
-    withStreamPartitions(s, 4) {
-      val q = clicks.join(views,
-          col("user_id") === col("vuser") &&
-            col("vts") >= col("cts") - expr("INTERVAL 4 HOURS") &&
-            col("vts") <= col("cts"),
-          "left_outer")
-        .select(col("click_id"), col("view_id"))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation",
-          new java.io.File(core.scratchRoot, s"$run/ckpt").getAbsolutePath)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(out).orderBy(col("click_id"), col("view_id"))
-  }
+  val streamOuterJoinExec: QFn = (s, dir) =>
+    joinPairs(s, dir, "stream_ojoin", "left_outer")
 
   /** Stream-stream FULL OUTER interval join through the real engine
     * (r10) — the remaining outer topology. Inner results = the batch
@@ -605,38 +618,8 @@ object StreamQ {
     * condition-derived horizon). Same staged single-data-batch replay,
     * wm_final = global max (ms-truncated) − 8 h; output is a set of
     * (click_id, view_id) with nulls on both sides. */
-  val streamFullOuterJoinExec: QFn = (s, dir) => {
-    val run = "stream_fojoin/" + java.util.UUID.randomUUID().toString.take(8)
-    val out = new java.io.File(core.scratchRoot, s"$run/out").getAbsolutePath
-    val clicks = sourceEvents(s, dir)
-      .filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"),
-        col("ts").as("cts"))
-      .withWatermark("cts", "8 hours")
-    val views = sourceEvents(s, dir)
-      .filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id").as("vuser"),
-        col("ts").as("vts"))
-      .withWatermark("vts", "8 hours")
-    withStreamPartitions(s, 4) {
-      val q = clicks.join(views,
-          col("user_id") === col("vuser") &&
-            col("vts") >= col("cts") - expr("INTERVAL 4 HOURS") &&
-            col("vts") <= col("cts"),
-          "full_outer")
-        .select(col("click_id"), col("view_id"))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation",
-          new java.io.File(core.scratchRoot, s"$run/ckpt").getAbsolutePath)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(out)
-      .orderBy(col("click_id"), col("view_id"))
-  }
+  val streamFullOuterJoinExec: QFn = (s, dir) =>
+    joinPairs(s, dir, "stream_fojoin", "full_outer")
 
   /** Stream-stream RIGHT OUTER interval join through the real engine
     * (r10) — the mirror of stream_outer_join_exec, null-extending the
@@ -646,38 +629,8 @@ object StreamQ {
     * interval behind the left-outer case — the production surprise this
     * key pins (right-outer results arrive later than left-outer ones
     * under identical watermarks). Same replay + wm_final rule. */
-  val streamRightOuterJoinExec: QFn = (s, dir) => {
-    val run = "stream_rojoin/" + java.util.UUID.randomUUID().toString.take(8)
-    val out = new java.io.File(core.scratchRoot, s"$run/out").getAbsolutePath
-    val clicks = sourceEvents(s, dir)
-      .filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"),
-        col("ts").as("cts"))
-      .withWatermark("cts", "8 hours")
-    val views = sourceEvents(s, dir)
-      .filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id").as("vuser"),
-        col("ts").as("vts"))
-      .withWatermark("vts", "8 hours")
-    withStreamPartitions(s, 4) {
-      val q = clicks.join(views,
-          col("user_id") === col("vuser") &&
-            col("vts") >= col("cts") - expr("INTERVAL 4 HOURS") &&
-            col("vts") <= col("cts"),
-          "right_outer")
-        .select(col("click_id"), col("view_id"))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation",
-          new java.io.File(core.scratchRoot, s"$run/ckpt").getAbsolutePath)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(out)
-      .orderBy(col("click_id"), col("view_id"))
-  }
+  val streamRightOuterJoinExec: QFn = (s, dir) =>
+    joinPairs(s, dir, "stream_rojoin", "right_outer")
 
   /** Stream-stream LEFT SEMI interval join through the real engine (r11)
     * — the remaining join topology Spark supports (inner + 3 outers are
@@ -693,37 +646,10 @@ object StreamQ {
     * results for eviction like outer nulls would emit the same SET here,
     * but one that dropped rows by the outer eviction rule would lose the
     * clicks above the final watermark — the oracle pins those). */
-  val streamSemiJoinExec: QFn = (s, dir) => {
-    val run = "stream_sjoin/" + java.util.UUID.randomUUID().toString.take(8)
-    val out = new java.io.File(core.scratchRoot, s"$run/out").getAbsolutePath
-    val clicks = sourceEvents(s, dir)
-      .filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"),
-        col("ts").as("cts"))
-      .withWatermark("cts", "8 hours")
-    val views = sourceEvents(s, dir)
-      .filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id").as("vuser"),
-        col("ts").as("vts"))
-      .withWatermark("vts", "8 hours")
-    withStreamPartitions(s, 4) {
-      val q = clicks.join(views,
-          col("user_id") === col("vuser") &&
-            col("vts") >= col("cts") - expr("INTERVAL 4 HOURS") &&
-            col("vts") <= col("cts"),
-          "left_semi")
-        .select(col("click_id"))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation",
-          new java.io.File(core.scratchRoot, s"$run/ckpt").getAbsolutePath)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(out).orderBy(col("click_id"))
-  }
+  val streamSemiJoinExec: QFn = (s, dir) =>
+    streamed(s, "stream_sjoin", "append")(
+      clickViewJoin(s, dir, "left_semi").select(col("click_id")))
+      .orderBy(col("click_id"))
 
   /** Stream-stream join FEEDING a windowed aggregation (r11) — the
     * chained MULTI-STATEFUL topology (join state + agg state in one
@@ -742,40 +668,15 @@ object StreamQ {
     * (strictly fewer than the un-chained rule — the production surprise
     * this key pins; calibrated against the engine at sf0.001/0.01,
     * where a non-delayed rule over-emits). */
-  val streamJoinAggExec: QFn = (s, dir) => {
-    val run = "stream_jagg/" + java.util.UUID.randomUUID().toString.take(8)
-    val out = new java.io.File(core.scratchRoot, s"$run/out").getAbsolutePath
-    val clicks = sourceEvents(s, dir)
-      .filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"),
-        col("ts").as("cts"), col("value").as("cval"))
-      .withWatermark("cts", "8 hours")
-    val views = sourceEvents(s, dir)
-      .filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id").as("vuser"),
-        col("ts").as("vts"))
-      .withWatermark("vts", "8 hours")
-    withStreamPartitions(s, 4) {
-      val q = clicks.join(views,
-          col("user_id") === col("vuser") &&
-            col("vts") >= col("cts") - expr("INTERVAL 4 HOURS") &&
-            col("vts") <= col("cts"))
+  val streamJoinAggExec: QFn = (s, dir) =>
+    streamed(s, "stream_jagg", "append")(
+      clickViewJoin(s, dir, "inner", clickValue = true)
         .groupBy(window(col("cts"), "1 hour"))
         .agg(count(lit(1)).as("n"),
           dbl(sum(dec(col("cval"), 14, 4))).as("sum_click_value"))
         .select(unix_timestamp(col("window.start")).as("bucket_ts"),
-          col("n"), col("sum_click_value"))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation",
-          new java.io.File(core.scratchRoot, s"$run/ckpt").getAbsolutePath)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(out).orderBy(col("bucket_ts"))
-  }
+          col("n"), col("sum_click_value")))
+      .orderBy(col("bucket_ts"))
 
   /** TWO windowed aggregations JOINED on window equality (r11) — the
     * other documented multi-stateful chain (SPARK-42376's agg→join
@@ -791,8 +692,6 @@ object StreamQ {
     * multi-batch quiesce is exactly what this key grades (a single
     * no-data sweep would emit nothing). Calibrated at sf0.001/0.01. */
   val streamAggJoinExec: QFn = (s, dir) => {
-    val run = "stream_ajoin/" + java.util.UUID.randomUUID().toString.take(8)
-    val out = new java.io.File(core.scratchRoot, s"$run/out").getAbsolutePath
     val clicks = sourceEvents(s, dir)
       .filter(col("event_type") === "click")
       .select(col("ts").as("cts"))
@@ -805,59 +704,78 @@ object StreamQ {
       .withWatermark("vts", "8 hours")
       .groupBy(window(col("vts"), "1 hour").as("vw"))
       .agg(count(lit(1)).as("n_views"))
-    withStreamPartitions(s, 4) {
-      val q = clicks.join(views, col("cw") === col("vw"))
+    streamed(s, "stream_ajoin", "append")(
+      clicks.join(views, col("cw") === col("vw"))
         .select(unix_timestamp(col("cw.start")).as("bucket_ts"),
-          col("n_clicks"), col("n_views"))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation",
-          new java.io.File(core.scratchRoot, s"$run/ckpt").getAbsolutePath)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(out).orderBy(col("bucket_ts"))
+          col("n_clicks"), col("n_views")))
+      .orderBy(col("bucket_ts"))
   }
 
-  /** Stage events into 5 single-file micro-batches in a deterministic
-    * SCRAMBLED order (ntile over md5(event_id) — same expression the
-    * oracle replays), once per (JVM, dir). File order is pinned by both
-    * name and modification time, so `maxFilesPerTrigger=1` replays the
-    * same batch sequence every run. Staging is a one-time dev-scale sort;
-    * at production scale the equivalent is the ingest log's own arrival
-    * order — the point here is determinism, not the staging plan. */
-  private def lateInbox(s: SparkSession, dir: String): String = synchronized {
-    val box = new java.io.File(scratch(dir, "late_inbox"))
-    // Idempotent re-entry: a partial staging (crash/interrupt mid-loop)
-    // must not wedge the three keys for the rest of the JVM, so every
-    // move REPLACE_EXISTINGs and completion is marked only after all 5
-    // batches landed — a retry restages cleanly over the debris.
-    val done = new java.io.File(box, "_staged")
-    if (!done.exists()) {
-      box.mkdirs()
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(md5(col("event_id").cast("string")), col("event_id"))
-      // one sort, checkpointed for the 5 filtered writes, released after
-      val batched = t(s, dir, "events")
-        .withColumn("b", ntile(5).over(w)).ckpt()
-      try {
-        for (i <- 1 to 5) {
-          val tmp = new java.io.File(box, s"_tmp$i")
-          batched.filter(col("b") === i).drop("b")
-            .coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
-          val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
-          val dest = new java.io.File(box, f"batch-$i%02d.parquet")
-          java.nio.file.Files.move(part.toPath, dest.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          dest.setLastModified(1700000000000L + i * 60000L)
-          tmp.listFiles().foreach(_.delete()); tmp.delete()
-        }
-        java.nio.file.Files.createFile(done.toPath)
-      } finally batched.unpersist()
+  /** CHAINED STATEFUL OPERATORS through the real engine (r8) — two
+    * windowed aggregations in ONE streaming query (15-min tumble per
+    * event type → 1-hour roll-up over the sub-window column via
+    * `window(window, …)`, SPARK-40925), the multi-stateful pipeline
+    * Spark 3.4+ unlocked and the shape every streaming medallion
+    * (bronze→silver→gold) job takes at scale: the second aggregate's
+    * input is 96×types rows/day regardless of event volume, so the
+    * downstream state and shuffle are corpus-size-independent.
+    *
+    * Determinism: ONE AvailableNow data batch (watermark 0 — nothing
+    * is late at either stage), then the closing no-data batch advances
+    * the watermark to global-max (ms-truncated) − 30 min and BOTH
+    * stages cascade within that batch: stage 1 appends every sub-window
+    * with end ≤ wm, stage 2 folds them and appends every hour window
+    * with end ≤ wm — and an emitted hour's sub-windows all have
+    * end ≤ hour_end ≤ wm, so emitted hours are provably COMPLETE
+    * (n_subwin counts the non-empty quarter-hours as proof). The oracle
+    * replays the roll-up plus the inclusive end ≤ wm rule
+    * (late_data_exec's boundary convention). */
+  val streamChainAggExec: QFn = (s, dir) =>
+    streamed(s, "chain_agg", "append")(
+      sourceEvents(s, dir)
+        .withWatermark("ts", "30 minutes")
+        .groupBy(window(col("ts"), "15 minutes"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .groupBy(window(col("window"), "1 hour"), col("event_type"))
+        .agg(sum(col("n")).as("n_events"),
+          count(lit(1)).as("n_subwin"))
+        .select(unix_timestamp(col("window.start")).as("hour_ts"),
+          col("event_type"), col("n_events"), col("n_subwin")))
+      .orderBy(col("hour_ts"), col("event_type"))
+
+  /** CHECKPOINT RESTART / EXACTLY-ONCE RESUME through the real engine
+    * (r9) — the operational property every other streaming key takes on
+    * faith by using a fresh checkpoint: a stateful query STOPPED and
+    * RESTARTED against the same checkpoint must resume from committed
+    * offsets with restored state. Protocol: stage half the events
+    * (deterministic md5-ntile split, the replay keys' convention), run an
+    * hourly-count Complete aggregation to termination; stage the second
+    * half; START A NEW QUERY on the SAME checkpoint. The engine must
+    * (a) NOT reprocess file 1 — offsets are committed, a replay would
+    * double every file-1 count — and (b) restore the file-1 aggregate
+    * state from the store — a loss would emit file-2-only counts. The
+    * converged output hash-matches the batch aggregate over ALL events
+    * only if both halves of the exactly-once contract hold. At 100 TB
+    * this is THE property that makes streaming jobs re-deployable;
+    * state round-trips through the store across a JVM-level query
+    * boundary (and RocksDbStateSpec re-proves it on RocksDB). */
+  val streamRestartExec: QFn = (s, dir) => {
+    val run = runDir("restart")
+    val box = new java.io.File(run, "inbox")
+    def counts = s.readStream
+      .schema(s.read.parquet(box.getAbsolutePath).schema)
+      .parquet(box.getAbsolutePath)
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+      .select(unix_timestamp(col("window.start")).as("bucket_ts"),
+        col("event_type"), col("n"))
+    // batch 1 landed: first deployment, state built; batch 2 landed:
+    // restart, which must resume offsets and restore state
+    stage(s, dir, box, 2, 1 to 2) { _ =>
+      runStream(s, "restart", "complete", 8)(counts, run)
     }
-    box.getAbsolutePath
+    s.read.parquet(new java.io.File(run, "out").getAbsolutePath)
+      .orderBy(col("bucket_ts"), col("event_type"))
   }
 
   /** Watermark LATE-DROP through the real engine — graduating §2.9's
@@ -879,136 +797,16 @@ object StreamQ {
     * alone advances the watermark near the global max), so a wrong drop
     * rule cannot hash-match. Output projects (bucket_ts, event_type, n,
     * sum_value) — a set, so engine arrival order can't reach the hash. */
-  /** CHAINED STATEFUL OPERATORS through the real engine (r8) — two
-    * windowed aggregations in ONE streaming query (15-min tumble per
-    * event type → 1-hour roll-up over the sub-window column via
-    * `window(window, …)`, SPARK-40925), the multi-stateful pipeline
-    * Spark 3.4+ unlocked and the shape every streaming medallion
-    * (bronze→silver→gold) job takes at scale: the second aggregate's
-    * input is 96×types rows/day regardless of event volume, so the
-    * downstream state and shuffle are corpus-size-independent.
-    *
-    * Determinism: ONE AvailableNow data batch (watermark 0 — nothing
-    * is late at either stage), then the closing no-data batch advances
-    * the watermark to global-max (ms-truncated) − 30 min and BOTH
-    * stages cascade within that batch: stage 1 appends every sub-window
-    * with end ≤ wm, stage 2 folds them and appends every hour window
-    * with end ≤ wm — and an emitted hour's sub-windows all have
-    * end ≤ hour_end ≤ wm, so emitted hours are provably COMPLETE
-    * (n_subwin counts the non-empty quarter-hours as proof). The oracle
-    * replays the roll-up plus the inclusive end ≤ wm rule
-    * (late_data_exec's boundary convention). */
-  val streamChainAggExec: QFn = (s, dir) => {
-    val run = "chain_agg/" + java.util.UUID.randomUUID().toString.take(8)
-    val out = new java.io.File(core.scratchRoot, s"$run/out").getAbsolutePath
-    withStreamPartitions(s, 4) {
-      val q = sourceEvents(s, dir)
-        .withWatermark("ts", "30 minutes")
-        .groupBy(window(col("ts"), "15 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .groupBy(window(col("window"), "1 hour"), col("event_type"))
-        .agg(sum(col("n")).as("n_events"),
-          count(lit(1)).as("n_subwin"))
-        .select(unix_timestamp(col("window.start")).as("hour_ts"),
-          col("event_type"), col("n_events"), col("n_subwin"))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation",
-          new java.io.File(core.scratchRoot, s"$run/ckpt").getAbsolutePath)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(out).orderBy(col("hour_ts"), col("event_type"))
-  }
-
-  /** CHECKPOINT RESTART / EXACTLY-ONCE RESUME through the real engine
-    * (r9) — the operational property every other streaming key takes on
-    * faith by using a fresh checkpoint: a stateful query STOPPED and
-    * RESTARTED against the same checkpoint must resume from committed
-    * offsets with restored state. Protocol: stage half the events
-    * (deterministic md5-ntile split, the lateInbox convention), run an
-    * hourly-count Complete aggregation to termination; stage the second
-    * half; START A NEW QUERY on the SAME checkpoint. The engine must
-    * (a) NOT reprocess file 1 — offsets are committed, a replay would
-    * double every file-1 count — and (b) restore the file-1 aggregate
-    * state from the store — a loss would emit file-2-only counts. The
-    * converged output hash-matches the batch aggregate over ALL events
-    * only if both halves of the exactly-once contract hold. At 100 TB
-    * this is THE property that makes streaming jobs re-deployable;
-    * state round-trips through the store across a JVM-level query
-    * boundary (and RocksDbStateSpec re-proves it on RocksDB). */
-  val streamRestartExec: QFn = (s, dir) => {
-    val run = "restart/" + java.util.UUID.randomUUID().toString.take(8)
-    val box = new java.io.File(core.scratchRoot, s"$run/inbox")
-    box.mkdirs()
-    val out = new java.io.File(core.scratchRoot, s"$run/out").getAbsolutePath
-    val ckpt = new java.io.File(core.scratchRoot, s"$run/ckpt").getAbsolutePath
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(md5(col("event_id").cast("string")), col("event_id"))
-    val batched = t(s, dir, "events")
-      .withColumn("b", ntile(2).over(w)).ckpt()
-    def stage(i: Int): Unit = {
-      val tmp = new java.io.File(box, s"_tmp$i")
-      batched.filter(col("b") === i).drop("b")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
-      val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
-      val dest = new java.io.File(box, f"batch-$i%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dest.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      dest.setLastModified(1700000000000L + i * 60000L)
-      tmp.listFiles().foreach(_.delete()); tmp.delete()
-    }
-    def runOnce(): Unit = withStreamPartitions(s) {
-      val schema = s.read.parquet(box.getAbsolutePath).schema
-      val q = s.readStream.schema(schema).parquet(box.getAbsolutePath)
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(unix_timestamp(col("window.start")).as("bucket_ts"),
-          col("event_type"), col("n"))
-        .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          b.write.mode("overwrite").parquet(out); ()
-        }
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    try {
-      stage(1); runOnce() // first deployment: half the data, state built
-      stage(2); runOnce() // restart: must resume offsets + restore state
-    } finally batched.unpersist()
-    s.read.parquet(out).orderBy(col("bucket_ts"), col("event_type"))
-  }
-
-  val lateDataExec: QFn = (s, dir) => {
-    val box = lateInbox(s, dir)
-    val run = "late_data/" + java.util.UUID.randomUUID().toString.take(8)
-    val out = new java.io.File(core.scratchRoot, s"$run/out").getAbsolutePath
-    val schema = s.read.parquet(box).schema
-    withStreamPartitions(s, 4) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(box)
+  val lateDataExec: QFn = (s, dir) =>
+    streamed(s, "late_data", "append")(
+      replay(s, dir)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           dbl(sum(dec(col("value"), 14, 4))).as("sum_value"))
         .select(unix_timestamp(col("window.start")).as("bucket_ts"),
-          col("event_type"), col("n"), col("sum_value"))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation",
-          new java.io.File(core.scratchRoot, s"$run/ckpt").getAbsolutePath)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(out).orderBy(col("bucket_ts"), col("event_type"))
-  }
+          col("event_type"), col("n"), col("sum_value")))
+      .orderBy(col("bucket_ts"), col("event_type"))
 
   /** BOUNDED-STATE streaming dedup through the real engine:
     * `dropDuplicatesWithinWatermark` — unlike plain streaming
@@ -1029,32 +827,16 @@ object StreamQ {
     * replays: one row per key whose FIRST-arrival batch beat the
     * watermark in force at that batch. Output projects only the key — a
     * set, arrival order can't reach the hash. */
-  val streamDedupWmExec: QFn = (s, dir) => {
-    val box = lateInbox(s, dir)
-    val run = "dedup_wm/" + java.util.UUID.randomUUID().toString.take(8)
-    val out = new java.io.File(core.scratchRoot, s"$run/out").getAbsolutePath
-    val schema = s.read.parquet(box).schema
-    withStreamPartitions(s, 4) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(box)
+  val streamDedupWmExec: QFn = (s, dir) =>
+    streamed(s, "dedup_wm", "append")(
+      replay(s, dir)
         .withColumn("bucket", date_trunc("hour", col("ts")))
         .select(col("user_id"), col("event_type"), col("bucket"))
         .withWatermark("bucket", "1 day")
         .dropDuplicatesWithinWatermark("user_id", "event_type", "bucket")
         .select(col("user_id"), col("event_type"),
-          unix_timestamp(col("bucket")).as("bucket_ts"))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation",
-          new java.io.File(core.scratchRoot, s"$run/ckpt").getAbsolutePath)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(out)
+          unix_timestamp(col("bucket")).as("bucket_ts")))
       .orderBy(col("user_id"), col("event_type"), col("bucket_ts"))
-  }
 
   /** ARBITRARY stateful processing through the real engine:
     * `flatMapGroupsWithState` (the API family `transformWithState`
@@ -1070,15 +852,10 @@ object StreamQ {
     * appearance, so arrival order within a batch cannot reach the hash.
     * Oracle: per-user running count over the replayed batch assignment. */
   val streamStateExec: QFn = (s, dir) => {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val box = lateInbox(s, dir)
-    val run = "state_exec/" + java.util.UUID.randomUUID().toString.take(8)
-    val out = new java.io.File(core.scratchRoot, s"$run/out").getAbsolutePath
-    val schema = s.read.parquet(box).schema
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import s.implicits._
-    withStreamPartitions(s, 4) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(box)
+    streamed(s, "state_exec", "append")(
+      replay(s, dir)
         .select(col("user_id")).as[Long]
         .groupByKey(identity)
         .flatMapGroupsWithState[Long, (Long, Long)](
@@ -1088,17 +865,8 @@ object StreamQ {
             state.update(total)
             Iterator((uid, total))
         }
-        .toDF("user_id", "cum_events")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation",
-          new java.io.File(core.scratchRoot, s"$run/ckpt").getAbsolutePath)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(out).orderBy(col("user_id"), col("cum_events"))
+        .toDF("user_id", "cum_events"))
+      .orderBy(col("user_id"), col("cum_events"))
   }
 
   /** Spark-4 `transformWithState` through the real engine as a GRADED
@@ -1119,31 +887,17 @@ object StreamQ {
     * physical layer in the contract path; the conf is pinned per-run and
     * restored. */
   val streamTwsExec: QFn = (s, dir) => {
-    val box = lateInbox(s, dir)
-    val run = "tws_exec/" + java.util.UUID.randomUUID().toString.take(8)
-    val out = new java.io.File(core.scratchRoot, s"$run/out").getAbsolutePath
-    val schema = s.read.parquet(box).schema
     import s.implicits._
-    withRocksDb(s) { withStreamPartitions(s, 4) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(box)
+    streamed(s, "tws_exec", "append", rocksDb = true)(
+      replay(s, dir)
         .select(col("user_id"),
           (dec(col("value"), 14, 4) * 10000).cast("long").as("v"))
         .as[(Long, Long)]
         .groupByKey(_._1)
         .transformWithState(new CumTotalsProcessor,
           TimeMode.None(), OutputMode.Append())
-        .toDF("user_id", "cum_events", "cum_scaled")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation",
-          new java.io.File(core.scratchRoot, s"$run/ckpt").getAbsolutePath)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } }
-    s.read.parquet(out).orderBy(col("user_id"), col("cum_events"))
+        .toDF("user_id", "cum_events", "cum_scaled"))
+      .orderBy(col("user_id"), col("cum_events"))
   }
 
   /** CDC APPLY through the real engine (r9) — the streaming twin of the
@@ -1161,31 +915,17 @@ object StreamQ {
     * counter strictly increasing → a set. Same staged 5-batch replay as
     * the other state keys; RocksDB pinned per-run. */
   val streamCdcExec: QFn = (s, dir) => {
-    val box = lateInbox(s, dir)
-    val run = "cdc_exec/" + java.util.UUID.randomUUID().toString.take(8)
-    val out = new java.io.File(core.scratchRoot, s"$run/out").getAbsolutePath
-    val schema = s.read.parquet(box).schema
     import s.implicits._
-    withRocksDb(s) { withStreamPartitions(s, 4) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(box)
+    streamed(s, "cdc_exec", "append", rocksDb = true)(
+      replay(s, dir)
         .select(col("user_id"), col("event_type"), col("ts_us"),
           col("event_id"))
         .as[(Long, String, Long, Long)]
         .groupByKey(_._1)
         .transformWithState(new CdcFoldProcessor,
           TimeMode.None(), OutputMode.Append())
-        .toDF("user_id", "n_ops", "alive", "last_ts_us")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation",
-          new java.io.File(core.scratchRoot, s"$run/ckpt").getAbsolutePath)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } }
-    s.read.parquet(out).orderBy(col("user_id"), col("n_ops"))
+        .toDF("user_id", "n_ops", "alive", "last_ts_us"))
+      .orderBy(col("user_id"), col("n_ops"))
   }
 
   /** EVENT-TIME TIMERS through the real engine as a graded key — the
@@ -1201,63 +941,17 @@ object StreamQ {
     * — the oracle encodes the calibrated micro-batch timer protocol.
     * Requires RocksDB (transformWithState), pinned per-run. */
   val streamTimerExec: QFn = (s, dir) => {
-    val box = lateInbox(s, dir)
-    val run = "timer_exec/" + java.util.UUID.randomUUID().toString.take(8)
-    val out = new java.io.File(core.scratchRoot, s"$run/out").getAbsolutePath
-    val schema = s.read.parquet(box).schema
     import s.implicits._
-    withRocksDb(s) { withStreamPartitions(s, 4) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(box)
+    streamed(s, "timer_exec", "append", rocksDb = true)(
+      replay(s, dir)
         .withWatermark("ts", "1 hour")
         .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"))
         .as[(Long, Long)]
         .groupByKey(_._1)
         .transformWithState(new TimerSessionProcessor,
           TimeMode.EventTime(), OutputMode.Append())
-        .toDF("user_id", "n_events", "expiry_ms")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation",
-          new java.io.File(core.scratchRoot, s"$run/ckpt").getAbsolutePath)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } }
-    s.read.parquet(out)
+        .toDF("user_id", "n_events", "expiry_ms"))
       .orderBy(col("user_id"), col("expiry_ms"), col("n_events"))
-  }
-
-  /** Stage ONLY batches 3-5 of the deterministic ntile split (same
-    * expression as lateInbox — the two stagings agree on membership) —
-    * the STREAM side of the batch→stream handoff; batches 1-2 are the
-    * batch side, aggregated as the initial state. */
-  private def initInbox(s: SparkSession, dir: String): String = synchronized {
-    val box = new java.io.File(scratch(dir, "init_inbox"))
-    val done = new java.io.File(box, "_staged")
-    if (!done.exists()) {
-      box.mkdirs()
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(md5(col("event_id").cast("string")), col("event_id"))
-      val batched = t(s, dir, "events")
-        .withColumn("b", ntile(5).over(w)).ckpt()
-      try {
-        for (i <- 3 to 5) {
-          val tmp = new java.io.File(box, s"_tmp$i")
-          batched.filter(col("b") === i).drop("b")
-            .coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
-          val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
-          val dest = new java.io.File(box, f"batch-$i%02d.parquet")
-          java.nio.file.Files.move(part.toPath, dest.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          dest.setLastModified(1700000000000L + i * 60000L)
-          tmp.listFiles().foreach(_.delete()); tmp.delete()
-        }
-        java.nio.file.Files.createFile(done.toPath)
-      } finally batched.unpersist()
-    }
-    box.getAbsolutePath
   }
 
   /** BATCH-SEEDED INITIAL STATE through the real engine as a graded key
@@ -1265,22 +959,15 @@ object StreamQ {
     * handoff (a batch job's final per-user totals seed the stream's
     * state, the stream continues WITHOUT replaying history). Batches 1-2
     * of the deterministic split are aggregated in batch as the seed;
-    * batches 3-5 replay as the stream; every emission carries the
-    * seed-included cumulative (count, exact scaled sum), so a lost or
-    * double-applied seed cannot hash-match. Completes the
-    * transformWithState surface: ValueState (tws), timers (timer),
+    * batches 3-5 replay as the stream (staged into their own inbox); every
+    * emission carries the seed-included cumulative (count, exact scaled
+    * sum), so a lost or double-applied seed cannot hash-match. Completes
+    * the transformWithState surface: ValueState (tws), timers (timer),
     * ListState/MapState (list_state), initial state (here). RocksDB
     * pinned as the API requires. */
   val streamInitStateExec: QFn = (s, dir) => {
-    val box = initInbox(s, dir)
-    val run = "init_state/" + java.util.UUID.randomUUID().toString.take(8)
-    val out = new java.io.File(core.scratchRoot, s"$run/out").getAbsolutePath
-    val schema = s.read.parquet(box).schema
     import s.implicits._
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(md5(col("event_id").cast("string")), col("event_id"))
-    val seed = t(s, dir, "events")
-      .withColumn("b", ntile(5).over(w))
+    val seed = batchSplit(s, dir, 5)
       .filter(col("b") <= 2)
       .select(col("user_id"),
         (dec(col("value"), 14, 4) * 10000).cast("long").as("v"))
@@ -1289,26 +976,16 @@ object StreamQ {
       .as[(Long, Long, Long)]
       .groupByKey(_._1)
       .mapValues(t => (t._2, t._3))
-    withRocksDb(s) { withStreamPartitions(s, 4) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(box)
+    streamed(s, "init_state", "append", rocksDb = true)(
+      replay(s, dir, "init_inbox", 3 to 5)
         .select(col("user_id"),
           (dec(col("value"), 14, 4) * 10000).cast("long").as("v"))
         .as[(Long, Long)]
         .groupByKey(_._1)
         .transformWithState(new CumTotalsWithInitProcessor,
           TimeMode.None(), OutputMode.Append(), seed)
-        .toDF("user_id", "cum_events", "cum_scaled")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation",
-          new java.io.File(core.scratchRoot, s"$run/ckpt").getAbsolutePath)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } }
-    s.read.parquet(out).orderBy(col("user_id"), col("cum_events"))
+        .toDF("user_id", "cum_events", "cum_scaled"))
+      .orderBy(col("user_id"), col("cum_events"))
   }
 
   /** DSv2 STREAMING WRITE through the real engine as a graded key — the
@@ -1322,23 +999,10 @@ object StreamQ {
     * (event_id, user_id, event_type) — unique event_id makes the result
     * a set, so arrival order can't reach the hash. */
   val v2StreamSinkRoundtrip: QFn = (s, dir) => {
-    val box = lateInbox(s, dir)
-    val run = "v2_stream_sink/" + java.util.UUID.randomUUID().toString.take(8)
-    val out = new java.io.File(core.scratchRoot, s"$run/out").getAbsolutePath
-    val schema = s.read.parquet(box).schema
-    withStreamPartitions(s, 4) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(box)
-        .select(col("event_id"), col("user_id"), col("event_type"))
-        .writeStream.format("graft.sources.AuditSink")
-        .option("path", out)
-        .option("checkpointLocation",
-          new java.io.File(core.scratchRoot, s"$run/ckpt").getAbsolutePath)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    val (out, _) = runStream(s, "v2_stream_sink", "append",
+      format = "graft.sources.AuditSink")(
+      replay(s, dir)
+        .select(col("event_id"), col("user_id"), col("event_type")))
     // Manifest-driven read: each epoch's commit marker lists its parts,
     // so the read provably consumes only committed epochs (vs a glob,
     // which would also pick up parts of an epoch that never committed).
@@ -1359,31 +1023,17 @@ object StreamQ {
     * (stream_tws_exec), timers (stream_timer_exec), ListState + MapState
     * (here). */
   val streamListStateExec: QFn = (s, dir) => {
-    val box = lateInbox(s, dir)
-    val run = "list_state/" + java.util.UUID.randomUUID().toString.take(8)
-    val out = new java.io.File(core.scratchRoot, s"$run/out").getAbsolutePath
-    val schema = s.read.parquet(box).schema
     import s.implicits._
-    withRocksDb(s) { withStreamPartitions(s, 4) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(box)
+    streamed(s, "list_state", "append", rocksDb = true)(
+      replay(s, dir)
         .select(col("user_id"), col("event_type"),
           (dec(col("value"), 14, 4) * 10000).cast("long").as("v"))
         .as[(Long, String, Long)]
         .groupByKey(_._1)
         .transformWithState(new ListMapAuditProcessor,
           TimeMode.None(), OutputMode.Append())
-        .toDF("user_id", "cum_events", "cum_scaled", "n_types")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation",
-          new java.io.File(core.scratchRoot, s"$run/ckpt").getAbsolutePath)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } }
-    s.read.parquet(out).orderBy(col("user_id"), col("cum_events"))
+        .toDF("user_id", "cum_events", "cum_scaled", "n_types"))
+      .orderBy(col("user_id"), col("cum_events"))
   }
 
   /** DSv2 MICRO-BATCH READ through the real engine as a graded key —
@@ -1399,14 +1049,13 @@ object StreamQ {
     * is batch-assignment-invariant), which is what lets a synthetic
     * stream carry a closed-form DuckDB oracle (range()). */
   val rangeStreamExec: QFn = (s, _) =>
-    runComplete(s,
+    streamed(s, "range_stream", "complete", 8)(
       s.readStream.format("graft.sources.RangeSource")
         .option("rows", 20000).option("rowsPerBatch", 4096)
         .option("partitions", 8).load()
         .groupBy((col("id") % 16).as("bucket"))
         .agg(count(lit(1)).as("n"), sum(col("sq")).as("sum_sq"),
-          max(col("id")).as("max_id")),
-      "range_stream")
+          max(col("id")).as("max_id")))
       .orderBy(col("bucket"))
 
   /** MULTI-INPUT WATERMARK COORDINATION through the real engine (r9) —
@@ -1427,31 +1076,20 @@ object StreamQ {
     * region's delay governs emission, which is exactly what the min
     * rule grades. */
   val streamUnionWmExec: QFn = (s, dir) => {
-    val run = "union_wm/" + java.util.UUID.randomUUID().toString.take(8)
-    val out = new java.io.File(core.scratchRoot, s"$run/out").getAbsolutePath
-    withStreamPartitions(s, 4) {
-      val fast = sourceEvents(s, dir)
-        .filter(col("event_type").isin("click", "view"))
-        .withWatermark("ts", "30 minutes")
-      val slow = sourceEvents(s, dir)
-        .filter(!col("event_type").isin("click", "view"))
-        .withWatermark("ts", "2 hours")
-      val q = fast.unionAll(slow)
+    val fast = sourceEvents(s, dir)
+      .filter(col("event_type").isin("click", "view"))
+      .withWatermark("ts", "30 minutes")
+    val slow = sourceEvents(s, dir)
+      .filter(!col("event_type").isin("click", "view"))
+      .withWatermark("ts", "2 hours")
+    streamed(s, "union_wm", "append")(
+      fast.unionAll(slow)
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           dbl(sum(dec(col("value"), 14, 4))).as("sum_value"))
         .select(unix_timestamp(col("window.start")).as("bucket_ts"),
-          col("event_type"), col("n"), col("sum_value"))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation",
-          new java.io.File(core.scratchRoot, s"$run/ckpt").getAbsolutePath)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(out).orderBy(col("bucket_ts"), col("event_type"))
+          col("event_type"), col("n"), col("sum_value")))
+      .orderBy(col("bucket_ts"), col("event_type"))
   }
 
   /** STREAM-STATIC JOIN through the real engine (r9) — the remaining
@@ -1471,15 +1109,14 @@ object StreamQ {
   val streamStaticJoinExec: QFn = (s, dir) => {
     val dim = t(s, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
-    runComplete(s,
+    streamed(s, "stream_static_join", "complete", 8)(
       sourceEvents(s, dir)
         .join(broadcast(dim), col("user_id") === col("c_custkey"))
         .groupBy(window(col("ts"), "1 hour"), col("c_mktsegment"))
         .agg(count(lit(1)).as("n"),
           dbl(sum(dec(col("value"), 14, 4))).as("sum_value"))
         .select(unix_timestamp(col("window.start")).as("bucket_ts"),
-          col("c_mktsegment"), col("n"), col("sum_value")),
-      "stream_static_join")
+          col("c_mktsegment"), col("n"), col("sum_value")))
       .orderBy(col("bucket_ts"), col("c_mktsegment"))
   }
 
@@ -1503,30 +1140,15 @@ object StreamQ {
     * — O(#batches) driver data, the monitoring-integration read path.
     * The oracle replays all three rules relationally. */
   val streamDropAuditExec: QFn = (s, dir) => {
-    val box = lateInbox(s, dir)
-    val run = "drop_audit/" + java.util.UUID.randomUUID().toString.take(8)
-    val out = new java.io.File(core.scratchRoot, s"$run/out").getAbsolutePath
-    val schema = s.read.parquet(box).schema
-    val prog = withStreamPartitions(s, 4) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(box)
+    val (_, q) = runStream(s, "drop_audit", "append")(
+      replay(s, dir)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(unix_timestamp(col("window.start")).as("bucket_ts"),
-          col("event_type"), col("n"))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation",
-          new java.io.File(core.scratchRoot, s"$run/ckpt").getAbsolutePath)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress
-    }
+          col("event_type"), col("n")))
     import s.implicits._
-    prog.toSeq.zipWithIndex.map { case (p, i) =>
+    q.recentProgress.toSeq.zipWithIndex.map { case (p, i) =>
       val dropped = p.stateOperators.map(_.numRowsDroppedByWatermark).sum
       val emitted = p.stateOperators.map(_.numRowsRemoved).sum
       val held = p.stateOperators.map(_.numRowsTotal).sum

@@ -880,7 +880,7 @@ object TextQ {
     * every consumer key reuses the checkpointed result — the operational
     * shape of a real tokenizer, which is trained once and then applied by
     * every downstream job, and the same per-JVM staging amortization
-    * lateInbox / bucketed_join already use. */
+    * StreamQ.stage / bucketed_join already use. */
   private def bpeApplied(s: SparkSession, dir: String): DataFrame =
     bpeSegCache.getOrElseUpdate((graft.Tables.sessionKey(s), dir),
       bpeAppliedBuild(s, dir))

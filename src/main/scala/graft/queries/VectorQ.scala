@@ -431,7 +431,7 @@ object VectorQ {
     * centroids, r6-rounded; nearest-cell assignment with (fdist, label)
     * ties) but trained on history only — exactly what an index built
     * yesterday knows. Idempotent re-entry via the `_built` marker (the
-    * lateInbox staging pattern). */
+    * StreamQ.stage pattern). */
   private def annIndexDir(s: SparkSession, dir: String): String =
     synchronized {
       // All paths through the Hadoop FileSystem of the registry root's

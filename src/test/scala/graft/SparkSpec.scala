@@ -5,22 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM, one SparkSession). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // Same targeted silencing as the graded mains (r16, verdict #6
-    // minor): the known-benign per-operator WARNs (WindowExec's
-    // bounded-domain notice, streaming replay chatter) otherwise fill
-    // the driver's bounded test-log tail — r15's tests_ok=false tail
-    // was 100% WindowExec warnings, burying any actual signal. A
-    // genuinely new warning from any other logger still surfaces.
-    Logs.quietNoisy()
-    s
-  }
+  lazy val spark: SparkSession = Session.build(4)
   val sf: String = "/root/testdata/sf0.001"
 
   /** Set session confs for the duration of `body`, then restore each to

@@ -343,4 +343,56 @@ class StreamingSpec extends SparkSpec {
       assert(spark.conf.getOption(absent).isEmpty)
     }
   }
+
+  test("a failing StreamQ run rethrows and leaves no session conf behind") {
+    val keys = Seq("spark.sql.shuffle.partitions", ckptManagerKey,
+      "spark.sql.artifact.isolation.enabled",
+      "spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+    def confs = keys.map(k => k -> spark.conf.getOption(k))
+    val before = confs
+    val fail = udf { (id: Long) =>
+      if (id >= 0) throw new IllegalStateException("row failed"); id }
+    val plan = spark.readStream.format("graft.sources.RangeSource")
+      .option("rows", 100).option("rowsPerBatch", 100)
+      .option("partitions", 1).load()
+      .select(fail(col("id")).as("id"))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      graft.queries.StreamQ.runStream(spark, "failing_run", "append",
+        rocksDb = true)(plan)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("row failed")))
+    assert(confs == before)
+    // the in-flight guard of the run's partition scope was released
+    assert(graft.queries.core.withShuffleParts(spark, 2)(
+      spark.conf.get("spark.sql.shuffle.partitions")) == "2")
+  }
+
+  test("replay staging restages cleanly over an interrupted staging") {
+    val box = new java.io.File(graft.queries.core.scratch(sf, "late_inbox"))
+    org.apache.commons.io.FileUtils.deleteDirectory(box)
+    // debris of a staging cut off mid-loop: no _staged marker, a leftover
+    // tmp dir and a truncated batch file
+    new java.io.File(box, "_tmp3").mkdirs()
+    java.nio.file.Files.write(
+      new java.io.File(box, "_tmp3/part-00000.parquet").toPath, Array[Byte](1))
+    java.nio.file.Files.write(
+      new java.io.File(box, "batch-02.parquet").toPath, "PAR1".getBytes)
+    val rows = graft.queries.StreamQ.queries("late_data_exec")(spark, sf)
+      .collect()
+    val batches = box.listFiles().filter(_.getName.startsWith("batch-"))
+      .sortBy(_.getName).toSeq
+    assert(batches.map(_.getName) ==
+      (1 to 5).map(i => f"batch-$i%02d.parquet"))
+    for ((b, i) <- batches.zip(1 to 5))
+      assert(b.lastModified == 1700000000000L + i * 60000L, b.getName)
+    assert(spark.read.parquet(batches.map(_.getAbsolutePath): _*).count() ==
+      Tables(spark, sf, "events").count())
+    val src = scala.io.Source.fromInputStream(
+      getClass.getResourceAsStream("/golden_sf0.001.tsv"), "UTF-8")
+    val Array(_, n, h) = try src.getLines().map(_.split("\t"))
+      .find(_(0) == "late_data_exec").get finally src.close()
+    assert(rows.length == n.toInt && GoldenGen.digest(rows) == h)
+  }
 }

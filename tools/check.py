@@ -6,6 +6,11 @@ runs each SQL in DuckDB against the raw parquet tables, and compares with the
 parquet Verify wrote — column names sorted, exact value equality (floats
 bitwise, which is the bar the decimal-aggregation convention is designed to
 clear). Usage:  python3 tools/check.py <sfDir> <verifyOutDir>
+
+With --against, compares two Verify outputs key by key instead of running
+the oracle (the check for a change that must keep every output fixed; in
+its messages "oracle" is the other dump):
+    python3 tools/check.py --against <otherVerifyDir> <verifyOutDir>
 """
 import sys, json, glob
 import duckdb
@@ -55,6 +60,51 @@ def col_equal(a: pd.Series, b: pd.Series) -> tuple[bool, str]:
                   f"spark={a.iloc[i]!r} oracle={b.iloc[i]!r}"
 
 
+def read_out(outdir: str, name: str):
+    files = sorted(glob.glob(f"{outdir}/{name}/*.parquet"))
+    if not files:
+        return None
+    return pd.concat([pd.read_parquet(f) for f in files], ignore_index=True)
+
+
+def diff(got: pd.DataFrame, exp: pd.DataFrame) -> str:
+    """Empty if equal: same sorted columns, rows, and values (floats
+    bitwise); otherwise what differs."""
+    g, e = canon(got), canon(exp)
+    if list(g.columns) != list(e.columns):
+        return f"columns spark={list(g.columns)} oracle={list(e.columns)}"
+    if len(g) != len(e):
+        return f"rows spark={len(g)} oracle={len(e)}"
+    bad = []
+    for c in g.columns:
+        ok, msg = col_equal(g[c], e[c])
+        if not ok:
+            bad.append(f"{c}: {msg}")
+    return "; ".join(bad)
+
+
+def against(other: str, outdir: str) -> int:
+    keys = {p.split("/")[-2] for d in (other, outdir)
+            for p in glob.glob(f"{d}/*/*.parquet")}
+    n_pass = n_fail = 0
+    for name in sorted(keys):
+        got, exp = read_out(outdir, name), read_out(other, name)
+        if got is None or exp is None:
+            side = outdir if got is None else other
+            print(f"FAIL {name}: no output at {side}/{name}")
+            n_fail += 1
+            continue
+        bad = diff(got, exp)
+        if bad:
+            print(f"FAIL {name}: {bad}")
+            n_fail += 1
+        else:
+            print(f"PASS {name} ({len(got)} rows identical)")
+            n_pass += 1
+    print(f"== {n_pass} pass, {n_fail} fail ==")
+    return 1 if n_fail else 0
+
+
 def main(sfdir: str, outdir: str) -> int:
     con = duckdb.connect()
     # Echo the oracle-client version into the output: r5's hash fails were
@@ -89,38 +139,23 @@ def main(sfdir: str, outdir: str) -> int:
             print(f"FAIL {name}: oracle SQL error: {exc}")
             n_fail += 1
             continue
-        files = sorted(glob.glob(f"{outdir}/{name}/*.parquet"))
-        if not files:
+        got = read_out(outdir, name)
+        if got is None:
             print(f"FAIL {name}: no spark output at {outdir}/{name}")
             n_fail += 1
             continue
-        got = pd.concat([pd.read_parquet(f) for f in files],
-                        ignore_index=True)
-        g, e = canon(got), canon(exp)
-        if list(g.columns) != list(e.columns):
-            print(f"FAIL {name}: columns spark={list(g.columns)} "
-                  f"oracle={list(e.columns)}")
-            n_fail += 1
-            continue
-        if len(g) != len(e):
-            print(f"FAIL {name}: rows spark={len(g)} oracle={len(e)}")
-            n_fail += 1
-            continue
-        bad = []
-        for c in g.columns:
-            ok, msg = col_equal(g[c], e[c])
-            if not ok:
-                bad.append(f"{c}: {msg}")
+        bad = diff(got, exp)
         if bad:
-            print(f"FAIL {name}: " + "; ".join(bad))
+            print(f"FAIL {name}: {bad}")
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(g)} rows)")
+            print(f"PASS {name} ({len(got)} rows)")
             n_pass += 1
-    missing = set()  # queries with no oracle are weaker rows-only checks
     print(f"== {n_pass} pass, {n_fail} fail ==")
     return 1 if n_fail else 0
 
 
 if __name__ == "__main__":
+    if sys.argv[1] == "--against":
+        sys.exit(against(sys.argv[2], sys.argv[3]))
     sys.exit(main(sys.argv[1], sys.argv[2]))
