@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import graft.queries.core.CkptOps
+import graft.queries.core.ckptObserved
 import org.apache.spark.sql.functions.{coalesce, col, count, least, lit, min, sum}
 
 /** Distributed connected components: min-label propagation accelerated by
@@ -50,19 +50,12 @@ object ConnectedComponents {
       .filter(col("src") =!= col("dst"))
       .persist()
     // Init folds the first propagation round in: lbl = min(self, nbrs).
-    // One job per round: the label-sum convergence metric is an `observe`
-    // node inside the plan the eager checkpoint materializes, so the
-    // checkpoint action delivers both the cut lineage AND the sum.
-    var ccRound = 0
+    // One job per round: the label sum and row count are observed by the
+    // job that materializes the checkpoint (core.ckptObserved).
     def checkpointWithSum(df: DataFrame): (DataFrame, Long) = {
-      ccRound += 1
-      val obs = org.apache.spark.sql.Observation(s"cc_op_lblsum_r$ccRound")
-      val ck = df.observe(obs,
-          coalesce(sum(col("lbl")), lit(0L)).as("s"),
-          count(lit(1)).as("n"))
-        .ckpt()
-      val m = obs.get
-      (ck, m("s").asInstanceOf[Long] * 1000003L + m("n").asInstanceOf[Long])
+      val (ck, Seq(s, n)) =
+        ckptObserved(df, coalesce(sum(col("lbl")), lit(0L)), count(lit(1)))
+      (ck, s * 1000003L + n)
     }
     var (labels, curSum) = checkpointWithSum(
       adj.groupBy(col("src")).agg(min(col("dst")).as("mn"))

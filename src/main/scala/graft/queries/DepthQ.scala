@@ -378,37 +378,29 @@ object DepthQ {
       .select(col("uid_a").as("src"), col("uid_b").as("dst"))
       .ckpt()
     // min-label propagation over core edges; isolated cores self-seed
-    def ckSum(df: org.apache.spark.sql.DataFrame, round: Int)
-        : (org.apache.spark.sql.DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation(s"dbscan_lbl_r$round")
-      val ck = df.observe(obs, coalesce(sum(col("lbl")), lit(0L)).as("s"))
-        .ckpt()
-      (ck, obs.get("s").asInstanceOf[Long])
-    }
-    var (labels, prevSum) = ckSum(
+    val lblSum = coalesce(sum(col("lbl")), lit(0L))
+    var (labels, Seq(prevSum)) = ckptObserved(
       core.join(coreEdges.groupBy(col("src")).agg(min(col("dst")).as("mn")),
           col("id") === col("src"), "left")
         .select(col("id"),
           least(col("id"), coalesce(col("mn"), col("id"))).as("lbl")),
-      0)
+      lblSum)
     var converged = false
-    var round = 1
     while (!converged) {
       val nb2 = coreEdges
         .join(labels.select(col("id").as("dst"), col("lbl").as("dlbl")),
           "dst")
         .groupBy(col("src")).agg(min(col("dlbl")).as("nlbl"))
-      val (next, sumN) = ckSum(
+      val (next, Seq(sumN)) = ckptObserved(
         labels.join(nb2.select(col("src").as("id"), col("nlbl")),
             Seq("id"), "left")
           .select(col("id"),
             least(col("lbl"), coalesce(col("nlbl"), col("lbl")))
               .as("lbl")),
-        round)
+        lblSum)
       converged = sumN == prevSum
       prevSum = sumN
       labels = next
-      round += 1
     }
     val borders = nbr
       .join(labels.select(col("id").as("uid_b"), col("lbl")), "uid_b")

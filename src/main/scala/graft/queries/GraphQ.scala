@@ -688,18 +688,9 @@ object GraphQ {
     // Convergence counts ride the SAME job that materializes each
     // round's checkpoint (r15 — the neardupClusters observe device):
     // every ckpt+count pair in the peel/propagate loops was TWO job
-    // launches per round; the Observation folds them into one.
-    val obsSeq = new java.util.concurrent.atomic.AtomicInteger
-    def ckptCount(df: DataFrame, agg: org.apache.spark.sql.Column)
-        : (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation(
-        s"scc_obs_${obsSeq.incrementAndGet()}_" +
-          java.util.UUID.randomUUID().toString.take(8))
-      val ck = df.observe(obs, agg.as("n")).ckpt()
-      (ck, obs.get("n").asInstanceOf[Long])
-    }
+    // launches per round; core.ckptObserved folds them into one.
     val e0 = edgesOf(s, dir).ckpt()
-    var (verts, remaining0) = ckptCount(
+    var (verts, Seq(remaining0)) = ckptObserved(
       e0.select(col("src").as("w"))
         .union(e0.select(col("dst").as("w"))).distinct(),
       count(lit(1)))
@@ -713,7 +704,7 @@ object GraphQ {
       // ---- 1. trim to fixpoint
       var trimming = true
       while (trimming && remaining > 0) {
-        val (cyc, nCyc) = ckptCount(
+        val (cyc, Seq(nCyc)) = ckptObserved(
           edges.select(col("src").as("w")).distinct()
             .intersect(edges.select(col("dst").as("w")).distinct()),
           count(lit(1)))
@@ -741,7 +732,7 @@ object GraphQ {
               .join(lbl.select(col("w").as(from), col("lbl").as("nl")),
                 from)
               .groupBy(col(to).as("w")).agg(min(col("nl")).as("nl"))
-            val (next, nChg) = ckptCount(
+            val (next, Seq(nChg)) = ckptObserved(
               lbl.join(inc, Seq("w"), "left")
                 .select(col("w"),
                   least(col("lbl"), coalesce(col("nl"), col("lbl")))
@@ -766,7 +757,7 @@ object GraphQ {
           .filter(col("lbl") === col("bl"))
           .select(col("w"), col("lbl").as("scc")).ckpt()
         settled ::= done
-        val (nv, nRem) = ckptCount(
+        val (nv, Seq(nRem)) = ckptObserved(
           verts.join(done.select(col("w")), Seq("w"), "left_anti"),
           count(lit(1)))
         verts = nv

@@ -1,34 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
 import core._
-
-/** Cumulative (event count, exact scaled value sum) per user — the
-  * transformWithState processor behind `stream_tws_exec`. The value
-  * arrives pre-scaled to an exact BIGINT (decimal(14,4) · 10⁴), so the
-  * running sum is integer arithmetic: order-independent within a batch
-  * by construction, which is what lets a custom stateful operator carry
-  * a hash-checked oracle at all. */
-class CumTotalsProcessor
-  extends StatefulProcessor[Long, (Long, Long), (Long, Long, Long)] {
-  @transient private var totals: ValueState[(Long, Long)] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    totals = getHandle.getValueState[(Long, Long)](
-      "cum_totals", Encoders.product[(Long, Long)], TTLConfig.NONE)
-
-  override def handleInputRows(
-      key: Long,
-      rows: Iterator[(Long, Long)],
-      timerValues: TimerValues): Iterator[(Long, Long, Long)] = {
-    var (n, sv) = if (totals.exists()) totals.get() else (0L, 0L)
-    rows.foreach { r => n += 1; sv += r._2 }
-    totals.update((n, sv))
-    Iterator((key, n, sv))
-  }
-}
 
 /** Event-time-timer session processor behind `stream_timer_exec`: the
   * first surviving row for a key arms a timer at that batch's minimum
@@ -79,13 +54,18 @@ class TimerSessionProcessor
   }
 }
 
-/** CumTotalsProcessor with a batch-seeded warm start — the
-  * `handleInitialState` surface behind `stream_init_state_exec`: a batch
-  * job's final per-user totals land in each key's state BEFORE the first
-  * micro-batch, and the stream continues the accumulation. This is the
+/** Cumulative (event count, exact scaled value sum) per user — the
+  * transformWithState processor behind `stream_tws_exec` and, seeded,
+  * `stream_init_state_exec`. The value arrives pre-scaled to an exact
+  * BIGINT (decimal(14,4) · 10⁴), so the running sum is integer
+  * arithmetic: order-independent within a batch by construction, which
+  * is what lets a custom stateful operator carry a hash-checked oracle
+  * at all. With an initial state, `handleInitialState` lands a batch
+  * job's final per-user totals in each key's state BEFORE the first
+  * micro-batch and the stream continues the accumulation — the
   * lambda-architecture handoff at scale (backfill batch → live stream)
-  * without replaying history through the stream. Same exact integer
-  * arithmetic as CumTotalsProcessor, so order cannot reach the hash. */
+  * without replaying history through the stream. Without one (plain
+  * `transformWithState`), the handler is never called. */
 class CumTotalsWithInitProcessor
   extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
     Long, (Long, Long), (Long, Long, Long), (Long, Long)] {
@@ -146,9 +126,8 @@ class CdcFoldProcessor
 }
 
 /** ListState + MapState through the real engine — the two
-  * transformWithState state primitives ValueState/timer keys don't touch
-  * (graduating StreamingSpec's SessionAuditProcessor demo into the
-  * oracle-graded contract, round-8 verdict task #3). Per user:
+  * transformWithState state primitives ValueState/timer keys don't touch,
+  * in the oracle-graded contract. Per user:
   *   - `log: ListState[Long]` appends each event's exact scaled value —
   *     the per-key ordered event log (the shape behind replayable
   *     feature windows / session payloads at scale);
@@ -240,11 +219,15 @@ class ListMapAuditProcessor
   * directories), and [[stage]] lands the deterministic md5/ntile batch
   * split one file per micro-batch for the replay keys.
   *
-  * Late data / watermark-drop behavior is graded two ways: the
-  * fixed-clock MemoryStream demo stays in StreamingSpec (SURVEY §2.9
-  * `late_data_policy` ⊘), and `late_data_exec` (r6) drives the SAME
-  * watermark semantics through the real engine deterministically enough
-  * to carry a DuckDB oracle — see its doc for the construction.
+  * Each plan shape (the hourly tumble, dedup, sessions, the click/view
+  * joins, the running-count and transformWithState plans) is declared
+  * once as a builder over events DataFrames. StreamingSpec and
+  * WatermarkTieSpec drive the same
+  * builders over fixed-clock MemoryStream inputs, so they check the
+  * plans the keys run: late data / watermark drops are graded both by
+  * those exact-tie tests and by `late_data_exec` (r6), which drives the
+  * watermark through the real engine deterministically enough to carry
+  * a DuckDB oracle — see its doc for the construction.
   */
 object StreamQ {
 
@@ -265,7 +248,7 @@ object StreamQ {
     * batch loader: both physical vintages (Long nanos / timestamp[us] NTZ)
     * converge on `ts: TimestampType` + `ts_us: Long` — Tables.scala has
     * the vintage rationale. */
-  private def sourceEvents(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def sourceEvents(s: SparkSession, dir: String): DataFrame = {
     // Resolving the batch table first also sets the nanosAsLong conf the
     // raw schema read depends on (Tables.apply).
     t(s, dir, "events")
@@ -435,16 +418,182 @@ object StreamQ {
       parts: Int = 4, rocksDb: Boolean = false)(plan: DataFrame): DataFrame =
     s.read.parquet(runStream(s, tag, mode, parts, rocksDb)(plan)._1)
 
+  // The streaming plan shapes, declared once over events DataFrames
+  // (`ts`, `user_id`, `event_type`, `value`, `event_id`). The keys run them
+  // over their file sources; StreamingSpec and WatermarkTieSpec run the
+  // same builders over MemoryStream inputs.
+
+  /** Hourly tumbling count per `key` (`bucket_ts` in epoch seconds),
+    * plus the exact decimal(14,4) `sum_value` when `withSum`. */
+  private[graft] def hourly(events: DataFrame, key: String = "event_type",
+      withSum: Boolean = false): DataFrame = {
+    val sumValue =
+      if (withSum) Seq(dbl(sum(dec(col("value"), 14, 4))).as("sum_value"))
+      else Nil
+    events.groupBy(window(col("ts"), "1 hour"), col(key))
+      .agg(count(lit(1)).as("n"), sumValue: _*)
+      .select(Seq(unix_timestamp(col("window.start")).as("bucket_ts"),
+        col(key), col("n")) ++
+        (if (withSum) Seq(col("sum_value")) else Nil): _*)
+  }
+
+  /** `late_data_exec`'s plan: [[hourly]] with `sum_value` under a 1 h
+    * watermark, so append mode emits a window once the watermark passes
+    * its end and drops rows whose window already closed. */
+  private[graft] def lateData(events: DataFrame): DataFrame =
+    hourly(events.withWatermark("ts", "1 hour"), withSum = true)
+
+  /** One row per (user_id, event_type, hour bucket) by
+    * `dropDuplicatesWithinWatermark` under a 1-day watermark on the
+    * bucket, which every occurrence of a key shares. */
+  private[graft] def hourlyDedup(events: DataFrame): DataFrame =
+    events.withColumn("bucket", date_trunc("hour", col("ts")))
+      .select(col("user_id"), col("event_type"), col("bucket"))
+      .withWatermark("bucket", "1 day")
+      .dropDuplicatesWithinWatermark("user_id", "event_type", "bucket")
+      .select(col("user_id"), col("event_type"),
+        unix_timestamp(col("bucket")).as("bucket_ts"))
+
+  /** Clicks ⋈ views, the input of every interval-join key: the click
+    * rows of `clicks` and the view rows of `views` (each side its own
+    * source) carry 8 h watermarks, and the join carries the time-bound
+    * range condition (views in the 4 hours up to each click, on
+    * user_id), so state for both inputs is provably evictable.
+    * `clickValue` adds the click's `value` as `cval` —
+    * stream_join_agg_exec's sum input; every other key keeps it out of
+    * the join state. */
+  private[graft] def clickViewJoin(clicks: DataFrame, views: DataFrame,
+      how: String, clickValue: Boolean = false): DataFrame = {
+    val c = clicks
+      .filter(col("event_type") === "click")
+      .select(Seq(col("event_id").as("click_id"), col("user_id"),
+        col("ts").as("cts")) ++
+        (if (clickValue) Seq(col("value").as("cval")) else Nil): _*)
+      .withWatermark("cts", "8 hours")
+    val v = views
+      .filter(col("event_type") === "view")
+      .select(col("event_id").as("view_id"), col("user_id").as("vuser"),
+        col("ts").as("vts"))
+      .withWatermark("vts", "8 hours")
+    c.join(v,
+      col("user_id") === col("vuser") &&
+        col("vts") >= col("cts") - expr("INTERVAL 4 HOURS") &&
+        col("vts") <= col("cts"),
+      how)
+  }
+
+  /** [[clickViewJoin]] feeding hourly windows on the click time: pair
+    * count and exact click-value sum per window. */
+  private[graft] def joinAgg(clicks: DataFrame, views: DataFrame)
+      : DataFrame =
+    clickViewJoin(clicks, views, "inner", clickValue = true)
+      .groupBy(window(col("cts"), "1 hour"))
+      .agg(count(lit(1)).as("n"),
+        dbl(sum(dec(col("cval"), 14, 4))).as("sum_click_value"))
+      .select(unix_timestamp(col("window.start")).as("bucket_ts"),
+        col("n"), col("sum_click_value"))
+
+  /** Hourly click counts ⋈ hourly view counts on window equality, each
+    * aggregate under an 8 h watermark on its own side. */
+  private[graft] def aggJoin(clicks: DataFrame, views: DataFrame)
+      : DataFrame = {
+    val c = clicks
+      .filter(col("event_type") === "click")
+      .select(col("ts").as("cts"))
+      .withWatermark("cts", "8 hours")
+      .groupBy(window(col("cts"), "1 hour").as("cw"))
+      .agg(count(lit(1)).as("n_clicks"))
+    val v = views
+      .filter(col("event_type") === "view")
+      .select(col("ts").as("vts"))
+      .withWatermark("vts", "8 hours")
+      .groupBy(window(col("vts"), "1 hour").as("vw"))
+      .agg(count(lit(1)).as("n_views"))
+    c.join(v, col("cw") === col("vw"))
+      .select(unix_timestamp(col("cw.start")).as("bucket_ts"),
+        col("n_clicks"), col("n_views"))
+  }
+
+  /** 30-minute-gap session windows per user with their event count. */
+  private[graft] def sessions(events: DataFrame): DataFrame =
+    events.groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+      .agg(count(lit(1)).as("n_events"))
+      .select(col("user_id"),
+        unix_micros(col("session_window.start")).as("start_us"),
+        unix_micros(col("session_window.end")).as("end_us"),
+        col("n_events"))
+
+  /** Per-user running event count in `flatMapGroupsWithState`, emitting
+    * (user_id, cum_events) in each batch the user appears in. */
+  private[graft] def runningCounts(events: DataFrame): DataFrame = {
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+    val spark = events.sparkSession
+    import spark.implicits._
+    events.select(col("user_id")).as[Long]
+      .groupByKey(identity)
+      .flatMapGroupsWithState[Long, (Long, Long)](
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (uid: Long, rows: Iterator[Long], state: GroupState[Long]) =>
+          val total = state.getOption.getOrElse(0L) + rows.size
+          state.update(total)
+          Iterator((uid, total))
+      }
+      .toDF("user_id", "cum_events")
+  }
+
+  /** The exact value column of the transformWithState keys: decimal(14,4)
+    * scaled to BIGINT units, so state sums are integer arithmetic. */
+  private def scaledValue = (dec(col("value"), 14, 4) * 10000).cast("long")
+
+  /** Per-user cumulative (cum_events, cum_scaled) in
+    * [[CumTotalsWithInitProcessor]], started from `seed`'s per-user
+    * (count, scaled sum) when given. */
+  private[graft] def cumTotals(events: DataFrame,
+      seed: Option[Dataset[(Long, Long, Long)]] = None): DataFrame = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    val byUser = events.select(col("user_id"), scaledValue.as("v"))
+      .as[(Long, Long)].groupByKey(_._1)
+    val p = new CumTotalsWithInitProcessor
+    seed.fold(byUser.transformWithState(p, TimeMode.None(),
+        OutputMode.Append())) { init =>
+      byUser.transformWithState(p, TimeMode.None(), OutputMode.Append(),
+        init.groupByKey(_._1).mapValues(t => (t._2, t._3)))
+    }.toDF("user_id", "cum_events", "cum_scaled")
+  }
+
+  /** Event-time sessions in [[TimerSessionProcessor]] under a 1 h
+    * watermark: (user_id, n_events, expiry_ms) once a timer fires. */
+  private[graft] def timerSessions(events: DataFrame): DataFrame = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    events.withWatermark("ts", "1 hour")
+      .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"))
+      .as[(Long, Long)]
+      .groupByKey(_._1)
+      .transformWithState(new TimerSessionProcessor,
+        TimeMode.EventTime(), OutputMode.Append())
+      .toDF("user_id", "n_events", "expiry_ms")
+  }
+
+  /** Per-user ListState/MapState audit in [[ListMapAuditProcessor]]:
+    * (user_id, cum_events, cum_scaled, n_types) per batch with rows. */
+  private[graft] def listMapAudit(events: DataFrame): DataFrame = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    events.select(col("user_id"), col("event_type"), scaledValue.as("v"))
+      .as[(Long, String, Long)]
+      .groupByKey(_._1)
+      .transformWithState(new ListMapAuditProcessor,
+        TimeMode.None(), OutputMode.Append())
+      .toDF("user_id", "cum_events", "cum_scaled", "n_types")
+  }
+
   /** qtumble_hourly's aggregation executed BY the streaming engine;
     * oracle is qtumble_hourly's SQL verbatim. */
   val streamTumbleExec: QFn = (s, dir) =>
     streamed(s, "stream_tumble", "complete", 8)(
-      sourceEvents(s, dir)
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          dbl(sum(dec(col("value"), 14, 4))).as("sum_value"))
-        .select(unix_timestamp(col("window.start")).as("bucket_ts"),
-          col("event_type"), col("n"), col("sum_value")))
+      hourly(sourceEvents(s, dir), withSum = true))
       .orderBy(col("bucket_ts"), col("event_type"))
 
   /** Streaming global TOP-K (r9) — ORDER BY + LIMIT on top of a stateful
@@ -461,11 +610,7 @@ object StreamQ {
     * hours×types rows — bounded state at any event volume. */
   val streamTopkExec: QFn = (s, dir) =>
     streamed(s, "stream_topk", "complete", 8)(
-      sourceEvents(s, dir)
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(unix_timestamp(col("window.start")).as("bucket_ts"),
-          col("event_type"), col("n"))
+      hourly(sourceEvents(s, dir))
         .orderBy(col("n").desc, col("bucket_ts"), col("event_type"))
         .limit(20))
       .orderBy(col("n").desc, col("bucket_ts"), col("event_type"))
@@ -474,13 +619,7 @@ object StreamQ {
     * the lag/cumsum sessionization (session_window_native's contract). */
   val streamSessionExec: QFn = (s, dir) =>
     streamed(s, "stream_session", "complete", 8)(
-      sourceEvents(s, dir)
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"),
-          unix_micros(col("session_window.start")).as("start_us"),
-          unix_micros(col("session_window.end")).as("end_us"),
-          col("n_events")))
+      sessions(sourceEvents(s, dir)))
       .orderBy(col("user_id"), col("start_us"))
 
   /** Sliding 1 h / 15 m windows executed by the streaming engine — each
@@ -513,12 +652,7 @@ object StreamQ {
     * sink is a keyed store; the append log here keeps the emissions
     * themselves gradable). */
   val streamUpdateExec: QFn = (s, dir) =>
-    streamed(s, "update_exec", "update")(
-      replay(s, dir)
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(unix_timestamp(col("window.start")).as("bucket_ts"),
-          col("event_type"), col("n")))
+    streamed(s, "update_exec", "update")(hourly(replay(s, dir)))
       .orderBy(col("bucket_ts"), col("event_type"), col("n"))
 
   /** Streaming dropDuplicates state → append-mode FILE sink (the real
@@ -532,38 +666,13 @@ object StreamQ {
         .select(col("user_id"), col("event_type")))
       .orderBy(col("user_id"), col("event_type"))
 
-  /** Clicks ⋈ views, the input of every interval-join key: both sides
-    * carry 8 h watermarks and the join carries the time-bound range
-    * condition (views in the 4 hours up to each click, on user_id), so
-    * state for both inputs is provably evictable. `clickValue` adds the
-    * click's `value` as `cval` — stream_join_agg_exec's sum input; every
-    * other key keeps it out of the join state. */
-  private def clickViewJoin(s: SparkSession, dir: String, how: String,
-      clickValue: Boolean = false): DataFrame = {
-    val clicks = sourceEvents(s, dir)
-      .filter(col("event_type") === "click")
-      .select(Seq(col("event_id").as("click_id"), col("user_id"),
-        col("ts").as("cts")) ++
-        (if (clickValue) Seq(col("value").as("cval")) else Nil): _*)
-      .withWatermark("cts", "8 hours")
-    val views = sourceEvents(s, dir)
-      .filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id").as("vuser"),
-        col("ts").as("vts"))
-      .withWatermark("vts", "8 hours")
-    clicks.join(views,
-      col("user_id") === col("vuser") &&
-        col("vts") >= col("cts") - expr("INTERVAL 4 HOURS") &&
-        col("vts") <= col("cts"),
-      how)
-  }
-
   /** An interval join to the file sink, re-read as its (click_id,
     * view_id) set. */
   private def joinPairs(s: SparkSession, dir: String, tag: String,
       how: String): DataFrame =
     streamed(s, tag, "append")(
-      clickViewJoin(s, dir, how).select(col("click_id"), col("view_id")))
+      clickViewJoin(sourceEvents(s, dir), sourceEvents(s, dir), how)
+        .select(col("click_id"), col("view_id")))
       .orderBy(col("click_id"), col("view_id"))
 
   /** Stream-stream interval join through the real engine — the stateful
@@ -648,7 +757,8 @@ object StreamQ {
     * clicks above the final watermark — the oracle pins those). */
   val streamSemiJoinExec: QFn = (s, dir) =>
     streamed(s, "stream_sjoin", "append")(
-      clickViewJoin(s, dir, "left_semi").select(col("click_id")))
+      clickViewJoin(sourceEvents(s, dir), sourceEvents(s, dir), "left_semi")
+        .select(col("click_id")))
       .orderBy(col("click_id"))
 
   /** Stream-stream join FEEDING a windowed aggregation (r11) — the
@@ -670,12 +780,7 @@ object StreamQ {
     * where a non-delayed rule over-emits). */
   val streamJoinAggExec: QFn = (s, dir) =>
     streamed(s, "stream_jagg", "append")(
-      clickViewJoin(s, dir, "inner", clickValue = true)
-        .groupBy(window(col("cts"), "1 hour"))
-        .agg(count(lit(1)).as("n"),
-          dbl(sum(dec(col("cval"), 14, 4))).as("sum_click_value"))
-        .select(unix_timestamp(col("window.start")).as("bucket_ts"),
-          col("n"), col("sum_click_value")))
+      joinAgg(sourceEvents(s, dir), sourceEvents(s, dir)))
       .orderBy(col("bucket_ts"))
 
   /** TWO windowed aggregations JOINED on window equality (r11) — the
@@ -691,25 +796,10 @@ object StreamQ {
     * join consumes them in a further no-data batch — the engine's
     * multi-batch quiesce is exactly what this key grades (a single
     * no-data sweep would emit nothing). Calibrated at sf0.001/0.01. */
-  val streamAggJoinExec: QFn = (s, dir) => {
-    val clicks = sourceEvents(s, dir)
-      .filter(col("event_type") === "click")
-      .select(col("ts").as("cts"))
-      .withWatermark("cts", "8 hours")
-      .groupBy(window(col("cts"), "1 hour").as("cw"))
-      .agg(count(lit(1)).as("n_clicks"))
-    val views = sourceEvents(s, dir)
-      .filter(col("event_type") === "view")
-      .select(col("ts").as("vts"))
-      .withWatermark("vts", "8 hours")
-      .groupBy(window(col("vts"), "1 hour").as("vw"))
-      .agg(count(lit(1)).as("n_views"))
+  val streamAggJoinExec: QFn = (s, dir) =>
     streamed(s, "stream_ajoin", "append")(
-      clicks.join(views, col("cw") === col("vw"))
-        .select(unix_timestamp(col("cw.start")).as("bucket_ts"),
-          col("n_clicks"), col("n_views")))
+      aggJoin(sourceEvents(s, dir), sourceEvents(s, dir)))
       .orderBy(col("bucket_ts"))
-  }
 
   /** CHAINED STATEFUL OPERATORS through the real engine (r8) — two
     * windowed aggregations in ONE streaming query (15-min tumble per
@@ -762,13 +852,9 @@ object StreamQ {
   val streamRestartExec: QFn = (s, dir) => {
     val run = runDir("restart")
     val box = new java.io.File(run, "inbox")
-    def counts = s.readStream
+    def counts = hourly(s.readStream
       .schema(s.read.parquet(box.getAbsolutePath).schema)
-      .parquet(box.getAbsolutePath)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(unix_timestamp(col("window.start")).as("bucket_ts"),
-        col("event_type"), col("n"))
+      .parquet(box.getAbsolutePath))
     // batch 1 landed: first deployment, state built; batch 2 landed:
     // restart, which must resume offsets and restore state
     stage(s, dir, box, 2, 1 to 2) { _ =>
@@ -798,14 +884,7 @@ object StreamQ {
     * rule cannot hash-match. Output projects (bucket_ts, event_type, n,
     * sum_value) — a set, so engine arrival order can't reach the hash. */
   val lateDataExec: QFn = (s, dir) =>
-    streamed(s, "late_data", "append")(
-      replay(s, dir)
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          dbl(sum(dec(col("value"), 14, 4))).as("sum_value"))
-        .select(unix_timestamp(col("window.start")).as("bucket_ts"),
-          col("event_type"), col("n"), col("sum_value")))
+    streamed(s, "late_data", "append")(lateData(replay(s, dir)))
       .orderBy(col("bucket_ts"), col("event_type"))
 
   /** BOUNDED-STATE streaming dedup through the real engine:
@@ -828,14 +907,7 @@ object StreamQ {
     * watermark in force at that batch. Output projects only the key — a
     * set, arrival order can't reach the hash. */
   val streamDedupWmExec: QFn = (s, dir) =>
-    streamed(s, "dedup_wm", "append")(
-      replay(s, dir)
-        .withColumn("bucket", date_trunc("hour", col("ts")))
-        .select(col("user_id"), col("event_type"), col("bucket"))
-        .withWatermark("bucket", "1 day")
-        .dropDuplicatesWithinWatermark("user_id", "event_type", "bucket")
-        .select(col("user_id"), col("event_type"),
-          unix_timestamp(col("bucket")).as("bucket_ts")))
+    streamed(s, "dedup_wm", "append")(hourlyDedup(replay(s, dir)))
       .orderBy(col("user_id"), col("event_type"), col("bucket_ts"))
 
   /** ARBITRARY stateful processing through the real engine:
@@ -851,27 +923,13 @@ object StreamQ {
     * Output (user_id, cum_events) is a set: totals strictly increase per
     * appearance, so arrival order within a batch cannot reach the hash.
     * Oracle: per-user running count over the replayed batch assignment. */
-  val streamStateExec: QFn = (s, dir) => {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    import s.implicits._
-    streamed(s, "state_exec", "append")(
-      replay(s, dir)
-        .select(col("user_id")).as[Long]
-        .groupByKey(identity)
-        .flatMapGroupsWithState[Long, (Long, Long)](
-          OutputMode.Append, GroupStateTimeout.NoTimeout) {
-          (uid: Long, rows: Iterator[Long], state: GroupState[Long]) =>
-            val total = state.getOption.getOrElse(0L) + rows.size
-            state.update(total)
-            Iterator((uid, total))
-        }
-        .toDF("user_id", "cum_events"))
+  val streamStateExec: QFn = (s, dir) =>
+    streamed(s, "state_exec", "append")(runningCounts(replay(s, dir)))
       .orderBy(col("user_id"), col("cum_events"))
-  }
 
   /** Spark-4 `transformWithState` through the real engine as a GRADED
     * key — the successor stateful API (typed named state handles, TTL,
-    * timers) that StreamingSpec previously exercised only as a demo.
+    * timers).
     * Per-user cumulative (event count, value sum) over the same staged
     * deterministic 5-batch replay as `stream_state_exec`, one emission
     * per (user, batch-with-rows).
@@ -886,19 +944,10 @@ object StreamQ {
     * the 100 TB-state deployment choice), so THIS key grades the RocksDB
     * physical layer in the contract path; the conf is pinned per-run and
     * restored. */
-  val streamTwsExec: QFn = (s, dir) => {
-    import s.implicits._
+  val streamTwsExec: QFn = (s, dir) =>
     streamed(s, "tws_exec", "append", rocksDb = true)(
-      replay(s, dir)
-        .select(col("user_id"),
-          (dec(col("value"), 14, 4) * 10000).cast("long").as("v"))
-        .as[(Long, Long)]
-        .groupByKey(_._1)
-        .transformWithState(new CumTotalsProcessor,
-          TimeMode.None(), OutputMode.Append())
-        .toDF("user_id", "cum_events", "cum_scaled"))
+      cumTotals(replay(s, dir)))
       .orderBy(col("user_id"), col("cum_events"))
-  }
 
   /** CDC APPLY through the real engine (r9) — the streaming twin of the
     * batch `cdc_apply_tombstones` key and the state-semantics complement
@@ -940,19 +989,10 @@ object StreamQ {
     * re-arms, and the final AvailableNow flush) yet exactly replayable
     * — the oracle encodes the calibrated micro-batch timer protocol.
     * Requires RocksDB (transformWithState), pinned per-run. */
-  val streamTimerExec: QFn = (s, dir) => {
-    import s.implicits._
+  val streamTimerExec: QFn = (s, dir) =>
     streamed(s, "timer_exec", "append", rocksDb = true)(
-      replay(s, dir)
-        .withWatermark("ts", "1 hour")
-        .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"))
-        .as[(Long, Long)]
-        .groupByKey(_._1)
-        .transformWithState(new TimerSessionProcessor,
-          TimeMode.EventTime(), OutputMode.Append())
-        .toDF("user_id", "n_events", "expiry_ms"))
+      timerSessions(replay(s, dir)))
       .orderBy(col("user_id"), col("expiry_ms"), col("n_events"))
-  }
 
   /** BATCH-SEEDED INITIAL STATE through the real engine as a graded key
     * — transformWithState's `handleInitialState`: the lambda-architecture
@@ -969,22 +1009,12 @@ object StreamQ {
     import s.implicits._
     val seed = batchSplit(s, dir, 5)
       .filter(col("b") <= 2)
-      .select(col("user_id"),
-        (dec(col("value"), 14, 4) * 10000).cast("long").as("v"))
+      .select(col("user_id"), scaledValue.as("v"))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("c"), sum(col("v")).as("sv"))
       .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .mapValues(t => (t._2, t._3))
     streamed(s, "init_state", "append", rocksDb = true)(
-      replay(s, dir, "init_inbox", 3 to 5)
-        .select(col("user_id"),
-          (dec(col("value"), 14, 4) * 10000).cast("long").as("v"))
-        .as[(Long, Long)]
-        .groupByKey(_._1)
-        .transformWithState(new CumTotalsWithInitProcessor,
-          TimeMode.None(), OutputMode.Append(), seed)
-        .toDF("user_id", "cum_events", "cum_scaled"))
+      cumTotals(replay(s, dir, "init_inbox", 3 to 5), Some(seed)))
       .orderBy(col("user_id"), col("cum_events"))
   }
 
@@ -1022,19 +1052,10 @@ object StreamQ {
     * transformWithState primitive matrix in the contract: ValueState
     * (stream_tws_exec), timers (stream_timer_exec), ListState + MapState
     * (here). */
-  val streamListStateExec: QFn = (s, dir) => {
-    import s.implicits._
+  val streamListStateExec: QFn = (s, dir) =>
     streamed(s, "list_state", "append", rocksDb = true)(
-      replay(s, dir)
-        .select(col("user_id"), col("event_type"),
-          (dec(col("value"), 14, 4) * 10000).cast("long").as("v"))
-        .as[(Long, String, Long)]
-        .groupByKey(_._1)
-        .transformWithState(new ListMapAuditProcessor,
-          TimeMode.None(), OutputMode.Append())
-        .toDF("user_id", "cum_events", "cum_scaled", "n_types"))
+      listMapAudit(replay(s, dir)))
       .orderBy(col("user_id"), col("cum_events"))
-  }
 
   /** DSv2 MICRO-BATCH READ through the real engine as a graded key —
     * the streaming half of the connector read lifecycle
@@ -1083,12 +1104,7 @@ object StreamQ {
       .filter(!col("event_type").isin("click", "view"))
       .withWatermark("ts", "2 hours")
     streamed(s, "union_wm", "append")(
-      fast.unionAll(slow)
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          dbl(sum(dec(col("value"), 14, 4))).as("sum_value"))
-        .select(unix_timestamp(col("window.start")).as("bucket_ts"),
-          col("event_type"), col("n"), col("sum_value")))
+      hourly(fast.unionAll(slow), withSum = true))
       .orderBy(col("bucket_ts"), col("event_type"))
   }
 
@@ -1110,13 +1126,9 @@ object StreamQ {
     val dim = t(s, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
     streamed(s, "stream_static_join", "complete", 8)(
-      sourceEvents(s, dir)
-        .join(broadcast(dim), col("user_id") === col("c_custkey"))
-        .groupBy(window(col("ts"), "1 hour"), col("c_mktsegment"))
-        .agg(count(lit(1)).as("n"),
-          dbl(sum(dec(col("value"), 14, 4))).as("sum_value"))
-        .select(unix_timestamp(col("window.start")).as("bucket_ts"),
-          col("c_mktsegment"), col("n"), col("sum_value")))
+      hourly(sourceEvents(s, dir)
+        .join(broadcast(dim), col("user_id") === col("c_custkey")),
+        "c_mktsegment", withSum = true))
       .orderBy(col("bucket_ts"), col("c_mktsegment"))
   }
 
@@ -1141,12 +1153,7 @@ object StreamQ {
     * The oracle replays all three rules relationally. */
   val streamDropAuditExec: QFn = (s, dir) => {
     val (_, q) = runStream(s, "drop_audit", "append")(
-      replay(s, dir)
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(unix_timestamp(col("window.start")).as("bucket_ts"),
-          col("event_type"), col("n")))
+      hourly(replay(s, dir).withWatermark("ts", "1 hour")))
     import s.implicits._
     q.recentProgress.toSeq.zipWithIndex.map { case (p, i) =>
       val dropped = p.stateOperators.map(_.numRowsDroppedByWatermark).sum

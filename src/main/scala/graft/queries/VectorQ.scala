@@ -708,36 +708,27 @@ object VectorQ {
     // groupBy (adj is symmetrized, so every vertex appears as src) —
     // replaces a distinct() shuffle + one full join round; near-clique
     // components then converge after a single loop iteration.
-    // One job per round: the label-sum convergence metric is an `observe`
-    // node inside the plan the eager localCheckpoint materializes, so the
-    // checkpoint action delivers both the cut lineage AND the sum.
-    def checkpointWithSum(df: org.apache.spark.sql.DataFrame, round: Int)
-        : (org.apache.spark.sql.DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation(s"cc_lblsum_r$round")
-      val ck = df.observe(obs, coalesce(sum(col("lbl")), lit(0L)).as("s"))
-        .ckpt()
-      (ck, obs.get("s").asInstanceOf[Long])
-    }
-    var (labels, prevSum) = checkpointWithSum(
+    // One job per round: the label-sum convergence metric is observed by
+    // the job that materializes the checkpoint (core.ckptObserved).
+    val lblSum = coalesce(sum(col("lbl")), lit(0L))
+    var (labels, Seq(prevSum)) = ckptObserved(
       adj.groupBy(col("src")).agg(min(col("dst")).as("mn"))
         .select(col("src").as("id"), least(col("src"), col("mn")).as("lbl")),
-      0)
+      lblSum)
     var converged = false
-    var round = 1
     while (!converged) {
       val nbr = adj
         .join(labels.select(col("id").as("dst"), col("lbl").as("dlbl")), "dst")
         .groupBy(col("src")).agg(min(col("dlbl")).as("nlbl"))
-      val (next, nextSum) = checkpointWithSum(
+      val (next, Seq(nextSum)) = ckptObserved(
         labels
           .join(nbr.select(col("src").as("id"), col("nlbl")), Seq("id"), "left")
           .select(col("id"),
             least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl")),
-        round)
+        lblSum)
       converged = nextSum == prevSum
       prevSum = nextSum
       labels = next
-      round += 1
     }
     adj.unpersist()
     labels.select(col("id").as("vec_id"), col("lbl").as("cluster_id"))

@@ -358,6 +358,18 @@ object core {
       } else df.localCheckpoint()
   }
 
+  /** `.ckpt()` with Long-valued aggregate `metrics` observed inside the
+    * plan it materializes, so one job returns both the cut lineage and
+    * the metric values (in `metrics` order) — an iterative loop's
+    * convergence check costs no second job per round. */
+  def ckptObserved(df: DataFrame, metrics: Column*): (DataFrame, Seq[Long]) = {
+    val obs = org.apache.spark.sql.Observation()
+    val named = metrics.zipWithIndex.map { case (m, i) => m.as(s"m$i") }
+    val ck = df.observe(obs, named.head, named.tail: _*).ckpt()
+    val values = obs.get
+    (ck, metrics.indices.map(i => values(s"m$i").asInstanceOf[Long]))
+  }
+
   // setCheckpointDir appends a UUID subdir, so "already set to what we
   // want" can't be read back off the context — remember what we set.
   private val ckptDirSet = java.util.Collections.synchronizedMap(

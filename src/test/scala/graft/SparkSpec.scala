@@ -13,4 +13,10 @@ trait SparkSpec extends AnyFunSuite {
     * engine's one scope, core.withConfs. */
   def withConfs[T](kv: (String, String)*)(body: => T): T =
     graft.queries.core.withConfs(spark)(kv: _*)(body)
+
+  /** `body` on the RocksDB state store, which transformWithState needs. */
+  def withRocksDb[T](body: => T): T =
+    withConfs("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    )(body)
 }

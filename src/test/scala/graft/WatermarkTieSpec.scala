@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
+import graft.queries.StreamQ
 
 /** Boundary-TIE pin for the watermark protocol the three §2.19 goldens
   * (`late_data_exec`, `stream_dedup_wm_exec`, `stream_state_exec` — see
@@ -41,12 +42,13 @@ class WatermarkTieSpec extends SparkSpec {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[Ev]
-    val q = graft.streaming.StreamingDemo.tumblingHourly(mem.toDF())
+    val q = StreamQ.lateData(mem.toDF())
       .writeStream.format("memory").queryName("tie_pin")
       .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
     def rows() = spark.table("tie_pin")
-      .select("bucket", "n", "sum_value").as[(Timestamp, Long, Double)]
-      .collect().sortBy(_._1.getTime).toList
+      .select("bucket_ts", "n", "sum_value").as[(Long, Long, Double)]
+      .collect().sortBy(_._1).toList
+      .map { case (b, n, sum) => (new Timestamp(b * 1000), n, sum) }
     // Batch 1: 08:30 plus a max event at EXACTLY 10:00:00 → the advanced
     // watermark is 09:00:00.000, the exact end of window [08:00, 09:00).
     mem.addData(Ev(hts(8, 30), 1, "view", 1.0), Ev(hts(10), 1, "view", 1.0))
@@ -74,9 +76,10 @@ class WatermarkTieSpec extends SparkSpec {
   /** The outer-join eviction tie `stream_outer_join_exec`'s oracle
     * encodes: an unmatched left row null-emits only when the watermark
     * STRICTLY passes its event time (`cts < wm`); a row exactly AT the
-    * watermark stays in state. Manufactured with an hour-aligned max
-    * event time on both streams (multi-watermark policy = min, so both
-    * sides must advance). */
+    * watermark stays in state. Runs the key's join
+    * (StreamQ.clickViewJoin: 8 h watermarks, views in the 4 h up to each
+    * click), manufactured with an hour-aligned max event time on both
+    * streams (multi-watermark policy = min, so both sides must advance). */
   test("outer-join null-extension tie: cts == watermark stays in state " +
       "(strict eviction — protocol pin for stream_outer_join_exec)") {
     import org.apache.spark.sql.functions._
@@ -84,18 +87,8 @@ class WatermarkTieSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val clicks = MemoryStream[Ev]
     val views = MemoryStream[Ev]
-    val left = clicks.toDF()
-      .select(col("user_id").as("cuid"), col("ts").as("cts"))
-      .withWatermark("cts", "1 hour")
-    val right = views.toDF()
-      .select(col("user_id").as("vuid"), col("ts").as("vts"))
-      .withWatermark("vts", "1 hour")
-    val q = left.join(right,
-        col("cuid") === col("vuid") &&
-          col("vts") >= col("cts") - expr("INTERVAL 1 HOUR") &&
-          col("vts") <= col("cts"),
-        "left_outer")
-      .select(col("cuid"), col("cts"), col("vts"))
+    val q = StreamQ.clickViewJoin(clicks.toDF(), views.toDF(), "left_outer")
+      .select(col("user_id"), col("cts"), col("vts"))
       .writeStream.format("memory").queryName("ojoin_tie")
       .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
     def rows() = spark.table("ojoin_tie")
@@ -106,12 +99,12 @@ class WatermarkTieSpec extends SparkSpec {
     try {
       // Batch 1. Clicks: u1@08:00 (unmatched, strictly below the coming
       // watermark), u2@10:00 (unmatched, exactly AT it), u3@09:30
-      // (matched by the u3@09:00 view), u9@11:00 (the max — sets click
-      // watermark). Views: u3@09:00 (the match), u8@11:00 (advances view
-      // watermark).
+      // (matched by the u3@09:00 view), u9@18:00 (the max — sets click
+      // watermark 18:00 − 8 h). Views: u3@09:00 (the match), u8@18:00
+      // (advances view watermark).
       clicks.addData(Ev(hts(8), 1, "click", 0), Ev(hts(10), 2, "click", 0),
-        Ev(hts(9, 30), 3, "click", 0), Ev(hts(11), 9, "click", 0))
-      views.addData(Ev(hts(9), 3, "view", 0), Ev(hts(11), 8, "view", 0))
+        Ev(hts(9, 30), 3, "click", 0), Ev(hts(18), 9, "click", 0))
+      views.addData(Ev(hts(9), 3, "view", 0), Ev(hts(18), 8, "view", 0))
       q.processAllAvailable()
       // processAllAvailable drains the trailing no-data batch too, so the
       // watermark is already 10:00 and eviction has run: the inner match
@@ -123,8 +116,8 @@ class WatermarkTieSpec extends SparkSpec {
       // — the watermark stays 10:00, so the tie row must KEEP not
       // emitting.
       for (_ <- 1 to 2) {
-        clicks.addData(Ev(hts(11), 9, "click", 0))
-        views.addData(Ev(hts(11), 8, "view", 0))
+        clicks.addData(Ev(hts(18), 9, "click", 0))
+        views.addData(Ev(hts(18), 8, "view", 0))
         q.processAllAvailable()
       }
     } finally q.stop()
@@ -148,41 +141,30 @@ class WatermarkTieSpec extends SparkSpec {
     * under the un-delayed rule) but never tie the boundary; this
     * manufactures both: a window end exactly AT the delayed watermark
     * (must NOT emit) and the delay gap itself (a window between the
-    * delayed and un-delayed watermarks must NOT emit). */
+    * delayed and un-delayed watermarks must NOT emit). Runs the key's
+    * plan (StreamQ.joinAgg: 8 h watermarks, 4 h interval). */
   test("chained join→agg tie: windows finalize STRICTLY below the " +
       "join-delayed watermark (protocol pin for stream_join_agg_exec)") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sq = spark.sqlContext
     val clicks = MemoryStream[Ev]
     val views = MemoryStream[Ev]
-    val left = clicks.toDF()
-      .select(col("user_id").as("cuid"), col("ts").as("cts"))
-      .withWatermark("cts", "1 hour")
-    val right = views.toDF()
-      .select(col("user_id").as("vuid"), col("ts").as("vts"))
-      .withWatermark("vts", "1 hour")
-    val q = left.join(right,
-        col("cuid") === col("vuid") &&
-          col("vts") >= col("cts") - expr("INTERVAL 1 HOUR") &&
-          col("vts") <= col("cts"))
-      .groupBy(window(col("cts"), "1 hour"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("bucket"), col("n"))
+    val q = StreamQ.joinAgg(clicks.toDF(), views.toDF())
       .writeStream.format("memory").queryName("jagg_tie")
       .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    def rows() = spark.table("jagg_tie").as[(Timestamp, Long)]
-      .collect().sortBy(_._1.getTime).toList
+    def rows() = spark.table("jagg_tie").select("bucket_ts", "n")
+      .as[(Long, Long)].collect().sortBy(_._1).toList
+      .map { case (b, n) => (new Timestamp(b * 1000), n) }
     try {
-      // One matched pair per window [08,09) [09,10) [10,11); the 12:00
-      // rows drive both side watermarks to 11:00 (delay 1 h) and join
-      // nothing. Join delay = 1 h (the interval) → agg watermark 10:00.
+      // One matched pair per window [08,09) [09,10) [10,11); the 22:00
+      // rows drive both side watermarks to 14:00 (delay 8 h) and join
+      // nothing. Join delay = 4 h (the interval) → agg watermark 10:00.
       clicks.addData(Ev(hts(8, 30), 1, "click", 0),
         Ev(hts(9, 30), 2, "click", 0), Ev(hts(10, 30), 3, "click", 0),
-        Ev(hts(12), 9, "click", 0))
+        Ev(hts(22), 9, "click", 0))
       views.addData(Ev(hts(8, 30), 1, "view", 0),
         Ev(hts(9, 30), 2, "view", 0), Ev(hts(10, 30), 3, "view", 0),
-        Ev(hts(12), 8, "view", 0))
+        Ev(hts(22), 8, "view", 0))
       q.processAllAvailable()
     } finally q.stop()
     // [08,09): end 09:00 < 10:00 → emits. [09,10): end == 10:00 → the
@@ -200,38 +182,29 @@ class WatermarkTieSpec extends SparkSpec {
     * without a late-drop (the join's event-time columns are the window
     * bounds themselves, never older than the watermark that released
     * them). Manufactured: window end exactly AT the watermark on both
-    * sides must traverse the whole chain. */
+    * sides must traverse the whole chain. Runs the key's plan
+    * (StreamQ.aggJoin: 8 h watermarks). */
   test("chained agg→join tie: windows finalized AT the watermark " +
       "(inclusive) traverse the join (protocol pin for " +
       "stream_agg_join_exec)") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sq = spark.sqlContext
     val clicks = MemoryStream[Ev]
     val views = MemoryStream[Ev]
-    val left = clicks.toDF().select(col("ts").as("cts"))
-      .withWatermark("cts", "1 hour")
-      .groupBy(window(col("cts"), "1 hour").as("cw"))
-      .agg(count(lit(1)).as("n_clicks"))
-    val right = views.toDF().select(col("ts").as("vts"))
-      .withWatermark("vts", "1 hour")
-      .groupBy(window(col("vts"), "1 hour").as("vw"))
-      .agg(count(lit(1)).as("n_views"))
-    val q = left.join(right, col("cw") === col("vw"))
-      .select(col("cw.start").as("bucket"), col("n_clicks"),
-        col("n_views"))
+    val q = StreamQ.aggJoin(clicks.toDF(), views.toDF())
       .writeStream.format("memory").queryName("ajoin_tie")
       .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
     def rows() = spark.table("ajoin_tie")
-      .as[(Timestamp, Long, Long)].collect().sortBy(_._1.getTime).toList
+      .as[(Long, Long, Long)].collect().sortBy(_._1).toList
+      .map { case (b, c, v) => (new Timestamp(b * 1000), c, v) }
     try {
-      // [08,09) populated on BOTH sides; the 10:00 max rows drive both
+      // [08,09) populated on BOTH sides; the 17:00 max rows drive both
       // watermarks to exactly 09:00 == the window end (the tie); the
-      // [09,10) rows stay open. Inclusive finalization + join passthrough
-      // ⇒ exactly the hour-8 joined row emits.
+      // [17,18) windows stay open. Inclusive finalization + join
+      // passthrough ⇒ exactly the hour-8 joined row emits.
       clicks.addData(Ev(hts(8, 15), 1, "click", 0),
-        Ev(hts(8, 45), 2, "click", 0), Ev(hts(10), 9, "click", 0))
-      views.addData(Ev(hts(8, 30), 3, "view", 0), Ev(hts(10), 8, "view", 0))
+        Ev(hts(8, 45), 2, "click", 0), Ev(hts(17), 9, "click", 0))
+      views.addData(Ev(hts(8, 30), 3, "view", 0), Ev(hts(17), 8, "view", 0))
       q.processAllAvailable()
     } finally q.stop()
     assert(rows() == List((hts(8), 2L, 1L)),
@@ -243,28 +216,17 @@ class WatermarkTieSpec extends SparkSpec {
     * event-time timer fires as soon as the watermark REACHES its expiry
     * (`expiry <= wm`, INCLUSIVE — unlike the strict join-state eviction
     * above; discovered by this tie, invisible at the fixture tiers where
-    * both rules agree). Below-expiry watermarks must not fire. Uses the
-    * same TimerSessionProcessor as the graded key (2 h horizon, run
-    * under the RocksDB provider transformWithState requires), with
-    * hour-aligned times manufacturing the exact boundary. */
+    * both rules agree). Below-expiry watermarks must not fire. Runs the
+    * graded key's plan (StreamQ.timerSessions: 1 h watermark delay, 2 h
+    * horizon, under the RocksDB provider transformWithState requires),
+    * with hour-aligned times manufacturing the exact boundary. */
   test("event-time timer tie: expiry == watermark fires " +
       "(inclusive fire — protocol pin for stream_timer_exec)") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    withConfs("spark.sql.streaming.stateStore.providerClass" ->
-      ("org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")) {
+    withRocksDb {
       val mem = MemoryStream[Ev]
-      val q = mem.toDF()
-        .withWatermark("ts", "0 seconds")
-        .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"))
-        .as[(Long, Long)]
-        .groupByKey(_._1)
-        .transformWithState(new graft.queries.TimerSessionProcessor,
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          org.apache.spark.sql.streaming.OutputMode.Append())
-        .toDF("user_id", "n_events", "expiry_ms")
+      val q = StreamQ.timerSessions(mem.toDF())
         .writeStream.format("memory").queryName("timer_tie")
         .outputMode("append")
         .trigger(Trigger.ProcessingTime(0)).start()
@@ -273,16 +235,16 @@ class WatermarkTieSpec extends SparkSpec {
       // stop() in finally: a failing mid-test assert must not leak a
       // running query into the shared session.
       try {
-        // u1 arms at 08:00 → expiry 10:00. The max event at 09:59:59
-        // puts the watermark (delay 0) one second BELOW the expiry.
+        // u1 arms at 08:00 → expiry 10:00. The max event at 10:59:59
+        // puts the watermark (delay 1 h) one second BELOW the expiry.
         mem.addData(Ev(hts(8), 1, "view", 0),
-          Ev(hts(9, 59, 59), 9, "view", 0))
+          Ev(hts(10, 59, 59), 9, "view", 0))
         q.processAllAvailable()
         assert(fired().isEmpty,
           s"watermark below expiry must not fire; got ${fired()}")
-        // A max event at EXACTLY 10:00 drives the watermark to == expiry
+        // A max event at EXACTLY 11:00 drives the watermark to == expiry
         // — the inclusive rule fires the timer, counting u1's one row.
-        mem.addData(Ev(hts(10), 9, "view", 0))
+        mem.addData(Ev(hts(11), 9, "view", 0))
         q.processAllAvailable()
       } finally q.stop()
       assert(fired() == List((1L, 1L, hts(10).getTime)),
