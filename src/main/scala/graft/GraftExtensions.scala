@@ -12,9 +12,11 @@ import graft.expressions.{CharBigrams, CodepointSplit, DotProduct, JaroWinkler, 
   *     .withExtensions(new GraftExtensions)         // or
   *     .config("spark.sql.extensions", "graft.GraftExtensions")
   *
-  * Driver-owned sessions (Verify/Bench) don't pass extensions, so query
-  * functions also call DotProduct.register — the runtime-registry route.
-  * Both paths resolve the same `graft_dot`.
+  * Driver-owned sessions (Verify/Bench) don't pass extensions, so
+  * `Tables.prepareSession`, which every key reaches through the table
+  * loader, registers the same functions (plus `graft_cms_estimate`) once
+  * per session — the runtime-registry route. Both paths resolve the
+  * same `graft_dot`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -57,10 +57,11 @@ object Tables {
     "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
   /** One-time session preparation — the THREE conf pins every graft query
-    * depends on, applied once per session (idempotent; re-entry is a no-op
-    * set-membership check). Called by the loader so no entrypoint can
-    * forget it, and public so an embedding application can run it eagerly
-    * and see exactly what the library changes:
+    * depends on and the six `graft_*` functions the keys call, applied
+    * once per session (idempotent; re-entry is a no-op set-membership
+    * check). Called by the loader so no entrypoint can forget it, and
+    * public so an embedding application can run it eagerly and see
+    * exactly what the library changes:
     *   - `spark.sql.icu.caseMappings.enabled=false` — Spark 4.1 routes
     *     lower()/upper() under UTF8_BINARY through ICU, whose class-init
     *     builds case tables for ~15-35 s (measured; it dominated the first
@@ -72,6 +73,11 @@ object Tables {
     *     events vintage is TIMESTAMP(NANOS), which Spark 4.x otherwise
     *     rejects; see the vintage contract in the class doc. Harmless for
     *     fixtures with no NANOS column.
+    *   - `graft_dot`, `graft_bigrams`, `graft_codepoints`,
+    *     `graft_jaro_winkler`, `graft_topk` and `graft_cms_estimate` go
+    *     into the session's function registry here, once per session:
+    *     registering per key call would replace the function and log a
+    *     WARN on every call.
     *
     * Later drift is an ERROR, not silently re-pinned: the pre-r7 loader
     * re-set these on every table resolution, which hid any embedding code
@@ -86,9 +92,15 @@ object Tables {
     // `conf.set`s and fail spuriously. Coarse lock is fine — after the
     // first call per session this is a read-only membership check.
     prepared.synchronized {
-      if (prepared.add(spark))
+      if (prepared.add(spark)) {
         pins.foreach { case (k, v) => spark.conf.set(k, v) }
-      else pins.foreach { case (k, v) =>
+        graft.expressions.DotProduct.register(spark)
+        graft.expressions.CharBigrams.register(spark)
+        graft.expressions.CodepointSplit.register(spark)
+        graft.expressions.JaroWinkler.register(spark)
+        graft.expressions.TopKDoubles.register(spark)
+        graft.expressions.CmsEstimate.register(spark)
+      } else pins.foreach { case (k, v) =>
         val cur = spark.conf.getOption(k)
         require(cur.contains(v),
           s"graft session pin drifted: $k = $cur (expected $v). Something " +

@@ -286,54 +286,13 @@ object CurationQ {
         .join(x1, Seq("doc_id"))
         .select(col("doc_id"), col("y"), col("x1"), col("x2"))
         .ckpt()
-      // ---- 2 IRLS Newton steps (the logistic_irls layout on doc features)
-      def pin(c: org.apache.spark.sql.Column) = dec(c, 30, 14)
-      def step(beta: DataFrame): DataFrame = {
-        val z = col("b0") + col("b1") * col("x1") + col("b2") * col("x2")
-        val rows = feat.crossJoin(broadcast(beta))
-          .withColumn("p", lit(1.0) / (lit(1.0) + exp(-z)))
-          .withColumn("w", col("p") * (lit(1.0) - col("p")))
-        val m = rows.agg(
-          sum(pin(col("w"))).as("a00"),
-          sum(pin(col("w") * col("x1"))).as("a01"),
-          sum(pin(col("w") * col("x2"))).as("a02"),
-          sum(pin(col("w") * col("x1") * col("x1"))).as("a11"),
-          sum(pin(col("w") * col("x1") * col("x2"))).as("a12"),
-          sum(pin(col("w") * col("x2") * col("x2"))).as("a22"),
-          sum(pin(col("y") - col("p"))).as("g0"),
-          sum(pin((col("y") - col("p")) * col("x1"))).as("g1"),
-          sum(pin((col("y") - col("p")) * col("x2"))).as("g2"))
-        val (a00, a01, a02) =
-          (dbl(col("a00")), dbl(col("a01")), dbl(col("a02")))
-        val (a11, a12, a22) =
-          (dbl(col("a11")), dbl(col("a12")), dbl(col("a22")))
-        // nullif: a degenerate corpus (constant features / one label
-        // class — EdgeCorpusSpec) makes the normal matrix singular; the
-        // Newton delta must become NULL (→ NULL scores → empty gate),
-        // not an ANSI divide-by-zero crash. DuckDB's x/0 is NULL-valued
-        // already; the oracle mirrors with an explicit nullif anyway.
-        val det = nullif(a00 * (a11 * a22 - a12 * a12) -
-          a01 * (a01 * a22 - a12 * a02) + a02 * (a01 * a12 - a11 * a02),
-          lit(0.0))
-        val (g0, g1, g2) = (dbl(col("g0")), dbl(col("g1")), dbl(col("g2")))
-        m.crossJoin(broadcast(beta))
-          .select(
-            (col("b0") + ((a11 * a22 - a12 * a12) / det) * g0
-              + ((a02 * a12 - a01 * a22) / det) * g1
-              + ((a01 * a12 - a02 * a11) / det) * g2).as("b0"),
-            (col("b1") + ((a02 * a12 - a01 * a22) / det) * g0
-              + ((a00 * a22 - a02 * a02) / det) * g1
-              + ((a02 * a01 - a00 * a12) / det) * g2).as("b1"),
-            (col("b2") + ((a01 * a12 - a02 * a11) / det) * g0
-              + ((a02 * a01 - a00 * a12) / det) * g1
-              + ((a00 * a11 - a01 * a01) / det) * g2).as("b2"))
-      }
-      val beta0 = s.range(1).select(lit(0.0).as("b0"), lit(0.0).as("b1"),
-        lit(0.0).as("b2"))
-      val beta = step(step(beta0).ckpt()).ckpt()
+      // ---- 2 IRLS Newton steps (StatsQ.irlsStep on doc features); only
+      // β is kept, so Catalyst prunes the step's log-likelihood sum
+      def step(beta: DataFrame): DataFrame = StatsQ.irlsStep(feat, beta)
+        .select(col("b0"), col("b1"), col("b2"))
+      val beta = step(step(StatsQ.irlsBeta0(s)).ckpt()).ckpt()
       val scored = feat.crossJoin(broadcast(beta))
-        .select(col("doc_id"), r6(lit(1.0) / (lit(1.0) + exp(-(col("b0")
-          + col("b1") * col("x1") + col("b2") * col("x2"))))).as("score"))
+        .select(col("doc_id"), r6(sigmoid(StatsQ.irlsScore)).as("score"))
         .ckpt()
       // ---- exact-rank 30th-percentile threshold on the r6-score histogram
       val hist = scored.groupBy(col("score")).agg(count(lit(1)).as("c"))

@@ -438,7 +438,6 @@ object DepthQ {
     * ⊘ no oracle: the estimate is sketch-internal (hash-seeded), not
     * SQL-reproducible; determinism comes from the pinned seed. */
   val cmsHeavyHitters: QFn = (s, dir) => {
-    graft.expressions.CmsEstimate.register(s)
     val words = t(s, dir, "documents")
       .select(explode(graft.operators.TextOps.tokens(col("text")))
         .as("word"))
@@ -463,7 +462,6 @@ object DepthQ {
     * group. The oracle IS that window formulation — proving the heap
     * aggregate ≡ sort-then-take on the value multiset. */
   val aggTopkNative: QFn = (s, dir) => {
-    graft.expressions.TopKDoubles.register(s)
     t(s, dir, "orders")
       .groupBy(col("o_orderpriority"))
       .agg(call_function("graft_topk", col("o_totalprice"), lit(5)).as("tp"))

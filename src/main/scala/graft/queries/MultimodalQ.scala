@@ -115,7 +115,6 @@ object MultimodalQ {
     * isotropic corpus — at 100 TB band width grows with log₂(n), the
     * embed_neardup knob). */
   val neardup: QFn = (s, dir) => {
-    graft.expressions.CodepointSplit.register(s)
     val path = scratch(dir, "mm_payloads_nd")
     graft.operators.Multimodal.encodePayloads(
         t(s, dir, "documents").select(col("doc_id"), col("text")))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import core._
@@ -625,6 +625,82 @@ object StatsQ {
       .orderBy(col("event_type"))
   }
 
+  /** The scored training frame (label + scaled features + unique key),
+    * shared by the fit and the evaluation keys. */
+  private def irlsBase(s: SparkSession, dir: String) =
+    t(s, dir, "events")
+      .select(col("event_id"),
+        when(col("event_type") === "purchase", lit(1.0)).otherwise(lit(0.0))
+          .as("y"),
+        (col("value") / lit(100.0)).as("x1"),
+        (dbl(hour(col("ts"))) / lit(24.0)).as("x2"))
+
+  /** The linear score b0 + b1·x1 + b2·x2 of a row crossed with a 1-row β. */
+  private[graft] def irlsScore: Column =
+    col("b0") + col("b1") * col("x1") + col("b2") * col("x2")
+
+  /** The starting β = 0 of every IRLS fit, as a 1-row (b0, b1, b2). */
+  private[graft] def irlsBeta0(s: SparkSession): DataFrame =
+    s.range(1).select(lit(0.0).as("b0"), lit(0.0).as("b1"), lit(0.0).as("b2"))
+
+  /** One IRLS Newton step over rows (y, x1, x2) from the 1-row β (b0, b1,
+    * b2): per-row p = σ(z), weight w = p(1−p), the 3×3 normal matrix XᵀWX
+    * (6 moments) and gradient Xᵀ(y−p) (3 moments) as pinned sums, and the
+    * explicit symmetric 3×3 inverse via adjugate / determinant. Returns
+    * the 1-row (b0, b1, b2, ll), ll being the log-likelihood of the INPUT
+    * β; a caller that drops ll lets Catalyst prune its sum.
+    * nullif: a degenerate corpus (constant features / one label class —
+    * EdgeCorpusSpec) makes the normal matrix singular; the Newton delta
+    * must become NULL, not an ANSI divide-by-zero crash. DuckDB's x/0 is
+    * NULL-valued already. */
+  private[graft] def irlsStep(rows: DataFrame, beta: DataFrame): DataFrame = {
+    val z = irlsScore
+    val m = rows.crossJoin(broadcast(beta))
+      .withColumn("p", sigmoid(z))
+      .withColumn("w", col("p") * (lit(1.0) - col("p")))
+      .agg(
+        sum(pin(col("w"))).as("a00"),
+        sum(pin(col("w") * col("x1"))).as("a01"),
+        sum(pin(col("w") * col("x2"))).as("a02"),
+        sum(pin(col("w") * col("x1") * col("x1"))).as("a11"),
+        sum(pin(col("w") * col("x1") * col("x2"))).as("a12"),
+        sum(pin(col("w") * col("x2") * col("x2"))).as("a22"),
+        sum(pin(col("y") - col("p"))).as("g0"),
+        sum(pin((col("y") - col("p")) * col("x1"))).as("g1"),
+        sum(pin((col("y") - col("p")) * col("x2"))).as("g2"),
+        // log-likelihood of the CURRENT β: y·z − ln(1+eᶻ), per-row
+        // double pinned to decimal so the sum is order-free
+        sum(pin(col("y") * z - log(lit(1.0) + exp(z)))).as("ll"))
+    val (a00, a01, a02) = (dbl(col("a00")), dbl(col("a01")), dbl(col("a02")))
+    val (a11, a12, a22) = (dbl(col("a11")), dbl(col("a12")), dbl(col("a22")))
+    val det = nullif(a00 * (a11 * a22 - a12 * a12) -
+      a01 * (a01 * a22 - a12 * a02) + a02 * (a01 * a12 - a11 * a02), lit(0.0))
+    val i00 = (a11 * a22 - a12 * a12) / det
+    val i01 = (a02 * a12 - a01 * a22) / det
+    val i02 = (a01 * a12 - a02 * a11) / det
+    val i11 = (a00 * a22 - a02 * a02) / det
+    val i12 = (a02 * a01 - a00 * a12) / det
+    val i22 = (a00 * a11 - a01 * a01) / det
+    val (g0, g1, g2) = (dbl(col("g0")), dbl(col("g1")), dbl(col("g2")))
+    m.crossJoin(broadcast(beta))
+      .select(
+        (col("b0") + i00 * g0 + i01 * g1 + i02 * g2).as("b0"),
+        (col("b1") + i01 * g0 + i11 * g1 + i12 * g2).as("b1"),
+        (col("b2") + i02 * g0 + i12 * g1 + i22 * g2).as("b2"),
+        dbl(col("ll")).as("ll"))
+  }
+
+  /** Both IRLS Newton-step frames (b0, b1, b2, ll, iter); it1 is
+    * checkpointed so it2 and every evaluation consumer share one fit. */
+  private def irlsSteps(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
+    val base = irlsBase(s, dir)
+    val it1 = irlsStep(base, irlsBeta0(s)).withColumn("iter", lit(1L)).ckpt()
+    val it2 = irlsStep(base, it1.select(col("b0"), col("b1"), col("b2")))
+      .withColumn("iter", lit(2L)).ckpt()
+    (it1, it2)
+  }
+
   /** Distributed logistic regression by IRLS (r10) — actual MODEL
     * TRAINING in the engine (the GLM workhorse; Newton/IRLS is the
     * textbook fit): P(purchase | value, hour) with 2 Newton steps from
@@ -639,72 +715,12 @@ object StatsQ {
     * the (iter, b0, b1, b2) TRAJECTORY plus each step's DECIMAL-pinned
     * log-likelihood — a wrong weight, solve, or feature scaling cannot
     * reproduce it. Features scaled to O(1) (value/100, hour/24) for
-    * conditioning, documented as part of the contract.
+    * conditioning, documented as part of the contract. A singular normal
+    * matrix (constant features) yields NULL betas (irlsStep's guard).
     * Scale shape: each Newton step is one partial+final aggregate over
     * the corpus (9 moment sums) + O(1) driver-free algebra — the
     * canonical distributed GLM layout; iterations are a fixed budget
     * like pagerank's. */
-  /** The scored training frame (label + scaled features + unique key),
-    * shared by the fit and the evaluation keys. */
-  private def irlsBase(s: SparkSession, dir: String) =
-    t(s, dir, "events")
-      .select(col("event_id"),
-        when(col("event_type") === "purchase", lit(1.0)).otherwise(lit(0.0))
-          .as("y"),
-        (col("value") / lit(100.0)).as("x1"),
-        (dbl(hour(col("ts"))) / lit(24.0)).as("x2"))
-
-  /** Both IRLS Newton-step frames (iter, b0, b1, b2, ll); it1 is
-    * checkpointed so it2 and every evaluation consumer share one fit. */
-  private def irlsSteps(s: SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val base = irlsBase(s, dir)
-    def pin(c: Column) = dec(c, 30, 14)
-    def step(beta: org.apache.spark.sql.DataFrame, iter: Int) = {
-      val z = col("b0") + col("b1") * col("x1") + col("b2") * col("x2")
-      val rows = base.crossJoin(broadcast(beta))
-        .withColumn("p", lit(1.0) / (lit(1.0) + exp(-z)))
-        .withColumn("w", col("p") * (lit(1.0) - col("p")))
-      val m = rows.agg(
-        sum(pin(col("w"))).as("a00"),
-        sum(pin(col("w") * col("x1"))).as("a01"),
-        sum(pin(col("w") * col("x2"))).as("a02"),
-        sum(pin(col("w") * col("x1") * col("x1"))).as("a11"),
-        sum(pin(col("w") * col("x1") * col("x2"))).as("a12"),
-        sum(pin(col("w") * col("x2") * col("x2"))).as("a22"),
-        sum(pin(col("y") - col("p"))).as("g0"),
-        sum(pin((col("y") - col("p")) * col("x1"))).as("g1"),
-        sum(pin((col("y") - col("p")) * col("x2"))).as("g2"),
-        // log-likelihood of the CURRENT β: y·z − ln(1+eᶻ), per-row
-        // double pinned to decimal so the sum is order-free
-        sum(pin(col("y") * z - log(lit(1.0) + exp(z)))).as("ll"))
-      // explicit symmetric 3×3 inverse via adjugate / determinant
-      val (a00, a01, a02) = (dbl(col("a00")), dbl(col("a01")), dbl(col("a02")))
-      val (a11, a12, a22) = (dbl(col("a11")), dbl(col("a12")), dbl(col("a22")))
-      val det = a00 * (a11 * a22 - a12 * a12) -
-        a01 * (a01 * a22 - a12 * a02) + a02 * (a01 * a12 - a11 * a02)
-      val i00 = (a11 * a22 - a12 * a12) / det
-      val i01 = (a02 * a12 - a01 * a22) / det
-      val i02 = (a01 * a12 - a02 * a11) / det
-      val i11 = (a00 * a22 - a02 * a02) / det
-      val i12 = (a02 * a01 - a00 * a12) / det
-      val i22 = (a00 * a11 - a01 * a01) / det
-      val (g0, g1, g2) = (dbl(col("g0")), dbl(col("g1")), dbl(col("g2")))
-      m.crossJoin(broadcast(beta))
-        .select(lit(iter.toLong).as("iter"),
-          (col("b0") + i00 * g0 + i01 * g1 + i02 * g2).as("b0"),
-          (col("b1") + i01 * g0 + i11 * g1 + i12 * g2).as("b1"),
-          (col("b2") + i02 * g0 + i12 * g1 + i22 * g2).as("b2"),
-          dbl(col("ll")).as("ll"))
-    }
-    val beta0 = s.range(1).select(lit(0.0).as("b0"), lit(0.0).as("b1"),
-      lit(0.0).as("b2"))
-    val it1 = step(beta0, 1).ckpt()
-    val it2 = step(it1.select(col("b0"), col("b1"), col("b2")), 2)
-      .ckpt()
-    (it1, it2)
-  }
-
   val logisticIrls: QFn = (s, dir) => {
     val (it1, it2) = irlsSteps(s, dir)
     it1.unionByName(it2)
@@ -724,8 +740,7 @@ object StatsQ {
     val beta = core.persistedArtifact(s, dir, "irls_beta")(
       irlsSteps(s, dir)._2.select(col("b0"), col("b1"), col("b2")))
     irlsBase(s, dir).crossJoin(broadcast(beta))
-      .withColumn("p", lit(1.0) / (lit(1.0) +
-        exp(-(col("b0") + col("b1") * col("x1") + col("b2") * col("x2")))))
+      .withColumn("p", sigmoid(irlsScore))
       .select(col("event_id"), col("y"), col("p"))
   }
 
@@ -755,8 +770,7 @@ object StatsQ {
     * the rate is an exact 0/1 sum over count. */
   val modelCalibration: QFn = (s, dir) => {
     val pooled = irlsScored(s, dir)
-      .select(r6(col("p")).as("pv"), col("y"),
-        dec(col("p"), 30, 14).as("pd"))
+      .select(r6(col("p")).as("pv"), col("y"), pin(col("p")).as("pd"))
       .groupBy(col("pv"))
       .agg(count(lit(1)).as("c"), sum(col("y")).as("c1"),
         sum(col("pd")).as("sp"))
@@ -774,31 +788,106 @@ object StatsQ {
       .orderBy(col("decile"))
   }
 
-  /** ROC AUC (r10) by the rank-sum identity AUC = U/(n₊·n₋) — the
-    * mann_whitney_u midrank machinery applied to the fitted scores
+  /** Midrank ROC AUC of a scored frame (p = fitted probability, y = 0/1
+    * label) as a 1-row (n_pos, n_neg, auc) aggregate, by the rank-sum
+    * identity AUC = U/(n₊·n₋) — the mann_whitney_u midrank machinery
     * (scores r6-rounded BEFORE ranking so tie groups are engine-
-    * identical; midranks carried ×2 as exact BIGINTs). One (score)
-    * aggregate + rank windows over the distinct-score table — the
-    * standard distributed AUC, no per-pair work. */
-  val modelAuc: QFn = (s, dir) => {
-    val pooled = irlsScored(s, dir)
+    * identical; midranks carried ×2 as exact BIGINTs). The window runs
+    * over the DISTINCT r6-score table (≤ 10⁶+1 rows by rounding — the
+    * bounded-window convention), no per-pair work. */
+  private def aucOf(scored: DataFrame): DataFrame = {
+    val pooled = scored
       .select(r6(col("p")).as("pv"), col("y").cast("long").as("y1"))
       .groupBy(col("pv"))
       .agg(count(lit(1)).as("c"), sum(col("y1")).as("c1"))
     val wBefore = Window.orderBy(col("pv"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val g = pooled
+    pooled
       .withColumn("rank2",
         lit(2) * coalesce(sum(col("c")).over(wBefore), lit(0L))
           + col("c") + lit(1))
       .agg(sum(col("c1")).as("n_pos"),
         sum(col("c") - col("c1")).as("n_neg"),
         sum(col("c1") * col("rank2")).as("r1_x2"))
-    g.select(col("n_pos"), col("n_neg"),
-      r6((dbl(col("r1_x2") - col("n_pos") * (col("n_pos") + lit(1))))
-        / (lit(2.0) * dbl(col("n_pos")) * dbl(col("n_neg"))))
-        .as("auc"))
+      .select(col("n_pos"), col("n_neg"),
+        r6((dbl(col("r1_x2") - col("n_pos") * (col("n_pos") + lit(1))))
+          / (lit(2.0) * dbl(col("n_pos")) * dbl(col("n_neg"))))
+          .as("auc"))
   }
+
+  /** ROC AUC (r10) of the fitted IRLS scores over the whole corpus. */
+  val modelAuc: QFn = (s, dir) => aucOf(irlsScored(s, dir))
+
+  // ---- the histogram split finder (tree_stump_train, gbm_round,
+  // gbm_tree_round): 16-bin features b1/b2, a (parts..., feat, bin)
+  // histogram, prefix-sum candidates, the (gain DESC, feat, bin) argmax
+  // and the left/right routing. Each key brings its own gain.
+
+  /** Corpus min/max of x1 and x2, the range the 16 bins are cut from. */
+  private def featRange: Seq[Column] =
+    Seq(min(col("x1")).as("mn1"), max(col("x1")).as("mx1"),
+      min(col("x2")).as("mn2"), max(col("x2")).as("mx2"))
+
+  /** b1, b2: x1, x2 binned against featRange's columns. An explicit NULL
+    * bin for a NULL feature: least() SKIPS nulls in BOTH engines, which
+    * would silently bin missing values at 15. */
+  private def featBins: Seq[Column] = {
+    def bin(x: Column, mn: Column, mx: Column): Column =
+      when(x.isNotNull,
+        least(floor(((x - mn) / (mx - mn)) * lit(16.0)), lit(15L)))
+    Seq(bin(col("x1"), col("mn1"), col("mx1")).as("b1"),
+      bin(col("x2"), col("mn2"), col("mx2")).as("b2"))
+  }
+
+  /** The (parts..., feat, bin) histogram of binned rows: each row counts
+    * once per feature under its bin, as n plus the given `sums`. NULL
+    * feature values (NULL bin) are excluded in BOTH engines by
+    * construction: Spark windows order NULLs first, DuckDB's last — an
+    * unfiltered NULL group would be counted into every real bin's prefix
+    * on one side only. */
+  private[graft] def splitHist(rows: DataFrame, parts: Seq[String],
+      sums: Column*): DataFrame =
+    rows.select(col("*"), inline(array(
+        struct(lit("x1").as("feat"), col("b1").as("bin")),
+        struct(lit("x2").as("feat"), col("b2").as("bin")))))
+      .filter(col("bin").isNotNull)
+      .groupBy((parts :+ "feat" :+ "bin").map(col): _*)
+      .agg(count(lit(1)).as("n"), sums: _*)
+
+  /** Split candidates over a splitHist histogram: the populated bin
+    * boundaries of each (parts..., feat), with exclusive prefix sums
+    * `<c>l` (left of the boundary, `zero` when empty) and totals `<c>t`
+    * for n and each named sum column c, plus nr = nt − nl. The first
+    * bin is never a candidate (nl > 0: nothing would go left). */
+  private[graft] def splitCands(hist: DataFrame, parts: Seq[String],
+      sums: Seq[(String, Column)]): DataFrame = {
+    val pf = (parts :+ "feat").map(col)
+    val wB = Window.partitionBy(pf: _*).orderBy(col("bin"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val wAll = Window.partitionBy(pf: _*)
+    val cs = ("n" -> lit(0L)) +: sums
+    val left = cs.foldLeft(hist) { case (df, (c, zero)) =>
+      df.withColumn(s"${c}l", coalesce(sum(col(c)).over(wB), zero))
+    }
+    cs.foldLeft(left) { case (df, (c, _)) =>
+      df.withColumn(s"${c}t", sum(col(c)).over(wAll))
+    }
+      .filter(col("nl") > 0)
+      .withColumn("nr", col("nt") - col("nl"))
+  }
+
+  /** The best candidate per `parts` group under (gain DESC, feat, bin);
+    * callers r6-round the gain first so near-ties are engine-identical. */
+  private[graft] def bestSplit(cand: DataFrame, parts: Seq[String])
+      : DataFrame = {
+    val w = Window.partitionBy(parts.map(col): _*)
+      .orderBy(col("gain").desc, col("feat"), col("bin"))
+    cand.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+  }
+
+  /** True when a binned row falls LEFT of the split (feat, bin). */
+  private[graft] def goesLeft(feat: Column, bin: Column): Column =
+    when(feat === "x1", col("b1")).otherwise(col("b2")) < bin
 
   /** Gini impurity 1 − (p/n)² − ((n−p)/n)² as one mirrored double
     * expression over exact BIGINT counts. */
@@ -832,52 +921,19 @@ object StatsQ {
   val treeStumpTrain: QFn = (s, dir) => {
     val base = irlsBase(s, dir)
       .select(col("y").cast("long").as("yl"), col("x1"), col("x2"))
-    val mm = base.agg(min(col("x1")).as("mn1"), max(col("x1")).as("mx1"),
-      min(col("x2")).as("mn2"), max(col("x2")).as("mx2"))
-    def bin(x: Column, mn: Column, mx: Column): Column =
-      // explicit NULL bin for a NULL feature: least() SKIPS nulls in
-      // BOTH engines, which would silently bin missing values at 15
-      when(x.isNotNull,
-        least(floor(((x - mn) / (mx - mn)) * lit(16.0)), lit(15L)))
+    val mm = base.agg(featRange.head, featRange.tail: _*)
     val rows = base.crossJoin(broadcast(mm))
-      .select(col("yl"),
-        bin(col("x1"), col("mn1"), col("mx1")).as("b1"),
-        bin(col("x2"), col("mn2"), col("mx2")).as("b2"))
+      .select((col("yl") +: featBins): _*)
       .ckpt() // the binned matrix — scanned by both levels
-    // One level: histogram → boundary candidates via prefix sums →
-    // best split per node under (gain_r6 DESC, feat, bin).
-    def level(df: org.apache.spark.sql.DataFrame)
-        : org.apache.spark.sql.DataFrame = {
-      val h = df.select(col("node"), col("yl"), inline(array(
-          struct(lit("x1").as("feat"), col("b1").as("bin")),
-          struct(lit("x2").as("feat"), col("b2").as("bin")))))
-        // NULL feature values (NULL bin) are excluded from the histogram
-        // in BOTH engines by construction: Spark windows order NULLs
-        // first, DuckDB's last — an unfiltered NULL group would be
-        // counted into every real bin's prefix on one side only.
-        .filter(col("bin").isNotNull)
-        .groupBy(col("node"), col("feat"), col("bin"))
-        .agg(count(lit(1)).as("n"), sum(col("yl")).as("p"))
-      val wB = Window.partitionBy(col("node"), col("feat"))
-        .orderBy(col("bin"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val wAll = Window.partitionBy(col("node"), col("feat"))
-      val cand = h
-        .withColumn("nl", coalesce(sum(col("n")).over(wB), lit(0L)))
-        .withColumn("pl", coalesce(sum(col("p")).over(wB), lit(0L)))
-        .withColumn("nt", sum(col("n")).over(wAll))
-        .withColumn("pt", sum(col("p")).over(wAll))
-        .filter(col("nl") > 0)
-        .withColumn("nr", col("nt") - col("nl"))
+    // One level: Gini gain over the candidates, best split per node.
+    def level(df: DataFrame): DataFrame = {
+      val cand = splitCands(splitHist(df, Seq("node"), sum(col("yl")).as("p")),
+          Seq("node"), Seq("p" -> lit(0L)))
         .withColumn("pr", col("pt") - col("pl"))
       val gain = stumpGini(col("nt"), col("pt")) -
         (dbl(col("nl")) / dbl(col("nt"))) * stumpGini(col("nl"), col("pl")) -
         (dbl(col("nr")) / dbl(col("nt"))) * stumpGini(col("nr"), col("pr"))
-      val wBest = Window.partitionBy(col("node"))
-        .orderBy(col("gain").desc, col("feat"), col("bin"))
-      cand.withColumn("gain", r6(gain))
-        .withColumn("rn", row_number().over(wBest))
-        .filter(col("rn") === 1)
+      bestSplit(cand.withColumn("gain", r6(gain)), Seq("node"))
         .select(col("node"), col("feat"), col("bin"), col("gain"),
           col("nl"), col("pl"), col("nr"), col("pr"))
     }
@@ -885,8 +941,8 @@ object StatsQ {
       col("b1"), col("b2"))).ckpt()
     val assigned = rows.crossJoin(broadcast(
         best0.select(col("feat").as("bf"), col("bin").as("bb"))))
-      .select(when(when(col("bf") === "x1", col("b1")).otherwise(col("b2"))
-          < col("bb"), lit(1L)).otherwise(lit(2L)).as("node"),
+      .select(when(goesLeft(col("bf"), col("bb")), lit(1L)).otherwise(lit(2L))
+          .as("node"),
         col("yl"), col("b1"), col("b2"))
     val allBest = best0.unionByName(level(assigned))
     allBest.crossJoin(broadcast(mm))
@@ -902,6 +958,45 @@ object StatsQ {
         r6(dbl(col("pr")) / dbl(col("nr"))).as("leaf_right"))
       .orderBy(col("node"))
   }
+
+  /** The boosting start shared by both gbm keys: `keep` columns, the
+    * base score F₀ = ln(p̄/(1−p̄)) as margin `f` and the binned b1, b2 of
+    * every row of `rows`, with the feature range and p̄ taken from
+    * `train`; checkpointed as round 1's margin frame. */
+  private def boostStart(rows: DataFrame, train: DataFrame,
+      keep: Seq[Column]): DataFrame = {
+    val mm = train.agg(featRange.head, (featRange.tail :+
+      sum(col("y").cast("long")).as("npos") :+ count(lit(1)).as("nn")): _*)
+    rows.crossJoin(broadcast(mm))
+      .withColumn("f",
+        log(dbl(col("npos")) / (dbl(col("nn")) - dbl(col("npos")))))
+      .select((keep ++ (col("f") +: featBins)): _*)
+      .ckpt()
+  }
+
+  /** Per-row p = σ(f), gradient g = p − y and hessian h = p(1−p). */
+  private def gradHess(cur: DataFrame): DataFrame =
+    cur.withColumn("p", sigmoid(col("f")))
+      .withColumn("g", col("p") - col("y"))
+      .withColumn("h", col("p") * (lit(1.0) - col("p")))
+
+  /** gbm's Newton split candidates per (parts...): pinned (g, h)
+    * histogram sums, exact decimal differences, THEN one double cast per
+    * factor, gain ½(G_L²/H_L + G_R²/H_R − G_T²/H_T) (r6 before the
+    * argmax) and the Newton leaves wl, wr = −η·G/H (η = 0.3). */
+  private def newtonSplits(rows: DataFrame, parts: Seq[String]): DataFrame =
+    splitCands(splitHist(rows, parts, sum(pin(col("g"))).as("g"),
+        sum(pin(col("h"))).as("h")), parts,
+        Seq("g" -> pin(lit(0)), "h" -> pin(lit(0))))
+      .withColumn("gr", dbl(col("gt") - col("gl")))
+      .withColumn("hr", dbl(col("ht") - col("hl")))
+      .withColumn("gld", dbl(col("gl"))).withColumn("hld", dbl(col("hl")))
+      .withColumn("gtd", dbl(col("gt"))).withColumn("htd", dbl(col("ht")))
+      .withColumn("gain", r6((col("gld") * col("gld") / col("hld") +
+        col("gr") * col("gr") / col("hr") -
+        col("gtd") * col("gtd") / col("htd")) * lit(0.5)))
+      .withColumn("wl", lit(-0.3) * col("gld") / col("hld"))
+      .withColumn("wr", lit(-0.3) * col("gr") / col("hr"))
 
   /** GRADIENT-BOOSTING trajectory, 2 Newton rounds (r11) — the actual
     * XGBoost math (Chen & Guestrin KDD'16 §2) on top of
@@ -919,28 +1014,43 @@ object StatsQ {
     * hessian, gain, or leaf cannot reproduce. Scale shape per round:
     * histogram pass + loss passes over the checkpointed margin frame +
     * a 32-row candidate table — the real per-round GBM cost profile. */
-  /** Midrank ROC AUC of a scored frame (pv = r6-rounded score, y1 = 0/1
-    * long) as a 1-row (auc) aggregate — model_auc's rank-sum machinery
-    * extracted so evaluation keys can grade arbitrary models on
-    * arbitrary slices. The window runs over the DISTINCT r6-score table
-    * (≤ 10⁶+1 rows by rounding — the bounded-window convention). */
-  private def aucOf(scored: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val pooled = scored.groupBy(col("pv"))
-      .agg(count(lit(1)).as("c"), sum(col("y1")).as("c1"))
-    val wBefore = Window.orderBy(col("pv"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    pooled
-      .withColumn("rank2",
-        lit(2) * coalesce(sum(col("c")).over(wBefore), lit(0L))
-          + col("c") + lit(1))
-      .agg(sum(col("c1")).as("n_pos"),
-        sum(col("c") - col("c1")).as("n_neg"),
-        sum(col("c1") * col("rank2")).as("r1_x2"))
-      .select(
-        r6((dbl(col("r1_x2") - col("n_pos") * (col("n_pos") + lit(1))))
-          / (lit(2.0) * dbl(col("n_pos")) * dbl(col("n_neg"))))
-          .as("auc"))
+  val gbmRound: QFn = (s, dir) => {
+    val base = irlsBase(s, dir)
+    // margin frame (y, f, b1, b2), re-checkpointed per round
+    var cur = boostStart(base, base, Seq(col("y")))
+    var trail: DataFrame = null
+    for (round <- 1 to 2) {
+      // LAZY p/g/h (r16, the gbm_tree_round ckpt thinning): consumers
+      // re-derive the sigmoid arithmetic from the round's checkpointed
+      // margin frame instead of paying a materialize+rescan of the
+      // 600k-row frame per round. best/cur keep their checkpoints.
+      val p = gradHess(cur)
+      val lb = p.agg(sum(lossTerm(col("p"))).as("l"),
+        count(lit(1)).as("cnt"))
+      // one node ⇒ one unpartitioned 31-row argmax window
+      val best = bestSplit(newtonSplits(p, Seq()), Seq())
+        .ckpt() // 1 row; consumed by the update AND the report
+      cur = p.crossJoin(broadcast(best.select(col("feat").as("bf"),
+          col("bin").as("bb"), col("wl"), col("wr"))))
+        .withColumn("f", col("f") +
+          when(goesLeft(col("bf"), col("bb")), col("wl")).otherwise(col("wr")))
+        .select(col("y"), col("f"), col("b1"), col("b2"))
+        .ckpt()
+      val la = cur
+        .withColumn("p", sigmoid(col("f")))
+        .agg(sum(lossTerm(col("p"))).as("l2"))
+      val row = best.crossJoin(broadcast(lb)).crossJoin(broadcast(la))
+        .select(lit(round.toLong).as("round"), col("feat"),
+          col("bin").as("split_bin"), col("gain"),
+          col("nl").as("n_left"), col("nr").as("n_right"),
+          r6(col("gld")).as("g_left"), r6(col("hld")).as("h_left"),
+          r6(col("gr")).as("g_right"), r6(col("hr")).as("h_right"),
+          r6(col("wl")).as("leaf_left"), r6(col("wr")).as("leaf_right"),
+          r6(dbl(col("l")) / col("cnt")).as("logloss_before"),
+          r6(dbl(col("l2")) / col("cnt")).as("logloss_after"))
+      trail = if (trail == null) row else trail.unionByName(row)
+    }
+    trail.orderBy(col("round"))
   }
 
   /** GBM with DEPTH-2 TREES per boosting round + HELD-OUT evaluation
@@ -960,60 +1070,11 @@ object StatsQ {
     * window is bounded (histogram bins, distinct r6 scores); splits and
     * leaves ride 1-row broadcasts. */
   val gbmTreeRound: QFn = (s, dir) => {
-    def pin(c: Column) = dec(c, 30, 14)
-    def lossTerm(p: Column) = pin(-(col("y") * log(p) +
-      (lit(1.0) - col("y")) * log(lit(1.0) - p)))
     val base0 = irlsBase(s, dir)
       .withColumn("ho", col("event_id") % 5 === 0)
-    val mm = base0.filter(!col("ho")).agg(
-      min(col("x1")).as("mn1"), max(col("x1")).as("mx1"),
-      min(col("x2")).as("mn2"), max(col("x2")).as("mx2"),
-      sum(col("y").cast("long")).as("npos"), count(lit(1)).as("nn"))
-    def bin(x: Column, mn: Column, mx: Column): Column =
-      // explicit NULL bin for a NULL feature: least() SKIPS nulls in
-      // BOTH engines, which would silently bin missing values at 15
-      when(x.isNotNull,
-        least(floor(((x - mn) / (mx - mn)) * lit(16.0)), lit(15L)))
-    var cur = base0.crossJoin(broadcast(mm))
-      .withColumn("f",
-        log(dbl(col("npos")) / (dbl(col("nn")) - dbl(col("npos")))))
-      .select(col("ho"), col("y"), col("f"),
-        bin(col("x1"), col("mn1"), col("mx1")).as("b1"),
-        bin(col("x2"), col("mn2"), col("mx2")).as("b2"))
-      .ckpt()
-    val zero = lit(0).cast("decimal(30,14)")
-    // prefix-sum split candidates over a (parts..., feat, bin) histogram
-    def cands(hist: org.apache.spark.sql.DataFrame, parts: Seq[String]) = {
-      val pc = parts.map(col) :+ col("feat")
-      val wB = Window.partitionBy(pc: _*).orderBy(col("bin"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val wAll = Window.partitionBy(pc: _*)
-      hist
-        .withColumn("nl", coalesce(sum(col("n")).over(wB), lit(0L)))
-        .withColumn("gl", coalesce(sum(col("gs")).over(wB), zero))
-        .withColumn("hl", coalesce(sum(col("hs")).over(wB), zero))
-        .withColumn("nt", sum(col("n")).over(wAll))
-        .withColumn("gt", sum(col("gs")).over(wAll))
-        .withColumn("ht", sum(col("hs")).over(wAll))
-        .filter(col("nl") > 0)
-        .withColumn("nr", col("nt") - col("nl"))
-        .withColumn("gr", dbl(col("gt") - col("gl")))
-        .withColumn("hr", dbl(col("ht") - col("hl")))
-        .withColumn("gld", dbl(col("gl"))).withColumn("hld", dbl(col("hl")))
-        .withColumn("gtd", dbl(col("gt"))).withColumn("htd", dbl(col("ht")))
-        .withColumn("gain", r6((col("gld") * col("gld") / col("hld") +
-          col("gr") * col("gr") / col("hr") -
-          col("gtd") * col("gtd") / col("htd")) * lit(0.5)))
-    }
-    def histOf(df: org.apache.spark.sql.DataFrame, parts: Seq[String]) =
-      df.select((parts.map(col) :+ col("g") :+ col("h") :+ inline(array(
-          struct(lit("x1").as("feat"), col("b1").as("bin")),
-          struct(lit("x2").as("feat"), col("b2").as("bin"))))): _*)
-        .filter(col("bin").isNotNull)
-        .groupBy((parts.map(col) :+ col("feat") :+ col("bin")): _*)
-        .agg(count(lit(1)).as("n"), sum(pin(col("g"))).as("gs"),
-          sum(pin(col("h"))).as("hs"))
-    var trail: org.apache.spark.sql.DataFrame = null
+    var cur = boostStart(base0, base0.filter(!col("ho")),
+      Seq(col("ho"), col("y")))
+    var trail: DataFrame = null
     for (round <- 1 to 2) {
       // p/g/h and the node routing stay LAZY (r16 — 5 checkpoint jobs
       // per round → 3): every consumer re-derives them from the round's
@@ -1023,27 +1084,17 @@ object StatsQ {
       // 1-row split frames (best0/best1) KEEP their checkpoints: r15
       // measured that making those lazy re-runs the upstream histogram
       // scan in every consumer (~25% slower).
-      val p = cur.withColumn("p", lit(1.0) / (lit(1.0) + exp(-col("f"))))
-        .withColumn("g", col("p") - col("y"))
-        .withColumn("h", col("p") * (lit(1.0) - col("p")))
-      val best0 = cands(histOf(p.filter(!col("ho")), Seq()), Seq())
-        .withColumn("rn", row_number().over(
-          Window.orderBy(col("gain").desc, col("feat"), col("bin"))))
-        .filter(col("rn") === 1)
+      val p = gradHess(cur)
+      val best0 = bestSplit(newtonSplits(p.filter(!col("ho")), Seq()), Seq())
         .ckpt() // 1 row
       val assigned = p.crossJoin(broadcast(
           best0.select(col("feat").as("rf"), col("bin").as("rb"))))
         .withColumn("node",
-          when(when(col("rf") === "x1", col("b1")).otherwise(col("b2"))
-            < col("rb"), lit(1L)).otherwise(lit(2L)))
-      val best1 = cands(histOf(assigned.filter(!col("ho")), Seq("node")),
-          Seq("node"))
-        .withColumn("rn", row_number().over(Window.partitionBy(col("node"))
-          .orderBy(col("gain").desc, col("feat"), col("bin"))))
-        .filter(col("rn") === 1)
+          when(goesLeft(col("rf"), col("rb")), lit(1L)).otherwise(lit(2L)))
+      val best1 = bestSplit(
+          newtonSplits(assigned.filter(!col("ho")), Seq("node")), Seq("node"))
         .select(col("node"), col("feat").as("cf"), col("bin").as("cb"),
-          (lit(-0.3) * col("gld") / col("hld")).as("wl"),
-          (lit(-0.3) * col("gr") / col("hr")).as("wr"))
+          col("wl"), col("wr"))
         .ckpt() // <= 2 rows
       val nodeStats = assigned.filter(!col("ho"))
         .groupBy(col("node"))
@@ -1053,22 +1104,19 @@ object StatsQ {
         .join(broadcast(best1), Seq("node"), "left")
         .join(broadcast(nodeStats), Seq("node"))
         .withColumn("f", col("f") + when(col("cf").isNull, col("wn"))
-          .otherwise(when(
-            when(col("cf") === "x1", col("b1")).otherwise(col("b2"))
-              < col("cb"), col("wl")).otherwise(col("wr"))))
+          .otherwise(when(goesLeft(col("cf"), col("cb")), col("wl"))
+            .otherwise(col("wr"))))
         .select(col("ho"), col("y"), col("f"), col("b1"), col("b2"))
         .ckpt()
       // both slices' losses in ONE conditional aggregate (one scan)
       val losses = cur
-        .withColumn("p", lit(1.0) / (lit(1.0) + exp(-col("f"))))
+        .withColumn("p", sigmoid(col("f")))
         .agg(sum(when(!col("ho"), lossTerm(col("p")))).as("l"),
           count(when(!col("ho"), lit(1))).as("cnt"),
           sum(when(col("ho"), lossTerm(col("p")))).as("hlo"),
           count(when(col("ho"), lit(1))).as("hcnt"))
-      val hoScored = cur.filter(col("ho"))
-        .withColumn("p", lit(1.0) / (lit(1.0) + exp(-col("f"))))
-      val hoAuc = aucOf(hoScored
-        .select(r6(col("p")).as("pv"), col("y").cast("long").as("y1")))
+      val hoAuc = aucOf(cur.filter(col("ho"))
+        .withColumn("p", sigmoid(col("f"))))
       val children = best1.agg(
         max(when(col("node") === 1, col("cf"))).as("feat_l"),
         max(when(col("node") === 1, col("cb"))).as("bin_l"),
@@ -1088,108 +1136,11 @@ object StatsQ {
           col("auc").as("holdout_auc"))
       trail = if (trail == null) row else trail.unionByName(row)
     }
-    val irlsAuc = aucOf(irlsScored(s, dir)
-      .filter(col("event_id") % 5 === 0)
-      .select(r6(col("p")).as("pv"), col("y").cast("long").as("y1")))
+    val irlsAuc = aucOf(irlsScored(s, dir).filter(col("event_id") % 5 === 0))
     trail
       .crossJoin(broadcast(irlsAuc
         .select(col("auc").as("irls_holdout_auc"))))
       .orderBy(col("round"))
-  }
-
-  val gbmRound: QFn = (s, dir) => {
-    def pin(c: Column) = dec(c, 30, 14)
-    def lossTerm(p: Column) = pin(-(col("y") * log(p) +
-      (lit(1.0) - col("y")) * log(lit(1.0) - p)))
-    val base = irlsBase(s, dir)
-    val mm = base.agg(min(col("x1")).as("mn1"), max(col("x1")).as("mx1"),
-      min(col("x2")).as("mn2"), max(col("x2")).as("mx2"),
-      sum(col("y").cast("long")).as("npos"), count(lit(1)).as("nn"))
-    def bin(x: Column, mn: Column, mx: Column): Column =
-      // explicit NULL bin for a NULL feature: least() SKIPS nulls in
-      // BOTH engines, which would silently bin missing values at 15
-      when(x.isNotNull,
-        least(floor(((x - mn) / (mx - mn)) * lit(16.0)), lit(15L)))
-    // margin frame (y, f, b1, b2), re-checkpointed per round
-    var cur = base.crossJoin(broadcast(mm))
-      .withColumn("f",
-        log(dbl(col("npos")) / (dbl(col("nn")) - dbl(col("npos")))))
-      .select(col("y"), col("f"),
-        bin(col("x1"), col("mn1"), col("mx1")).as("b1"),
-        bin(col("x2"), col("mn2"), col("mx2")).as("b2"))
-      .ckpt()
-    var trail: org.apache.spark.sql.DataFrame = null
-    for (round <- 1 to 2) {
-      // LAZY p/g/h (r16, the gbm_tree_round ckpt thinning): consumers
-      // re-derive the sigmoid arithmetic from the round's checkpointed
-      // margin frame instead of paying a materialize+rescan of the
-      // 600k-row frame per round. best/cur keep their checkpoints.
-      val p = cur.withColumn("p", lit(1.0) / (lit(1.0) + exp(-col("f"))))
-        .withColumn("g", col("p") - col("y"))
-        .withColumn("h", col("p") * (lit(1.0) - col("p")))
-      val lb = p.agg(sum(lossTerm(col("p"))).as("l"),
-        count(lit(1)).as("cnt"))
-      val hist = p.select(col("g"), col("h"), inline(array(
-          struct(lit("x1").as("feat"), col("b1").as("bin")),
-          struct(lit("x2").as("feat"), col("b2").as("bin")))))
-        // NULL bins out of the histogram in both engines — the
-        // tree_stump_train NULLS FIRST/LAST prefix-sum hazard.
-        .filter(col("bin").isNotNull)
-        .groupBy(col("feat"), col("bin"))
-        .agg(count(lit(1)).as("n"), sum(pin(col("g"))).as("gs"),
-          sum(pin(col("h"))).as("hs"))
-      val wB = Window.partitionBy(col("feat")).orderBy(col("bin"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val wAll = Window.partitionBy(col("feat"))
-      val zero = lit(0).cast("decimal(30,14)")
-      val cand = hist
-        .withColumn("nl", coalesce(sum(col("n")).over(wB), lit(0L)))
-        .withColumn("gl", coalesce(sum(col("gs")).over(wB), zero))
-        .withColumn("hl", coalesce(sum(col("hs")).over(wB), zero))
-        .withColumn("nt", sum(col("n")).over(wAll))
-        .withColumn("gt", sum(col("gs")).over(wAll))
-        .withColumn("ht", sum(col("hs")).over(wAll))
-        .filter(col("nl") > 0)
-        .withColumn("nr", col("nt") - col("nl"))
-        // exact decimal differences, THEN one double cast per factor
-        .withColumn("gr", dbl(col("gt") - col("gl")))
-        .withColumn("hr", dbl(col("ht") - col("hl")))
-        .withColumn("gld", dbl(col("gl"))).withColumn("hld", dbl(col("hl")))
-        .withColumn("gtd", dbl(col("gt"))).withColumn("htd", dbl(col("ht")))
-      val gain = (col("gld") * col("gld") / col("hld") +
-        col("gr") * col("gr") / col("hr") -
-        col("gtd") * col("gtd") / col("htd")) * lit(0.5)
-      // one node ⇒ one unpartitioned 31-row argmax window
-      val wBest = Window.orderBy(col("gain").desc, col("feat"), col("bin"))
-      val best = cand.withColumn("gain", r6(gain))
-        .withColumn("rn", row_number().over(wBest))
-        .filter(col("rn") === 1)
-        .ckpt() // 1 row; consumed by the update AND the report
-      cur = p.crossJoin(broadcast(
-          best.select(col("feat").as("bf"), col("bin").as("bb"),
-            (lit(-0.3) * col("gld") / col("hld")).as("wl"),
-            (lit(-0.3) * col("gr") / col("hr")).as("wr"))))
-        .withColumn("f", col("f") + when(
-          when(col("bf") === "x1", col("b1")).otherwise(col("b2"))
-            < col("bb"), col("wl")).otherwise(col("wr")))
-        .select(col("y"), col("f"), col("b1"), col("b2"))
-        .ckpt()
-      val la = cur
-        .withColumn("p", lit(1.0) / (lit(1.0) + exp(-col("f"))))
-        .agg(sum(lossTerm(col("p"))).as("l2"))
-      val row = best.crossJoin(broadcast(lb)).crossJoin(broadcast(la))
-        .select(lit(round.toLong).as("round"), col("feat"),
-          col("bin").as("split_bin"), col("gain"),
-          col("nl").as("n_left"), col("nr").as("n_right"),
-          r6(col("gld")).as("g_left"), r6(col("hld")).as("h_left"),
-          r6(col("gr")).as("g_right"), r6(col("hr")).as("h_right"),
-          r6(lit(-0.3) * col("gld") / col("hld")).as("leaf_left"),
-          r6(lit(-0.3) * col("gr") / col("hr")).as("leaf_right"),
-          r6(dbl(col("l")) / col("cnt")).as("logloss_before"),
-          r6(dbl(col("l2")) / col("cnt")).as("logloss_after"))
-      trail = if (trail == null) row else trail.unionByName(row)
-    }
-    trail.orderBy(col("round"))
   }
 
   /** IRLS oracle: two generated Newton steps, each with the identical

@@ -350,7 +350,13 @@ object StreamQ {
     *     FileSystem manager renames through RawLocalFileSystem.rename, a
     *     POSIX rename, which is atomic on the local disk where every
     *     StreamQ checkpoint lives (under core.scratchRoot). Spark's
-    *     checkpoint checksums (the `N.delta.crc` files) still wrap it.
+    *     checkpoint checksums still wrap it, for state files only: each
+    *     state-store `N.delta` gets an `N.delta.crc`, verified when a
+    *     restart replays it; offsets, commits, source logs, metadata and
+    *     schema files carry only Hadoop's local `.N.crc`. Runs write no
+    *     `N.snapshot` (snapshots come from background maintenance), so a
+    *     restart's "No checksum file found for …/1.snapshot" WARN is a
+    *     probe for a missing file, under either manager.
     *   - `spark.sql.artifact.isolation.enabled` = false. Each query runs
     *     in a clone of the session, and the clone reads this conf when it
     *     is created at start. With isolation on, every job of the clone

@@ -359,7 +359,6 @@ object TextQ {
     * proven equivalent in CharBigramsSpec and the DuckDB oracle is
     * unchanged. */
   val ngramProfile: QFn = (s, dir) => {
-    graft.expressions.CharBigrams.register(s)
     val w = Window.partitionBy(col("lang"))
       .orderBy(col("cnt").desc, col("bg"))
     t(s, dir, "documents")
@@ -658,7 +657,6 @@ object TextQ {
     * r6-round BEFORE the 0.92 threshold and the ranking, so the
     * cross-engine boundary is pinned on both sides. */
   val jwLinkage: QFn = (s, dir) => {
-    graft.expressions.JaroWinkler.register(s)
     // canonicalize first (the standard linkage move: distinct names carry
     // their record counts, so similarity runs on the NAME domain — which
     // saturates — and record-pair multiplicity is recovered by product)
@@ -698,7 +696,6 @@ object TextQ {
     * name-domain join; propagation shuffles the NAME graph (vocabulary-
     * bounded); survivorship is one window over cluster keys. */
   val entityDedupE2e: QFn = (s, dir) => {
-    graft.expressions.JaroWinkler.register(s)
     val names = t(s, dir, "part")
       .select(lower(col("p_name")).as("nm"))
       .groupBy(col("nm")).agg(count(lit(1)).as("cnt"))
@@ -1258,14 +1255,14 @@ object TextQ {
       pc.join(u, "w").join(v, "c")
         .withColumn("xp",
           dims.map(j => col(s"u$j") * col(s"v$j")).reduce(_ + _))
-        .withColumn("sp", lit(1.0) / (lit(1.0) + exp(-col("xp"))))
+        .withColumn("sp", sigmoid(col("xp")))
     def negScore(u: org.apache.spark.sql.DataFrame,
         v: org.apache.spark.sql.DataFrame) =
       negs.join(u, "w").join(nvOf(v), "nc")
         .withColumn("xn",
           dims.map(j => col(s"u$j") * col(s"nv$j")).reduce(_ + _))
-        .withColumn("sn", lit(1.0) / (lit(1.0) + exp(-col("xn"))))
-        .withColumn("snm", lit(1.0) / (lit(1.0) + exp(col("xn"))))
+        .withColumn("sn", sigmoid(col("xn")))
+        .withColumn("snm", sigmoid(-col("xn")))
     val cntD = dec(col("cnt"), 10, 0)
     // sums are exact decimals; rounded to the output grain (6) BEFORE the
     // double cast so the decimal→double conversion stays inside 2^53

@@ -6,7 +6,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField,
   StructType}
-import graft.expressions.DotProduct
 import core._
 
 /** Embedding / similarity-search queries over `embeddings` (SURVEY.md §2.10
@@ -34,7 +33,6 @@ object VectorQ {
 
   /** vec_id, v (double[]), nrm — the shared per-row prep. */
   private def unitBase(s: SparkSession, dir: String) = {
-    DotProduct.register(s)
     t(s, dir, "embeddings")
       .select(col("vec_id"), col("label"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -106,7 +104,6 @@ object VectorQ {
   /** docs ⋈ embeddings ⋈ per-lang rollup: text-length + vector-norm stats.
     * Norms are per-row identical doubles, decimal-fixed before the sum. */
   val multimodalJoin: QFn = (s, dir) => {
-    DotProduct.register(s)
     val v = transform(col("embedding"), x => x.cast("double"))
     t(s, dir, "documents")
       .join(t(s, dir, "embeddings"), col("doc_id") === col("vec_id"))
@@ -308,9 +305,10 @@ object VectorQ {
     * session reading the sidecar sees byte-identical geometry. */
   private[graft] def ivfCoarse(s: SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
-    // consumers score probes with graft_dot on THIS session; the warm
-    // (sidecar-hit) path never touches unitBase, so register here
-    DotProduct.register(s)
+    // consumers score probes with graft_dot on THIS session, and the
+    // warm (sidecar-hit) path reads only the sidecar, never Tables: so
+    // prepare the session here, which registers graft_dot
+    graft.Tables.prepareSession(s)
     // atomic publish (r16): generation dir + rename via core.sidecarOnce
     // — a crashed build can no longer leave a partial dir that
     // `exists()` would treat as built, and independent sidecars no
@@ -495,7 +493,6 @@ object VectorQ {
     * write sized to the batch — cost tracks batch size; the base index
     * build is paid once (ScalingSpec gates the amortization). */
   val incrementalAnn: QFn = (s, dir) => {
-    DotProduct.register(s)
     val root = annIndexDir(s, dir)
     val cents = s.read.parquet(s"$root/centroids")
       .select(col("label").as("clabel"), col("cvec"))
@@ -553,7 +550,6 @@ object VectorQ {
     * keyed by cell (at 100 TB, per-cell file groups compact
     * independently — embarrassingly parallel). */
   val annIndexCompact: QFn = (s, dir) => {
-    DotProduct.register(s)
     val root = annIndexDir(s, dir)
     val cents = s.read.parquet(s"$root/centroids")
       .select(col("label").as("clabel"), col("cvec"))

@@ -385,6 +385,25 @@ object core {
 
   def dbl(c: Column): Column = c.cast("double")
 
+  /** The exact-sum pin of the training keys: a per-row double cast to
+    * DECIMAL(30,14) before `sum`, so the sum is exact and order-free
+    * (identical per-row doubles pin to identical decimals in both
+    * engines). */
+  val pin: Column => Column = dec(_, 30, 14)
+
+  /** Logistic sigmoid 1/(1+e^−z), written once for every model key; the
+    * oracle SQL spells the same double expression. */
+  def sigmoid(z: Column): Column = {
+    import org.apache.spark.sql.functions.{exp, lit}
+    lit(1.0) / (lit(1.0) + exp(-z))
+  }
+
+  /** Pinned per-row log-loss −(y·ln p + (1−y)·ln(1−p)) of label `y`. */
+  def lossTerm(p: Column): Column = {
+    import org.apache.spark.sql.functions.{col, lit, log}
+    pin(-(col("y") * log(p) + (lit(1.0) - col("y")) * log(lit(1.0) - p)))
+  }
+
   /** Cross-engine rounding of a COMPUTED double. Spark's round() rounds the
     * shortest decimal repr (BigDecimal.valueOf → Double.toString, HALF_UP);
     * DuckDB rounds the binary value — a repr-tie like 0.8053285 splits the

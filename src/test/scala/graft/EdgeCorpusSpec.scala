@@ -425,6 +425,23 @@ class EdgeCorpusSpec extends SparkSpec {
     assert(rau.map(_.getAs[Long]("wau")).toSeq == Seq(3L, 3L))
   }
 
+  test("logistic_irls on constant features: the singular normal matrix " +
+    "yields NULL betas, not a divide-by-zero") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("edge_const").toString
+    // every row has value 100 and hour 0: x1 = 1 and x2 = 0 for all rows,
+    // so XᵀWX has a zero row/column and its determinant is exactly 0
+    val ts = java.sql.Timestamp.valueOf("2024-01-05 00:00:00")
+    Seq((1L, "click"), (2L, "purchase"), (3L, "click"), (4L, "click"))
+      .map { case (id, ty) => (id, ts, id, ty, 100.0, "{}") }
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val rows = SparkEntry.queries("logistic_irls")(spark, dir).collect()
+    assert(rows.length == 2)
+    for (r <- rows; c <- Seq("b0", "b1", "b2"))
+      assert(r.isNullAt(r.fieldIndex(c)), s"iter ${r.getAs[Long]("iter")}: $c")
+  }
+
   test("r10 event keys survive ties, nulls, absent channels, and " +
     "density-free user sets") {
     // markov: absent channels (view/signup never occur) must report a

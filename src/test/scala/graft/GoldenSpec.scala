@@ -36,6 +36,18 @@ class GoldenSpec extends SparkSpec {
     assert(golden.keySet == SparkEntry.queries.keySet)
   }
 
+  test("graft_* functions resolve on a fresh session: one key per " +
+    "function caller, each after a warm call built its sidecars") {
+    for (name <- Seq("mmr_select", "ann_ivf_knn", "multimodal_join",
+        "incremental_ann", "ann_index_compact", "ngram_profile",
+        "jw_linkage", "cms_heavy_hitters", "agg_topk_native",
+        "multimodal_neardup")) {
+      SparkEntry.queries(name)(spark, sf).collect()
+      val rows = SparkEntry.queries(name)(spark.newSession(), sf).collect()
+      assert((rows.length, GoldenGen.digest(rows)) == golden(name), name)
+    }
+  }
+
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"$name matches golden output under partition/split perturbation") {
       spark.sparkContext.setLogLevel("WARN")

@@ -754,6 +754,62 @@ class OperatorSpec extends SparkSpec {
     }
   }
 
+  test("split finder: equal r6 gains go to the lower feat, then the " +
+    "lower bin") {
+    import spark.implicits._
+    import graft.queries.StatsQ.bestSplit
+    // tied candidates listed worst-first: only the (feat, bin) tie-break
+    // can pick the winners (x1, 6) in node 0 and (x2, 3) in node 1
+    val cand = Seq(
+      (0L, "x2", 1L, 0.2500004), (0L, "x2", 5L, 0.2500001),
+      (0L, "x1", 9L, 0.2499996), (0L, "x1", 6L, 0.2500001),
+      (0L, "x1", 2L, 0.2499),
+      (1L, "x2", 8L, 0.5), (1L, "x2", 3L, 0.5))
+      .toDF("node", "feat", "bin", "raw").coalesce(1)
+      .withColumn("gain", graft.queries.core.r6(col("raw")))
+    val best = bestSplit(cand, Seq("node")).collect()
+      .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
+    assert(best == Map(0L -> ("x1", 6L), 1L -> ("x2", 3L)), best)
+  }
+
+  test("split finder: a NULL-bin row never enters any prefix") {
+    import spark.implicits._
+    import graft.queries.StatsQ.{splitCands, splitHist}
+    // row 1 has a NULL x1 bin: x1 sees 3 rows, x2 all 4
+    val rows = Seq[(Long, Long, Option[Long], Long)](
+      (0L, 1L, None, 0L), (0L, 0L, Some(0L), 1L),
+      (0L, 1L, Some(1L), 1L), (0L, 0L, Some(2L), 2L))
+      .toDF("node", "yl", "b1", "b2")
+    val cand = splitCands(splitHist(rows, Seq("node"), sum(col("yl")).as("p")),
+      Seq("node"), Seq("p" -> lit(0L))).collect()
+    def of(f: String) = cand.filter(_.getAs[String]("feat") == f)
+      .map(r => r.getAs[Long]("bin") -> (r.getAs[Long]("nl"),
+        r.getAs[Long]("nt"), r.getAs[Long]("pl"))).toMap
+    assert(of("x1") == Map(1L -> ((1L, 3L, 0L)), 2L -> ((2L, 3L, 1L))),
+      cand.mkString(","))
+    assert(of("x2") == Map(1L -> ((1L, 4L, 1L)), 2L -> ((3L, 4L, 2L))),
+      cand.mkString(","))
+  }
+
+  test("split finder: the first bin of each (node, feat) is never a " +
+    "candidate, and prefixes are exclusive") {
+    import spark.implicits._
+    import graft.queries.StatsQ.splitCands
+    val hist = Seq(
+      (0L, "x1", 3L, 2L, 1L), (0L, "x1", 5L, 4L, 0L), (0L, "x1", 7L, 1L, 1L),
+      (0L, "x2", 0L, 5L, 2L), (0L, "x2", 15L, 2L, 0L),
+      (1L, "x1", 2L, 3L, 3L), (1L, "x1", 4L, 1L, 0L))
+      .toDF("node", "feat", "bin", "n", "p")
+    val got = splitCands(hist, Seq("node"), Seq("p" -> lit(0L))).collect()
+      .map(r => (r.getAs[Long]("node"), r.getAs[String]("feat"),
+        r.getAs[Long]("bin")) -> (r.getAs[Long]("nl"), r.getAs[Long]("pl"),
+        r.getAs[Long]("nr"))).toMap
+    assert(got == Map(
+      (0L, "x1", 5L) -> ((2L, 1L, 5L)), (0L, "x1", 7L) -> ((6L, 1L, 1L)),
+      (0L, "x2", 15L) -> ((5L, 2L, 2L)),
+      (1L, "x1", 4L) -> ((3L, 3L, 1L))), got)
+  }
+
   test("logistic_irls: log-likelihood improves across Newton steps and " +
     "coefficients stay finite") {
     val rows = SparkEntry.queries("logistic_irls")(spark, sf).collect()
