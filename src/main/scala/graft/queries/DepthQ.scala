@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.ConnectedComponents
 import core._
 
 /** Round-3 depth additions (SURVEY.md §2.13): map-typed columns (derived
@@ -316,12 +317,12 @@ object DepthQ {
     * DENSITY member of the clustering family (kmeans partitions by
     * centroid, SemDeDup prunes within clusters, DBSCAN finds arbitrary-
     * shape dense regions + explicit NOISE — the outlier-aware clustering
-    * curation pipelines use on geo/embedding-like features): eps = the
-    * grid radius (exact integer dist² ≤ 4 000 000), minPts = 4
+    * curation pipelines use on geo/embedding-like features): eps = 400
+    * (exact integer dist² ≤ 160 000), minPts = 4
     * (neighborhood INCLUDING self). Cores = points with ≥ minPts
     * neighbors; clusters = connected components of the core–core
-    * eps-graph (min-label propagation to the DETECTED fixpoint — the
-    * label-sum Observation device, isolated cores self-cluster);
+    * eps-graph (`ConnectedComponents.minLabel`, the engine's one
+    * min-label fixpoint; isolated cores self-cluster);
     * borders join their lowest core-neighbor's cluster (the
     * deterministic resolution of DBSCAN's only order-dependence);
     * everything else is noise, reported as the cluster_id = −1 row.
@@ -377,31 +378,9 @@ object DepthQ {
       .join(core.select(col("id").as("uid_b")), "uid_b")
       .select(col("uid_a").as("src"), col("uid_b").as("dst"))
       .ckpt()
-    // min-label propagation over core edges; isolated cores self-seed
-    val lblSum = coalesce(sum(col("lbl")), lit(0L))
-    var (labels, Seq(prevSum)) = ckptObserved(
-      core.join(coreEdges.groupBy(col("src")).agg(min(col("dst")).as("mn")),
-          col("id") === col("src"), "left")
-        .select(col("id"),
-          least(col("id"), coalesce(col("mn"), col("id"))).as("lbl")),
-      lblSum)
-    var converged = false
-    while (!converged) {
-      val nb2 = coreEdges
-        .join(labels.select(col("id").as("dst"), col("lbl").as("dlbl")),
-          "dst")
-        .groupBy(col("src")).agg(min(col("dlbl")).as("nlbl"))
-      val (next, Seq(sumN)) = ckptObserved(
-        labels.join(nb2.select(col("src").as("id"), col("nlbl")),
-            Seq("id"), "left")
-          .select(col("id"),
-            least(col("lbl"), coalesce(col("nlbl"), col("lbl")))
-              .as("lbl")),
-        lblSum)
-      converged = sumN == prevSum
-      prevSum = sumN
-      labels = next
-    }
+    // clusters = min-label fixpoint over the core graph (coreEdges holds
+    // both directions); isolated cores label themselves
+    val (labels, _) = ConnectedComponents.minLabel(coreEdges, Some(core))
     val borders = nbr
       .join(labels.select(col("id").as("uid_b"), col("lbl")), "uid_b")
       .join(core.select(col("id").as("uid_a")), Seq("uid_a"), "left_anti")

@@ -2,15 +2,17 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.TextOps
+import graft.operators.{ConnectedComponents, TextOps}
 import core._
 
 /** Graph analytics over the word-adjacency graph (SURVEY.md §2.13): nodes
   * are the corpus vocabulary, directed edges are distinct consecutive
   * token pairs. Complements the iterative-computation family —
-  * ConnectedComponents (operators/) walks an undirected graph to a
-  * fixpoint; PageRank here runs the canonical damped power iteration with
-  * a fixed budget (3 rounds, how production rank jobs are scheduled).
+  * ConnectedComponents.minLabel (operators/) walks a directed edge list
+  * (a symmetric one for undirected components) to a min-label fixpoint,
+  * which scc_components colours with; PageRank here runs the canonical
+  * damped power iteration with a fixed budget (3 rounds, how production
+  * rank jobs are scheduled).
   *
   * Determinism (the kmeans_embed pattern, proven cross-engine): each
   * iteration's per-edge contribution rank/out_degree is a double computed
@@ -277,6 +279,26 @@ object GraphQ {
         r6(dbl(col("sc"))).as("aa_score"))
   }
 
+  /** The part co-purchase graph of label_propagation, kcore_peel and the
+    * Louvain keys: undirected edges `(a, b)`, `a < b`, between parts
+    * sharing an order in one ship year (the standard market-basket
+    * framing; the predicate is pushed to the parquet scan, so the build
+    * reads the slice, not the full fact). Checkpointed, because every
+    * round of each caller re-reads it; not cached across keys, so each
+    * key builds and times its own. */
+  private def coPurchase(s: SparkSession, dir: String): DataFrame = {
+    val li = t(s, dir, "lineitem")
+      .filter(col("l_shipdate") >= lit("1996-01-01") &&
+        col("l_shipdate") < lit("1997-01-01"))
+      .select(col("l_orderkey"), col("l_partkey"))
+    li.join(li.select(col("l_orderkey"), col("l_partkey").as("p2")),
+        Seq("l_orderkey"))
+      .filter(col("l_partkey") < col("p2"))
+      .select(col("l_partkey").as("a"), col("p2").as("b"))
+      .distinct()
+      .ckpt()
+  }
+
   /** Synchronous label propagation (r9) — community detection
     * (Raghavan et al. 2007, public algorithm), the fifth graph-family
     * member (components walk connectivity; LPA finds dense regions
@@ -301,20 +323,7 @@ object GraphQ {
     * each round's label table is checkpointed, same plan. */
   val labelPropagation: QFn = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    // one ship-year window, the standard market-basket framing — and
-    // the predicate is pushed to the parquet scan, so the graph build
-    // reads the slice, not the full fact
-    val li = t(s, dir, "lineitem")
-      .filter(col("l_shipdate") >= lit("1996-01-01") &&
-        col("l_shipdate") < lit("1997-01-01"))
-      .select(col("l_orderkey"), col("l_partkey"))
-    // materialized once: 3 rounds × (join + count) all re-read it
-    val und = li.join(li.select(col("l_orderkey"),
-        col("l_partkey").as("p2")), Seq("l_orderkey"))
-      .filter(col("l_partkey") < col("p2"))
-      .select(col("l_partkey").as("a"), col("p2").as("b"))
-      .distinct()
-      .ckpt()
+    val und = coPurchase(s, dir)
     val nbr = und.select(col("a").as("v"), col("b").as("u"))
       .unionAll(und.select(col("b").as("v"), col("a").as("u")))
     var labels = nbr.select(col("v")).distinct()
@@ -366,16 +375,7 @@ object GraphQ {
     * crossJoins. 3 fixed rounds = a straight-line unroll, no
     * driver-side convergence loop. */
   val kcorePeel: QFn = (s, dir) => {
-    val li = t(s, dir, "lineitem")
-      .filter(col("l_shipdate") >= lit("1996-01-01") &&
-        col("l_shipdate") < lit("1997-01-01"))
-      .select(col("l_orderkey"), col("l_partkey"))
-    val und0 = li.join(li.select(col("l_orderkey"),
-        col("l_partkey").as("p2")), Seq("l_orderkey"))
-      .filter(col("l_partkey") < col("p2"))
-      .select(col("l_partkey").as("a"), col("p2").as("b"))
-      .distinct()
-      .ckpt()
+    val und0 = coPurchase(s, dir)
     def nodesOf(e: org.apache.spark.sql.DataFrame) =
       e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
     // k = floor(2m/n)+1 from the INITIAL graph: exact integer division,
@@ -497,16 +497,7 @@ object GraphQ {
   private def louvainPhase1Build(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
-    val li = t(s, dir, "lineitem")
-      .filter(col("l_shipdate") >= lit("1996-01-01") &&
-        col("l_shipdate") < lit("1997-01-01"))
-      .select(col("l_orderkey"), col("l_partkey"))
-    val und = li.join(li.select(col("l_orderkey"),
-        col("l_partkey").as("p2")), Seq("l_orderkey"))
-      .filter(col("l_partkey") < col("p2"))
-      .select(col("l_partkey").as("a"), col("p2").as("b"))
-      .distinct()
-      .ckpt()
+    val und = coPurchase(s, dir)
     val nbr = und.select(col("a").as("v"), col("b").as("u"))
       .unionAll(und.select(col("b").as("v"), col("a").as("u")))
     val deg = nbr.groupBy(col("v")).agg(count(lit(1)).as("kv"))
@@ -663,13 +654,12 @@ object GraphQ {
     *   1. TRIM — a vertex with no in-edge or no out-edge in the active
     *      subgraph lies on no cycle: settle as a singleton SCC; peel to
     *      fixpoint (kills DAG periphery, the worst case for coloring).
-    *   2. FORWARD color — F(v) = min over {v} ∪ ancestors(v), by
-    *      min-label propagation along edge direction to a DETECTED
-    *      fixpoint (per-round changed-row count — sound, no hash-sum
-    *      collision risk). Each color class {F = c} contains SCC(c)
-    *      whole, and c is the class minimum.
-    *   3. BACKWARD within color — propagate min labels AGAINST edge
-    *      direction, restricted to edges whose endpoints share a color.
+    *   2. FORWARD color — F(v) = min over {v} ∪ ancestors(v), the
+    *      `ConnectedComponents.minLabel` fixpoint along edge direction.
+    *      Each color class {F = c} contains SCC(c) whole, and c is the
+    *      class minimum.
+    *   3. BACKWARD within color — the same fixpoint AGAINST edge
+    *      direction, over the edges whose endpoints share a color.
     *      B(v) = F(v) = c ⟺ c →* v (F side) ∧ v →* c (B side, and an
     *      SCC's internal path never leaves its color class) ⟺
     *      v ∈ SCC(c). Settle those, drop them, repeat from 1 — every
@@ -686,9 +676,8 @@ object GraphQ {
     * fixture vocabulary; the coloring loop is the scale path). */
   val sccComponents: QFn = (s, dir) => {
     // Convergence counts ride the SAME job that materializes each
-    // round's checkpoint (r15 — the neardupClusters observe device):
-    // every ckpt+count pair in the peel/propagate loops was TWO job
-    // launches per round; core.ckptObserved folds them into one.
+    // round's checkpoint: a ckpt+count pair in the trim loop would be
+    // TWO job launches per round; core.ckptObserved folds them into one.
     val e0 = edgesOf(s, dir).ckpt()
     var (verts, Seq(remaining0)) = ckptObserved(
       e0.select(col("src").as("w"))
@@ -721,41 +710,20 @@ object GraphQ {
         }
       }
       if (remaining > 0) {
-        // min-label propagation over `e`, labels flowing from the
-        // `from` endpoint to the `to` endpoint, to a detected fixpoint
-        def minProp(e: DataFrame, from: String, to: String): DataFrame = {
-          var lbl = verts.select(col("w"), col("w").as("lbl"))
-            .ckpt()
-          var changed = 1L
-          while (changed > 0) {
-            val inc = e
-              .join(lbl.select(col("w").as(from), col("lbl").as("nl")),
-                from)
-              .groupBy(col(to).as("w")).agg(min(col("nl")).as("nl"))
-            val (next, Seq(nChg)) = ckptObserved(
-              lbl.join(inc, Seq("w"), "left")
-                .select(col("w"),
-                  least(col("lbl"), coalesce(col("nl"), col("lbl")))
-                    .as("lbl"),
-                  (col("nl") < col("lbl")).as("chg")),
-              coalesce(sum(when(col("chg"), 1L).otherwise(0L)), lit(0L)))
-            changed = nChg
-            lbl = next.select(col("w"), col("lbl"))
-          }
-          lbl
-        }
-        // ---- 2. forward color
-        val f = minProp(edges, "src", "dst")
-        // ---- 3. backward min-label within color
+        // ---- 2. forward color: F(v) = min over {v} ∪ ancestors(v)
+        val (f, _) = ConnectedComponents.minLabel(edges, Some(verts))
+        // ---- 3. backward min-label within color: the same fixpoint
+        // over the reversed same-color edges
         val fe = edges
-          .join(f.select(col("w").as("src"), col("lbl").as("fs")), "src")
-          .join(f.select(col("w").as("dst"), col("lbl").as("fd")), "dst")
+          .join(f.select(col("id").as("src"), col("lbl").as("fs")), "src")
+          .join(f.select(col("id").as("dst"), col("lbl").as("fd")), "dst")
           .filter(col("fs") === col("fd"))
           .select(col("src"), col("dst")).ckpt()
-        val b = minProp(fe, "dst", "src")
-        val done = f.join(b.select(col("w"), col("lbl").as("bl")), Seq("w"))
+        val (b, _) = ConnectedComponents.minLabel(
+          fe.select(col("dst"), col("src")), Some(verts))
+        val done = f.join(b.select(col("id"), col("lbl").as("bl")), Seq("id"))
           .filter(col("lbl") === col("bl"))
-          .select(col("w"), col("lbl").as("scc")).ckpt()
+          .select(col("id").as("w"), col("lbl").as("scc")).ckpt()
         settled ::= done
         val (nv, Seq(nRem)) = ckptObserved(
           verts.join(done.select(col("w")), Seq("w"), "left_anti"),

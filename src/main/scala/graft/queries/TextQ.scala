@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.TextOps
+import graft.operators.{ConnectedComponents, TextOps}
 import core._
 
 /** Text / document-pipeline queries over `documents` (SURVEY.md §2.10 plus
@@ -683,10 +683,9 @@ object TextQ {
   /** Entity resolution end-to-end (r10) — the full linkage pipeline
     * composed from graded parts: canonicalized part names → blocked
     * Jaro-Winkler candidate pairs (jw_linkage's stages, threshold 0.84)
-    * → connected components by min-label propagation TO FIXPOINT (the
-    * neardup_clusters device: labels only decrease, the lexicographic
-    * min name is the cluster id, convergence detected by an unchanged
-    * label multiset via an order-free count of self-labeled rows) →
+    * → connected components by min-label propagation TO FIXPOINT
+    * (`ConnectedComponents.minLabel`: the lexicographic min name is the
+    * cluster id, convergence detected by a round that lowers no label) →
     * SURVIVORSHIP: each cluster's golden record is the name with the
     * most underlying part records (count DESC, name ASC — the rule a
     * real MDM pipeline configures). Output: one row per multi-name
@@ -710,39 +709,10 @@ object TextQ {
       .filter(r6(call_function("graft_jaro_winkler", col("a"), col("b")))
         >= 0.84)
       .select(col("a"), col("b"))
-    val adj = pairs.select(col("a").as("src"), col("b").as("dst"))
-      .union(pairs.select(col("b").as("src"), col("a").as("dst")))
-      .persist()
-    // String labels rule out neardup_clusters' label-sum convergence
-    // metric; instead each round OBSERVES the count of rows whose label
-    // strictly decreases (labels are monotone non-increasing, so 0
-    // changed rows IS the fixpoint — provable, no hashing). The metric
-    // rides the same job that materializes the round's checkpoint.
-    var labels = adj.groupBy(col("src")).agg(min(col("dst")).as("mn"))
-      .select(col("src").as("id"), least(col("src"), col("mn"))
-        .as("lbl"))
-      .ckpt()
-    var converged = false
-    var round = 1
-    while (!converged) {
-      val nbr = adj
-        .join(labels.select(col("id").as("dst"), col("lbl").as("dlbl")),
-          "dst")
-        .groupBy(col("src")).agg(min(col("dlbl")).as("nlbl"))
-      val obs = org.apache.spark.sql.Observation(s"er_changed_r$round")
-      val next = labels
-        .join(nbr.select(col("src").as("id"), col("nlbl")),
-          Seq("id"), "left")
-        .observe(obs, sum(when(col("nlbl") < col("lbl"), 1L)
-          .otherwise(0L)).as("chg"))
-        .select(col("id"),
-          least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
-        .ckpt()
-      converged = obs.get("chg").asInstanceOf[Long] == 0L
-      labels = next
-      round += 1
-    }
-    adj.unpersist()
+    // String labels: minLabel's changed-row convergence test needs no
+    // label arithmetic, so the lexicographic min name is the cluster id.
+    val (labels, _) = ConnectedComponents.minLabel(
+      pairs.unionAll(pairs.select(col("b"), col("a"))))
     val wSurv = Window.partitionBy(col("lbl"))
       .orderBy(col("cnt").desc, col("id"))
     labels.join(names.select(col("nm").as("id"), col("cnt")), "id")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField,
   StructType}
+import graft.operators.ConnectedComponents
 import core._
 
 /** Embedding / similarity-search queries over `embeddings` (SURVEY.md §2.10
@@ -675,58 +676,25 @@ object VectorQ {
     * pipeline needs downstream of pair detection: a cluster id per
     * duplicated document, so one representative per cluster survives.
     *
-    * Convergence is detected, not assumed: labels only decrease, so the
-    * label sum strictly decreases every non-converged round — the loop
-    * stops when the sum is unchanged. The sum rides the SAME job that
-    * materializes the round's checkpoint (an `observe` metric collected
-    * by the checkpoint action), so each round costs exactly ONE job
-    * launch — no separate convergence aggregate, no data collected.
-    * At the fixpoint every edge has equal
-    * labels on both ends, i.e. cluster_id = min vec_id of the connected
-    * component — correct for ANY graph diameter, unlike a fixed unroll.
-    * The oracle mirrors the fixpoint itself with a recursive CTE
-    * (min reachable id), so both engines compute the same well-defined
-    * object regardless of how many rounds each needs.
+    * The loop is `ConnectedComponents.minLabel` over the symmetric pair
+    * list: convergence is detected, not assumed (a round that lowers no
+    * label ends it, counted in the job that writes the round's
+    * checkpoint), so cluster_id = min vec_id of the connected component
+    * — correct for ANY graph diameter, unlike a fixed unroll. The oracle
+    * mirrors the fixpoint itself with a recursive CTE (min reachable
+    * id), so both engines compute the same well-defined object
+    * regardless of how many rounds each needs.
     *
-    * Scale shape: rounds = component diameter (near-dup components are
-    * near-cliques ⇒ 2-3 rounds); each round is one shuffle keyed on
-    * vertex id — the standard iterative-join CC pattern. Lineage is cut
-    * every round with localCheckpoint, so plan size stays O(1) in rounds. */
+    * Scale shape: near-dup components are near-cliques ⇒ 2-3 rounds;
+    * each round is shuffles keyed on vertex id — the standard
+    * iterative-join CC pattern — and lineage is cut every round, so plan
+    * size stays O(1) in rounds. */
   val neardupClusters: QFn = (s, dir) => {
     // The unsorted pair set: the propagation loop consumes it as a graph,
     // so embedNeardup's presentation ORDER BY would be a wasted sort.
     val pairs = embedNeardupCore(s, dir).select(col("a_id"), col("b_id"))
-    val adj = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .persist()
-    // Initialization IS the first propagation round: label = min(self,
-    // neighbors) in one aggregate. The vertex set falls out of the same
-    // groupBy (adj is symmetrized, so every vertex appears as src) —
-    // replaces a distinct() shuffle + one full join round; near-clique
-    // components then converge after a single loop iteration.
-    // One job per round: the label-sum convergence metric is observed by
-    // the job that materializes the checkpoint (core.ckptObserved).
-    val lblSum = coalesce(sum(col("lbl")), lit(0L))
-    var (labels, Seq(prevSum)) = ckptObserved(
-      adj.groupBy(col("src")).agg(min(col("dst")).as("mn"))
-        .select(col("src").as("id"), least(col("src"), col("mn")).as("lbl")),
-      lblSum)
-    var converged = false
-    while (!converged) {
-      val nbr = adj
-        .join(labels.select(col("id").as("dst"), col("lbl").as("dlbl")), "dst")
-        .groupBy(col("src")).agg(min(col("dlbl")).as("nlbl"))
-      val (next, Seq(nextSum)) = ckptObserved(
-        labels
-          .join(nbr.select(col("src").as("id"), col("nlbl")), Seq("id"), "left")
-          .select(col("id"),
-            least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl")),
-        lblSum)
-      converged = nextSum == prevSum
-      prevSum = nextSum
-      labels = next
-    }
-    adj.unpersist()
+    val (labels, _) = ConnectedComponents.minLabel(
+      pairs.unionAll(pairs.select(col("b_id"), col("a_id"))))
     labels.select(col("id").as("vec_id"), col("lbl").as("cluster_id"))
       .orderBy(col("vec_id"))
   }

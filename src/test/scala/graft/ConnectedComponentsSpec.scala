@@ -1,11 +1,13 @@
 package graft
 
 import scala.util.Random
+import org.apache.spark.sql.Encoder
 import graft.operators.ConnectedComponents
 
 /** ConnectedComponents vs a driver-side union-find oracle on adversarial
   * graph shapes — including the long chains that plain diameter-bound
-  * label propagation would get wrong without enough rounds. */
+  * label propagation would get wrong without enough rounds — and its
+  * directed `minLabel` fixpoint vs the min over each vertex's ancestors. */
 class ConnectedComponentsSpec extends SparkSpec {
 
   private def unionFind(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
@@ -36,6 +38,64 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(got == want,
       s"mismatch: ${(got.toSet diff want.toSet).take(5)} vs " +
         s"${(want.toSet diff got.toSet).take(5)}")
+  }
+
+  /** `minLabel` over directed `edges` (and `verts`) vs the definition:
+    * each vertex's label is the min id among itself and every vertex that
+    * reaches it. Returns the round count. */
+  private def checkMin[T: Ordering](edges: Seq[(T, T)], verts: Seq[T] = Nil)(
+      implicit ee: Encoder[(T, T)], ve: Encoder[T]): Int = {
+    val (lf, rounds) = ConnectedComponents.minLabel(
+      spark.createDataset(edges).toDF("src", "dst"),
+      Option.when(verts.nonEmpty)(spark.createDataset(verts).toDF("id")))
+    val got = lf.collect().map(r => r.getAs[T](0) -> r.getAs[T](1)).toMap
+    val preds = edges.groupMap(_._2)(_._1)
+    def minAncestor(v: T): T = {
+      var seen = Set(v); var front = Seq(v)
+      while (front.nonEmpty) {
+        front = front.flatMap(preds.getOrElse(_, Nil)).filterNot(seen)
+        seen ++= front
+      }
+      seen.min
+    }
+    val want = (if (verts.isEmpty) edges.map(_._2) else verts).distinct
+      .map(v => v -> minAncestor(v)).toMap
+    assert(got == want, s"mismatch: ${(got.toSet diff want.toSet).take(5)} " +
+      s"vs ${(want.toSet diff got.toSet).take(5)}")
+    rounds
+  }
+
+  test("64-vertex path converges in ≤ 8 rounds, ids up and down (the " +
+    "jump's doubling; propagation alone needs 63)") {
+    import spark.implicits._
+    for (ids <- Seq(0L until 64L, 63L to 0L by -1)) {
+      val path = ids.zip(ids.tail)
+      check(64, path)
+      val rounds = checkMin(path ++ path.map(_.swap))
+      assert(rounds <= 8, s"$rounds rounds on a 64-vertex path")
+    }
+  }
+
+  test("directed cycle with a tail: each label is the min ancestor, " +
+    "ids up and down") {
+    import spark.implicits._
+    val g = Seq((10L, 11L), (11L, 5L), (5L, 3L), (3L, 8L), (8L, 5L),
+      (8L, 6L), (6L, 1L), (1L, 4L))
+    for (id <- Seq((v: Long) => v, (v: Long) => 20L - v))
+      checkMin(g.map { case (a, b) => (id(a), id(b)) })
+  }
+
+  test("string labels: the lexicographic min name labels each component") {
+    import spark.implicits._
+    val g = Seq(("pear", "apple"), ("apple", "fig"), ("lime", "kiwi"))
+    checkMin(g ++ g.map(_.swap))
+  }
+
+  test("verts: a vertex without an in-edge, or without any edge, labels " +
+    "itself") {
+    import spark.implicits._
+    val sym = Seq((1L, 2L), (2L, 3L))
+    checkMin(sym ++ sym.map(_.swap) :+ ((5L, 6L)), Seq(1L, 2L, 3L, 5L, 6L, 7L))
   }
 
   test("long chain (diameter 199) resolves to one component") {
