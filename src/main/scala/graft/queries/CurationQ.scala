@@ -60,21 +60,14 @@ object CurationQ {
   private def isEval(id: org.apache.spark.sql.Column) = id % 17 === 0
 
   /** Distinct word-5-grams per doc as (doc_id, h = md5(shingle)).
-    * Index-explode over the materialized token array + O(1) element_at,
-    * NOT a transform-lambda over the inline tokens() — the struct/HOF
-    * form pays the interpreted-HOF + generator-inlining tax (35× at
-    * sf0.1; see GraphQ.edgesOf and TextQ.shingleRows, the same rewrite).
-    * Per-doc distinctness moves from array_distinct to a relational
-    * DISTINCT — same set, map-side-combinable. */
+    * Per-doc distinctness is a relational DISTINCT, not array_distinct —
+    * same set, map-side-combinable. */
   private def gram5(s: SparkSession, dir: String): DataFrame = {
     val ws = col("ws")
     t(s, dir, "documents")
       .select(col("doc_id"), TextOps.tokens(col("text")).as("ws"))
-      .select(col("doc_id"), ws, explode(when(size(ws) >= 5,
-        sequence(lit(1), size(ws) - 4))
-        .otherwise(array().cast("array<int>"))).as("i"))
-      .select(col("doc_id"), concat_ws(" ",
-        (0 until 5).map(k => element_at(ws, col("i") + k)): _*).as("sh"))
+      .select(col("doc_id"), ws, TextOps.windows(ws, 5).as("i"))
+      .select(col("doc_id"), TextOps.gram(ws, col("i"), 5).as("sh"))
       .distinct()
       .select(col("doc_id"), md5(col("sh")).as("h"))
   }
@@ -91,19 +84,14 @@ object CurationQ {
       .orderBy(col("doc_id"))
   }
 
-  /** Consecutive token pairs of a doc as (doc_id, w1, w2). Index-explode
-    * + O(1) array indexing, NOT a struct-array transform — the struct
-    * form pays the interpreted-HOF + generator-filter-inlining tax
-    * (35× at sf0.1; see GraphQ.edgesOf). */
+  /** Consecutive token pairs of a doc as (doc_id, w1, w2). */
   private def bigramRows(s: SparkSession, dir: String): DataFrame = {
     val ws = col("ws")
     t(s, dir, "documents")
       .select(col("doc_id"), TextOps.tokens(col("text")).as("ws"))
-      .select(col("doc_id"), ws, explode(when(size(ws) >= 2,
-        sequence(lit(1), size(ws) - 1))
-        .otherwise(array().cast("array<int>"))).as("i"))
-      .select(col("doc_id"), element_at(ws, col("i")).as("w1"),
-        element_at(ws, col("i") + 1).as("w2"))
+      .select(col("doc_id"), ws, TextOps.windows(ws, 2).as("i"))
+      .select(col("doc_id"), element_at(ws, col("i") + 1).as("w1"),
+        element_at(ws, col("i") + 2).as("w2"))
   }
 
   val lmBigramScore: QFn = (s, dir) => {
@@ -935,7 +923,7 @@ object CurationQ {
       |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'),
       |    w -> w <> '') AS ws FROM documents)""".stripMargin
 
-  /** Distinct word-5-gram md5 per doc, mirroring TextOps.shingles(_, 5). */
+  /** Distinct word-5-gram md5 per doc, mirroring CurationQ.gram5. */
   private val gram5Cte =
     s"""$wordsCte,
        |g5 AS (

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.ConnectedComponents
+import graft.operators.{ConnectedComponents, TextOps}
 import core._
 
 /** Round-3 depth additions (SURVEY.md §2.13): map-typed columns (derived
@@ -212,8 +212,7 @@ object DepthQ {
     val w = Window.partitionBy(col("hkey"))
       .orderBy(col("norm"), col("n_chars").desc, col("doc_id"))
     t(s, dir, "documents")
-      .withColumn("norm",
-        graft.operators.TextOps.normText(col("text")))
+      .withColumn("norm", TextOps.normText(col("text")))
       .withColumn("hkey", xxhash64(col("norm")))
       .withColumn("prev_norm", lag(col("norm"), 1).over(w))
       .filter(col("prev_norm").isNull || col("prev_norm") =!= col("norm"))
@@ -256,7 +255,7 @@ object DepthQ {
     * error bounds, without changing the query shape. */
   val approxTopkWords: QFn = (s, dir) =>
     t(s, dir, "documents")
-      .select(explode(graft.operators.TextOps.tokens(col("text"))).as("w"))
+      .select(explode(TextOps.tokens(col("text"))).as("w"))
       .agg(expr("approx_top_k(w, 100, 10000)").as("tk"))
       .select(explode(col("tk")).as("e"))
       .select(col("e.item").as("word"), col("e.count").as("cnt"))
@@ -418,8 +417,7 @@ object DepthQ {
     * SQL-reproducible; determinism comes from the pinned seed. */
   val cmsHeavyHitters: QFn = (s, dir) => {
     val words = t(s, dir, "documents")
-      .select(explode(graft.operators.TextOps.tokens(col("text")))
-        .as("word"))
+      .select(explode(TextOps.tokens(col("text"))).as("word"))
     val top = words.groupBy(col("word")).agg(count(lit(1)).as("exact_n"))
       .orderBy(col("exact_n").desc, col("word")).limit(20)
     val sketch = words
@@ -451,27 +449,10 @@ object DepthQ {
       .orderBy(col("o_orderpriority"), col("rnk"))
   }
 
-  /** Frequent co-occurring item pairs with lift (r5) — the association-
-    * mining / market-basket surface: parts bought together in the same
-    * order, ranked by support, scored by lift = P(ab)/(P(a)·P(b)).
-    *
-    * Scale shape: pair fan-out is C(d,2) for d = distinct parts per
-    * order — d is bounded by order size (≤13 here, ≤7-line orders in
-    * TPC-H proper), NOT by catalog size, so candidate volume is linear
-    * in orders. The expansion runs as collect_set per order (one keyed
-    * shuffle, map-side-combinable) + two chained index-sequence
-    * explodes over the sorted per-order array — one shuffle fewer than
-    * the classic op⋈op self-join, and the §7.3-safe expansion idiom.
-    * The oracle IS the self-join formulation, so the hash-match proves
-    * explode-over-set ≡ self-join. Lift joins happen AFTER the top-20
-    * cut (20 rows against the per-part count dim — broadcast); the
-    * 1-row order-total aggregate rides an allowlisted broadcast. One
-    * double expression per output row, r6 floor-rounded, identical op
-    * order both engines. */
   /** Frequent 3-itemsets (r10) — the a-priori tier above
     * copurchase_pairs: baskets = distinct parts per order, triples
-    * enumerated inside each basket from the SORTED item array (i<j<k
-    * index explode — per-basket fan-out is C(items,3) ≤ C(7,3) = 35,
+    * enumerated inside each basket from the SORTED item array (TextOps.combos
+    * — per-basket fan-out is C(items,3) ≤ C(7,3) = 35,
     * bounded by basket size, never corpus-sized), support counted per
     * triple, top-20 with lift vs the independence assumption
     * n_abc·N²/(n_a·n_b·n_c) — the signal that separates a real bundle
@@ -484,18 +465,8 @@ object DepthQ {
     val op = t(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .distinct()
-    val ps = col("ps")
-    val triples = op.groupBy(col("ok"))
-      .agg(sort_array(collect_set(col("pk"))).as("ps"))
-      .select(ps, explode(when(size(ps) >= 3, sequence(lit(0), size(ps) - 3))
-        .otherwise(array().cast("array<int>"))).as("i"))
-      .select(ps, col("i"),
-        explode(sequence(col("i") + 1, size(ps) - 2)).as("j"))
-      .select(ps, col("i"), col("j"),
-        explode(sequence(col("j") + 1, size(ps) - 1)).as("k"))
-      .select(element_at(ps, col("i") + 1).as("pa"),
-        element_at(ps, col("j") + 1).as("pb"),
-        element_at(ps, col("k") + 1).as("pc"))
+    val triples = TextOps.combos(op.groupBy(col("ok"))
+      .agg(sort_array(collect_set(col("pk"))).as("ps")), "ps", "pa", "pb", "pc")
       .groupBy(col("pa"), col("pb"), col("pc"))
       .agg(count(lit(1)).as("n_abc"))
       .orderBy(col("n_abc").desc, col("pa"), col("pb"), col("pc"))
@@ -519,19 +490,29 @@ object DepthQ {
       .orderBy(col("n_abc").desc, col("pa"), col("pb"), col("pc"))
   }
 
+  /** Frequent co-occurring item pairs with lift (r5) — the association-
+    * mining / market-basket surface: parts bought together in the same
+    * order, ranked by support, scored by lift = P(ab)/(P(a)·P(b)).
+    *
+    * Scale shape: pair fan-out is C(d,2) for d = distinct parts per
+    * order — d is bounded by order size (≤13 here, ≤7-line orders in
+    * TPC-H proper), NOT by catalog size, so candidate volume is linear
+    * in orders. The expansion runs as collect_set per order (one keyed
+    * shuffle, map-side-combinable) + TextOps.combos over the sorted
+    * per-order array — one shuffle fewer than the classic op⋈op
+    * self-join.
+    * The oracle IS the self-join formulation, so the hash-match proves
+    * explode-over-set ≡ self-join. Lift joins happen AFTER the top-20
+    * cut (20 rows against the per-part count dim — broadcast); the
+    * 1-row order-total aggregate rides an allowlisted broadcast. One
+    * double expression per output row, r6 floor-rounded, identical op
+    * order both engines. */
   val copurchasePairs: QFn = (s, dir) => {
     val op = t(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .distinct()
-    val ps = col("ps")
-    val pairs = op.groupBy(col("ok"))
-      .agg(sort_array(collect_set(col("pk"))).as("ps"))
-      .select(ps, explode(when(size(ps) >= 2, sequence(lit(0), size(ps) - 2))
-        .otherwise(array().cast("array<int>"))).as("i"))
-      .select(ps, col("i"),
-        explode(sequence(col("i") + 1, size(ps) - 1)).as("j"))
-      .select(element_at(ps, col("i") + 1).as("pa"),
-        element_at(ps, col("j") + 1).as("pb"))
+    val pairs = TextOps.combos(op.groupBy(col("ok"))
+      .agg(sort_array(collect_set(col("pk"))).as("ps")), "ps", "pa", "pb")
       .groupBy(col("pa"), col("pb"))
       .agg(count(lit(1)).as("n_ab"))
       .orderBy(col("n_ab").desc, col("pa"), col("pb"))

@@ -31,27 +31,15 @@ import core._
   */
 object GraphQ {
 
-  /** Distinct directed word-adjacency edges; self-loops dropped.
-    * Pair expansion EXPLODES AN INDEX SEQUENCE and indexes into the
-    * materialized token array, instead of building an array of (src,dst)
-    * structs in a transform lambda. The struct-array form runs 35×
-    * slower here (11.5 s vs 0.33 s warm at sf0.1, tri_dbg bisection):
-    * HOF lambdas are CodegenFallback, so 265k structs get built in the
-    * interpreted evaluator — and the generator-pruning filter inlines
-    * the whole pair-array expression a second time below the
-    * projections, where every element_at re-runs the tokenizing regex
-    * split (O(len²) splits per doc). With an int-sequence explode the
-    * pruning filter costs one size() and the per-row work is two O(1)
-    * array indexes in a codegen'd projection. */
+  /** Distinct directed word-adjacency edges (the 2-token
+    * [[TextOps.windows]]); self-loops dropped. */
   private def edgesOf(s: SparkSession, dir: String): DataFrame = {
     val ws = col("ws")
     t(s, dir, "documents")
       .select(TextOps.tokens(col("text")).as("ws"))
-      .select(ws, explode(when(size(ws) >= 2,
-        sequence(lit(1), size(ws) - 1))
-        .otherwise(array().cast("array<int>"))).as("i"))
-      .select(element_at(ws, col("i")).as("src"),
-        element_at(ws, col("i") + 1).as("dst"))
+      .select(ws, TextOps.windows(ws, 2).as("i"))
+      .select(element_at(ws, col("i") + 1).as("src"),
+        element_at(ws, col("i") + 2).as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
   }

@@ -55,27 +55,14 @@ object TextQ {
       .orderBy(col("cnt").desc, col("word"))
       .limit(20)
 
-  /** Per-doc distinct 3-gram shingles, exploded to (doc_id, shingle).
-    *
-    * The token array is materialized in its own projection and the
-    * shingle positions come from an INDEX-SEQUENCE explode with the
-    * 3-token concat as a codegen'd top-level projection; per-doc shingle
-    * dedup is a relational distinct on (doc_id, shingle). The earlier
-    * shapes both lost badly: building shingles over inline tokens(text)
-    * re-ran the regex split per element_at (~25 s of Pattern.split at
-    * sf0.1), and a transform-lambda string array paid the interpreted-HOF
-    * + generator-filter-inlining tax (see GraphQ.edgesOf, 35× on the
-    * same corpus). */
+  /** Per-doc distinct 3-gram shingles, exploded to (doc_id, shingle);
+    * per-doc shingle dedup is a relational distinct on (doc_id, shingle). */
   private def shingleRows(s: SparkSession, dir: String): DataFrame = {
     val ws = col("ws")
     t(s, dir, "documents")
       .select(col("doc_id"), TextOps.tokens(col("text")).as("ws"))
-      .select(col("doc_id"), ws, explode(when(size(ws) >= 3,
-        sequence(lit(0), size(ws) - 3))
-        .otherwise(array().cast("array<int>"))).as("i"))
-      .select(col("doc_id"), concat_ws(" ", element_at(ws, col("i") + 1),
-        element_at(ws, col("i") + 2), element_at(ws, col("i") + 3))
-        .as("shingle"))
+      .select(col("doc_id"), ws, TextOps.windows(ws, 3).as("i"))
+      .select(col("doc_id"), TextOps.gram(ws, col("i"), 3).as("shingle"))
       .distinct()
   }
 
@@ -175,17 +162,9 @@ object TextQ {
     val (sig, bands) = minhashSigBands(s, dir)
     // Candidates via groupBy + per-bucket pair expansion instead of a
     // band self-join: one execution of the signature pipeline, not two
-    // (AQE stage reuse is not guaranteed across join sides), and the
-    // pair fan-out happens after the bucket-size filter.
-    val ds = col("ds")
-    val pairCombos = flatten(transform(sequence(lit(1), size(ds) - 1),
-      i => transform(slice(ds, i + 1, size(ds) - i),
-        x => struct(element_at(ds, i).as("a_id"), x.as("b_id")))))
-    val cand = bands.groupBy(col("band_idx"), col("bucket"))
-      .agg(sort_array(collect_set(col("doc_id"))).as("ds"))
-      .filter(size(ds) >= 2)
-      .select(explode(pairCombos).as("p"))
-      .select(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"))
+    // (AQE stage reuse is not guaranteed across join sides).
+    val cand = TextOps.combos(bands.groupBy(col("band_idx"), col("bucket"))
+      .agg(sort_array(collect_set(col("doc_id"))).as("ds")), "ds", "a_id", "b_id")
       .distinct()
     (cand, sig)
   }
@@ -372,23 +351,17 @@ object TextQ {
       .orderBy(col("lang"), col("rn"))
   }
 
+  /** Word-bigram instances (one row per adjacent pair occurrence). */
+  private def bigramInstances(toks: DataFrame): DataFrame = {
+    val ws = col("ws")
+    toks.select(ws, TextOps.windows(ws, 2).as("i"))
+      .select(element_at(ws, col("i") + 1).as("w1"),
+        element_at(ws, col("i") + 2).as("w2"))
+  }
+
   /** Word-bigram PMI over the corpus: ln(P(ab) / (P(a)P(b))), bigrams with
     * count ≥ 10, top-20. Counts are exact integers; only the final ln is
     * floating and it's r6-rounded on both engines. */
-  /** Word-bigram instances (one row per adjacent pair occurrence).
-    * Guard size >= 2: sequence(1, 0) would count DOWN through index 0 and
-    * element_at(ws, 0) throws — a <2-token doc must yield no bigrams. */
-  private def bigramInstances(toks: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val bigramArr = when(size(col("ws")) >= 2,
-      transform(sequence(lit(1), size(col("ws")) - 1),
-        i => struct(element_at(col("ws"), i).as("w1"),
-          element_at(col("ws"), i + 1).as("w2"))))
-      .otherwise(array().cast("array<struct<w1:string,w2:string>>"))
-    toks.select(explode(bigramArr).as("b"))
-      .select(col("b.w1"), col("b.w2"))
-  }
-
   val bigramPmi: QFn = (s, dir) => {
     val docs = t(s, dir, "documents")
     val toks = docs.select(col("doc_id"), TextOps.tokens(col("text")).as("ws"))
@@ -578,26 +551,20 @@ object TextQ {
   }
 
   /** Sliding-window document chunking (the training-data prep op): 20-token
-    * chunks with 5-token overlap (stride 15). Chunk starts come from
-    * sequence(1, n, stride); slice() truncates the tail chunk. Per-row
-    * explode, no shuffle — embarrassingly parallel at any corpus size. */
+    * chunks with 5-token overlap (stride 15). Chunk starts are the
+    * 1-token windows at stride 15 (none for a zero-token doc, as the
+    * oracle's range); slice() truncates the tail chunk. Per-row explode,
+    * no shuffle — embarrassingly parallel at any corpus size. */
   val docChunks: QFn = (s, dir) => {
     val C = 20
     val S = 15
+    val ws = col("ws")
     t(s, dir, "documents")
       .select(col("doc_id"), TextOps.tokens(col("text")).as("ws"))
-      .select(col("doc_id"), col("ws"),
-        // Guard: sequence(1, 0, 15) throws 'Illegal sequence boundaries';
-        // a zero-token doc must yield no chunks (as the oracle's range does).
-        explode(when(size(col("ws")) >= 1,
-          sequence(lit(1), size(col("ws")), lit(S)))
-          .otherwise(array().cast("array<int>"))).as("start"))
-      .select(col("doc_id"),
-        ((col("start") - 1) / S).cast("long").as("chunk_id"),
-        concat_ws(" ", slice(col("ws"), col("start"), lit(C)))
-          .as("chunk_text"),
-        least(size(col("ws")) - col("start") + 1, lit(C)).cast("long")
-          .as("n_tok"))
+      .select(col("doc_id"), ws, TextOps.windows(ws, 1, S).as("start"))
+      .select(col("doc_id"), (col("start") / S).cast("long").as("chunk_id"),
+        concat_ws(" ", slice(ws, col("start") + 1, lit(C))).as("chunk_text"),
+        least(size(ws) - col("start"), lit(C)).cast("long").as("n_tok"))
       .orderBy(col("doc_id"), col("chunk_id"))
   }
 
@@ -1068,28 +1035,32 @@ object TextQ {
     * 2, counted corpus-wide, top 20. Bigram_pmi covers distance 1 only;
     * embedding training needs the wider context window.
     *
-    * Scale shape: the window expansion is TWO chained index-sequence
-    * explodes over the materialized token array (positions i, then
-    * distances d ≤ min(2, n−1−i)) with element_at projections — linear in
-    * tokens × window, codegen'd end-to-end, no self-join on doc_id (which
-    * would be O(len²) per doc) and no interpreted HOF (the 35× trap
-    * §7.3 documents). One shuffle for the global count; the top-20 fuses
-    * to TakeOrderedAndProject. */
-  val skipgramPairs: QFn = (s, dir) => {
-    val ws = col("ws")
-    t(s, dir, "documents")
-      .select(TextOps.tokens(col("text")).as("ws"))
-      .select(ws, explode(when(size(ws) >= 2, sequence(lit(0), size(ws) - 2))
-        .otherwise(array().cast("array<int>"))).as("i"))
-      .select(ws, col("i"),
-        explode(sequence(lit(1), least(lit(2), size(ws) - 1 - col("i"))))
-          .as("d"))
-      .select(concat_ws(" ", element_at(ws, col("i") + 1),
-        element_at(ws, col("i") + 1 + col("d"))).as("pair"))
+    * Scale shape: the pairs are [[skipPairs]] — linear in tokens ×
+    * window, no self-join on doc_id (which would be O(len²) per doc).
+    * One shuffle for the global count; the top-20 fuses to
+    * TakeOrderedAndProject. */
+  val skipgramPairs: QFn = (s, dir) =>
+    skipPairs(s, dir)
+      .select(concat_ws(" ", col("w"), col("c")).as("pair"))
       .groupBy(col("pair"))
       .agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("pair"))
       .limit(20)
+
+  /** Forward skip-gram pair occurrences as (w, c): each token w with
+    * each of the next two tokens c. Two chained index explodes: window
+    * starts i (the 2-token [[TextOps.windows]]), then distances
+    * d ≤ min(2, n−1−i). */
+  private def skipPairs(s: SparkSession, dir: String): DataFrame = {
+    val ws = col("ws")
+    t(s, dir, "documents")
+      .select(TextOps.tokens(col("text")).as("ws"))
+      .select(ws, TextOps.windows(ws, 2).as("i"))
+      .select(ws, col("i"),
+        explode(sequence(lit(1), least(lit(2), size(ws) - 1 - col("i"))))
+          .as("d"))
+      .select(element_at(ws, col("i") + 1).as("w"),
+        element_at(ws, col("i") + 1 + col("d")).as("c"))
   }
 
   /** sgns_step geometry, shared with the oracle generator: embedding
@@ -1153,16 +1124,7 @@ object TextQ {
 
   private def sgnsPipeline(s: SparkSession, dir: String,
       rounds: Int): DataFrame = {
-    val ws = col("ws")
-    val pc = t(s, dir, "documents")
-      .select(TextOps.tokens(col("text")).as("ws"))
-      .select(ws, explode(when(size(ws) >= 2, sequence(lit(0), size(ws) - 2))
-        .otherwise(array().cast("array<int>"))).as("i"))
-      .select(ws, col("i"),
-        explode(sequence(lit(1), least(lit(2), size(ws) - 1 - col("i"))))
-          .as("d"))
-      .select(element_at(ws, col("i") + 1).as("w"),
-        element_at(ws, col("i") + 1 + col("d")).as("c"))
+    val pc = skipPairs(s, dir)
       .groupBy(col("w"), col("c")).agg(count(lit(1)).as("cnt"))
       .ckpt()
     // size() guards: element_at past the end THROWS under ANSI, and a
@@ -1317,7 +1279,7 @@ object TextQ {
     * per-(lang, source) audit manifest: docs measured, docs with ANY
     * internal repeat, worst duplicate count, mean duplicate fraction.
     *
-    * Scale shape: one index-sequence explode (linear in tokens), then a
+    * Scale shape: one window explode (linear in tokens), then a
     * per-doc count/count-distinct pair — Spark plans the distinct via
     * Expand + partial agg keyed on (doc_id, gram), so dedup happens
     * map-side before the doc_id shuffle; the final (lang, source) rollup
@@ -1329,12 +1291,9 @@ object TextQ {
       .select(col("doc_id"), col("lang"), col("source"),
         TextOps.tokens(col("text")).as("ws"))
       .select(col("doc_id"), col("lang"), col("source"), ws,
-        explode(when(size(ws) >= 3, sequence(lit(0), size(ws) - 3))
-          .otherwise(array().cast("array<int>"))).as("i"))
+        TextOps.windows(ws, 3).as("i"))
       .select(col("doc_id"), col("lang"), col("source"),
-        concat_ws(" ", element_at(ws, col("i") + 1),
-          element_at(ws, col("i") + 2), element_at(ws, col("i") + 3))
-          .as("g"))
+        TextOps.gram(ws, col("i"), 3).as("g"))
     grams.groupBy(col("doc_id"), col("lang"), col("source"))
       .agg(count(lit(1)).as("n_grams"),
         countDistinct(col("g")).as("n_uniq"))
@@ -1359,7 +1318,7 @@ object TextQ {
     * as wholes are distinct. Reports the top-20 most-shared sequences
     * (doc spread, total occurrences).
     *
-    * Scale shape: one index-sequence explode (linear in tokens ×
+    * Scale shape: one window explode (linear in tokens ×
     * window 10), one groupBy — at 100 TB the shuffle key would be
     * xxhash64(seq) with min(seq) carried as representative (8-byte keys
     * instead of ~60-byte strings); the string key keeps the oracle
@@ -1369,18 +1328,22 @@ object TextQ {
     val ws = col("ws")
     t(s, dir, "documents")
       .select(col("doc_id"), TextOps.tokens(col("text")).as("ws"))
-      .select(col("doc_id"), ws,
-        explode(when(size(ws) >= 10, sequence(lit(0), size(ws) - 10))
-          .otherwise(array().cast("array<int>"))).as("i"))
-      .select(col("doc_id"), concat_ws(" ",
-        (0 until 10).map(k => element_at(ws, col("i") + 1 + k)): _*)
-        .as("seq"))
+      .select(col("doc_id"), ws, TextOps.windows(ws, 10).as("i"))
+      .select(col("doc_id"), TextOps.gram(ws, col("i"), 10).as("seq"))
       .groupBy(col("seq"))
       .agg(countDistinct(col("doc_id")).as("n_docs"),
         count(lit(1)).as("n_occ"))
       .filter(col("n_docs") >= 2)
       .orderBy(col("n_docs").desc, col("n_occ").desc, col("seq"))
       .limit(20)
+  }
+
+  /** Every 10-token window of each doc as (doc_id, i, seq): the
+    * 0-based start i and the window text — the span seeds. */
+  private def seeds10(words: DataFrame): DataFrame = {
+    val ws = col("ws")
+    words.select(col("doc_id"), ws, TextOps.windows(ws, 10).as("i"))
+      .select(col("doc_id"), col("i"), TextOps.gram(ws, col("i"), 10).as("seq"))
   }
 
   /** Variable-length maximal-repeat dedup (r10) — upgrading
@@ -1407,13 +1370,7 @@ object TextQ {
     val ws = col("ws")
     val words = t(s, dir, "documents")
       .select(col("doc_id"), TextOps.tokens(col("text")).as("ws"))
-    val seeds = words
-      .select(col("doc_id"), ws,
-        explode(when(size(ws) >= 10, sequence(lit(0), size(ws) - 10))
-          .otherwise(array().cast("array<int>"))).as("i"))
-      .select(col("doc_id"), col("i"), concat_ws(" ",
-        (0 until 10).map(k => element_at(ws, col("i") + 1 + k)): _*)
-        .as("seq"))
+    val seeds = seeds10(words)
     val m = seeds.select(col("doc_id").as("a_id"), col("i").as("pa"),
         col("seq"))
       .join(seeds.select(col("doc_id").as("b_id"), col("i").as("pb"),
@@ -1461,13 +1418,7 @@ object TextQ {
       .select(col("doc_id"), col("source"), TextOps.tokens(col("text"))
         .as("ws"))
       .ckpt() // reused: seeds, token explode, final manifest
-    val seeds = words
-      .select(col("doc_id"), wsC,
-        explode(when(size(wsC) >= 10, sequence(lit(0), size(wsC) - 10))
-          .otherwise(array().cast("array<int>"))).as("i"))
-      .select(col("doc_id"), col("i"), concat_ws(" ",
-        (0 until 10).map(k => element_at(wsC, col("i") + 1 + k)): _*)
-        .as("seq"))
+    val seeds = seeds10(words)
     val m = seeds.select(col("doc_id").as("a_id"), col("i").as("pa"),
         col("seq"))
       .join(seeds.select(col("doc_id").as("b_id"), col("i").as("pb"),

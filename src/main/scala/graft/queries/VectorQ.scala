@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField,
   StructType}
-import graft.operators.ConnectedComponents
+import graft.operators.{ConnectedComponents, TextOps}
 import core._
 
 /** Embedding / similarity-search queries over `embeddings` (SURVEY.md §2.10
@@ -167,8 +167,6 @@ object VectorQ {
   val embedNeardup: QFn = (s, dir) =>
     embedNeardupCore(s, dir).orderBy(col("a_id"), col("b_id"))
 
-  /** The banded pipeline without the presentation sort (shared with
-    * neardupClusters, which consumes the pairs as an unordered graph). */
   /** The banded sign-LSH candidate stage, split out so ScalingSpec can
     * measure candidate growth across sf tiers (fixed 8-bit bands are the
     * CONTRACT at these tiers; the log₂(n) band-width note above is the
@@ -181,18 +179,13 @@ object VectorQ {
         struct(lit(j).as("band"), neardupBandBucket(col("v"), j).as("bucket"))): _*))
         .as("bk"))
       .select(col("vec_id"), col("bk.band"), col("bk.bucket"))
-    val vs = col("vs")
-    val pairCombos = flatten(transform(sequence(lit(1), size(vs) - 1),
-      i => transform(slice(vs, i + 1, size(vs) - i),
-        x => struct(element_at(vs, i).as("a_id"), x.as("b_id")))))
-    bands.groupBy(col("band"), col("bucket"))
-      .agg(sort_array(collect_set(col("vec_id"))).as("vs"))
-      .filter(size(vs) >= 2)
-      .select(explode(pairCombos).as("p"))
-      .select(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"))
+    TextOps.combos(bands.groupBy(col("band"), col("bucket"))
+      .agg(sort_array(collect_set(col("vec_id"))).as("vs")), "vs", "a_id", "b_id")
       .distinct()
   }
 
+  /** The banded pipeline without the presentation sort (shared with
+    * neardupClusters, which consumes the pairs as an unordered graph). */
   private def embedNeardupCore(s: SparkSession, dir: String) = {
     val base = unitBase(s, dir)
     val vecs = base
@@ -1487,7 +1480,7 @@ object VectorQ {
   private[graft] def lexicalRank(s: SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
     val toks = t(s, dir, "documents").select(col("doc_id"),
-      array_distinct(graft.operators.TextOps.tokens(col("text"))).as("ts"))
+      array_distinct(TextOps.tokens(col("text"))).as("ts"))
       .ckpt() // feeds postings (x2) and both size joins
     val sizes = toks.select(col("doc_id"), size(col("ts")).as("n"))
     val qt = toks.filter(col("doc_id") < 50)

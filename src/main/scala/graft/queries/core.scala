@@ -20,10 +20,17 @@ object core {
   /** Per-JVM unique scratch root. Two JVMs benching the same fixture dir
     * concurrently (the co-tenant scenario BASELINE.md documents) must not
     * race one process's overwrite against the other's read — and
-    * String.hashCode of the dir alone can collide across dirs. */
-  val scratchRoot: String = new java.io.File(sys.props("java.io.tmpdir"),
-    "graft_scratch_" + java.util.UUID.randomUUID().toString.take(8))
-    .getAbsolutePath
+    * String.hashCode of the dir alone can collide across dirs. No other
+    * process can know the name, so the tree is deleted at JVM exit: at
+    * Hadoop shutdown-hook priority 20, after Spark's hook (40) has
+    * stopped the context and its streams, before FileSystem's (10). */
+  val scratchRoot: String = {
+    val root = new java.io.File(sys.props("java.io.tmpdir"),
+      "graft_scratch_" + java.util.UUID.randomUUID().toString.take(8))
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => org.apache.commons.io.FileUtils.deleteQuietly(root), 20)
+    root.getAbsolutePath
+  }
 
   /** Collision-resistant key for a fixture dir (r12 advisory fix):
     * String.hashCode has 32 bits and well-known collisions, and a

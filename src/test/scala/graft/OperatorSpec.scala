@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import graft.operators.{Multimodal, VectorSum}
+import graft.operators.{Multimodal, TextOps, VectorSum}
 
 /** Non-oracle operator checks: approximate distinct error bounds, the
   * custom Aggregator's partial/merge correctness, the mapPartitions
@@ -635,6 +635,49 @@ class OperatorSpec extends SparkSpec {
       disc + 0.75 * nFol / r * (p.getLong(1).toDouble / tTypes)
     }.sum
     assert(math.abs(total - 1.0) < 1e-9, s"KN mass for '$w1' = $total")
+  }
+
+  // TextOps' word window against Scala's own collections, under the
+  // session's ANSI mode, where element_at past the end throws.
+  private def toks(k: Int) = (0 until k).map(i => s"$k:t$i")
+  private def tokRows(sizes: Int*) = {
+    import spark.implicits._
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    sizes.map(k => (k, toks(k))).toDF("id", "ws")
+  }
+
+  test("TextOps.windows + gram: the n-grams of sliding(n), none below n") {
+    val ws = col("ws")
+    for (n <- Seq(2, 3, 10)) {
+      val sizes = Seq(0, 1, n - 1, n, n + 1)
+      val got = tokRows(sizes: _*)
+        .select(col("id"), ws, TextOps.windows(ws, n).as("i"))
+        .select(col("id"), col("i"), TextOps.gram(ws, col("i"), n))
+        .collect().map(r => (r.getInt(0), r.getInt(1), r.getString(2)))
+      val want = sizes.flatMap(k => toks(k).sliding(n).filter(_.size == n)
+        .zipWithIndex.map { case (g, i) => (k, i, g.mkString(" ")) })
+      assert(got.sorted.toSeq == want.sorted, s"n=$n")
+    }
+  }
+
+  test("TextOps.windows with a step: the starts of (0 until size by 15)") {
+    val sizes = Seq(0, 1, 15, 16, 31)
+    val got = tokRows(sizes: _*)
+      .select(col("id"), TextOps.windows(col("ws"), 1, 15).as("i"))
+      .collect().map(r => (r.getInt(0), r.getInt(1)))
+    val want = sizes.flatMap(k => (0 until k by 15).map(k -> _))
+    assert(got.sorted.toSeq == want.sorted)
+  }
+
+  test("TextOps.combos: the k = 2 and 3 combinations of a sorted array") {
+    for (k <- Seq(2, 3)) {
+      val names = (1 to k).map(d => s"e$d")
+      val got = TextOps.combos(tokRows(0 to 5: _*), "ws", names: _*)
+        .collect().map(r => names.indices.map(r.getString).mkString(" "))
+      val want = (0 to 5).flatMap(n => toks(n).combinations(k))
+        .map(_.mkString(" "))
+      assert(got.sorted.toSeq == want.sorted, s"k=$k")
+    }
   }
 
   test("seasonal_decompose: components re-add to the observation and " +
