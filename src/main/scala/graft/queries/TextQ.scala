@@ -1346,6 +1346,27 @@ object TextQ {
       .select(col("doc_id"), col("i"), TextOps.gram(ws, col("i"), 10).as("seq"))
   }
 
+  /** Every maximal repeated span (≥ 10 tokens) between docs a_id < b_id,
+    * one row per island: (a_id, b_id, diag, start_a, len). Seed matches
+    * on one offset diagonal (diag = pa − pb) split into consecutive-
+    * position islands (the gaps-and-islands device, grp = pa −
+    * row_number); an island of k seeds is a span of k + 9 tokens starting
+    * at start_a in doc a and start_a − diag in doc b. */
+  private def spanIslands(words: DataFrame): DataFrame = {
+    val seeds = seeds10(words)
+    val wIsl = Window.partitionBy(col("a_id"), col("b_id"), col("diag"))
+      .orderBy(col("pa"))
+    seeds.select(col("doc_id").as("a_id"), col("i").as("pa"), col("seq"))
+      .join(seeds.select(col("doc_id").as("b_id"), col("i").as("pb"),
+        col("seq")), "seq")
+      .filter(col("a_id") < col("b_id"))
+      .withColumn("diag", col("pa") - col("pb"))
+      .withColumn("grp", col("pa") - row_number().over(wIsl))
+      .groupBy(col("a_id"), col("b_id"), col("diag"), col("grp"))
+      .agg(min(col("pa")).as("start_a"), (count(lit(1)) + 9).as("len"))
+      .drop("grp")
+  }
+
   /** Variable-length maximal-repeat dedup (r10) — upgrading
     * dup_sequences' fixed 10-token report to the LONGEST shared span per
     * doc pair (the object Lee et al. ACL'22 substring dedup actually
@@ -1370,19 +1391,7 @@ object TextQ {
     val ws = col("ws")
     val words = t(s, dir, "documents")
       .select(col("doc_id"), TextOps.tokens(col("text")).as("ws"))
-    val seeds = seeds10(words)
-    val m = seeds.select(col("doc_id").as("a_id"), col("i").as("pa"),
-        col("seq"))
-      .join(seeds.select(col("doc_id").as("b_id"), col("i").as("pb"),
-        col("seq")), "seq")
-      .filter(col("a_id") < col("b_id"))
-    val wIsl = Window.partitionBy(col("a_id"), col("b_id"), col("diag"))
-      .orderBy(col("pa"))
-    val spans = m.withColumn("diag", col("pa") - col("pb"))
-      .withColumn("grp", col("pa") - row_number().over(wIsl))
-      .groupBy(col("a_id"), col("b_id"), col("diag"), col("grp"))
-      .agg(min(col("pa")).as("start_a"),
-        (count(lit(1)) + 9).as("len_tokens"))
+    val spans = spanIslands(words).withColumnRenamed("len", "len_tokens")
     val wBest = Window.partitionBy(col("a_id"), col("b_id"))
       .orderBy(col("len_tokens").desc, col("start_a"), col("diag"))
     spans.withColumn("rn", row_number().over(wBest))
@@ -1418,19 +1427,9 @@ object TextQ {
       .select(col("doc_id"), col("source"), TextOps.tokens(col("text"))
         .as("ws"))
       .ckpt() // reused: seeds, token explode, final manifest
-    val seeds = seeds10(words)
-    val m = seeds.select(col("doc_id").as("a_id"), col("i").as("pa"),
-        col("seq"))
-      .join(seeds.select(col("doc_id").as("b_id"), col("i").as("pb"),
-        col("seq")), "seq")
-      .filter(col("a_id") < col("b_id"))
-    val wIsl = Window.partitionBy(col("a_id"), col("b_id"), col("diag"))
-      .orderBy(col("pa"))
-    val islands = m.withColumn("diag", col("pa") - col("pb"))
-      .withColumn("grp", col("pa") - row_number().over(wIsl))
-      .groupBy(col("a_id"), col("b_id"), col("diag"), col("grp"))
-      .agg(min(col("pa") - col("diag")).as("start_b"),
-        (count(lit(1)) + 9).as("len"))
+    // diag is constant within an island, so start_a − diag = min(pb)
+    val islands = spanIslands(words)
+      .withColumn("start_b", col("start_a") - col("diag"))
     val cut = islands
       .select(col("b_id").as("doc_id"),
         explode(sequence(col("start_b"),

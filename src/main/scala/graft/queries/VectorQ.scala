@@ -40,23 +40,128 @@ object VectorQ {
       .withColumn("nrm", sqrt(gdot(col("v"), col("v"))))
   }
 
-  /** Brute-force cosine top-5 neighbours for the 50 query vectors
-    * (vec_id < 50 — present at every scale factor). */
-  val knnTop5: QFn = (s, dir) => {
-    val e = unitBase(s, dir)
-    val q = e.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    q.crossJoin(e)
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos_sim",
-        r6(gdot(col("qv"), col("v")) / (col("qn") * col("nrm"))))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 5)
-      .select(col("qid"), col("vec_id"), col("cos_sim"), col("rn"))
-      .orderBy(col("qid"), col("rn"))
+  private type DF = org.apache.spark.sql.DataFrame
+
+  // ---- The search kernel: every tier below is a candidate generator
+  // feeding these few steps, so the ranking rule (r6 cosine, DESC with
+  // the vec_id tie-break, self excluded, cut at k) and the zero-norm
+  // rule live here once.
+
+  /** Rounded cosine of `a` and `b` from their norms. A zero-norm side has
+    * no defined cosine: it scores NULL (which sorts last under DESC in
+    * both engines), not an ANSI divide-by-zero abort. */
+  private[graft] def cosine(a: Column, an: Column, b: Column,
+      bn: Column): Column =
+    r6(gdot(a, b) / nullif(an * bn, lit(0.0)))
+
+  /** r6-rounded squared euclidean distance ‖a‖² − 2a·b + ‖b‖². */
+  private def sqDist(a: Column, b: Column): Column =
+    r6(gdot(a, a) - lit(2) * gdot(a, b) + gdot(b, b))
+
+  /** Per `by`, the top k rows by `score` DESC, the lower `tie` first; the
+    * INT rank lands in column `rank`. */
+  private[graft] def topPer(df: DF, by: String, score: String, k: Int,
+      rank: String, tie: String = "vec_id"): DF =
+    df.withColumn(rank, row_number().over(
+        Window.partitionBy(col(by)).orderBy(col(score).desc, col(tie))))
+      .filter(col(rank) <= k)
+
+  /** Every row of `df` as a query: (qid, qv, qn) plus `extra`. */
+  private def asQueries(df: DF, extra: Column*): DF =
+    df.select(Seq(col("vec_id").as("qid"), col("v").as("qv"),
+      col("nrm").as("qn")) ++ extra: _*)
+
+  /** The 50 query vectors (vec_id < 50 — present at every scale factor). */
+  private def probeSide(e: DF, extra: Column*): DF =
+    asQueries(e.filter(col("vec_id") < 50), extra: _*)
+
+  /** The brute-force candidate pairs: every query against every vector. */
+  private def brute(e: DF): DF = probeSide(e).crossJoin(e)
+
+  /** Exact search over candidate pairs (qid, qv, qn) × (vec_id, v, nrm):
+    * self excluded, `cos_sim` scored, the top k per query ranked in
+    * `rank`. */
+  private[graft] def nearest(pairs: DF, k: Int, rank: String = "rn"): DF =
+    topPer(pairs.filter(col("vec_id") =!= col("qid"))
+        .withColumn("cos_sim",
+          cosine(col("qv"), col("qn"), col("v"), col("nrm"))),
+      "qid", "cos_sim", k, rank)
+
+  /** [[nearest]] as a tier's output: (qid, vec_id, cos_sim, rn BIGINT). */
+  private def knn(pairs: DF, k: Int): DF =
+    nearest(pairs, k).select(col("qid"), col("vec_id"), col("cos_sim"),
+      col("rn").cast("long").as("rn"))
+
+  /** A tier's approximate stage over candidate pairs: self excluded,
+    * scored by `approx`, the top k per query as (qid, vec_id, `rank`). */
+  private def shortlist(pairs: DF, approx: Column, k: Int,
+      rank: String): DF =
+    topPer(pairs.filter(col("vec_id") =!= col("qid"))
+        .withColumn("approx", approx), "qid", "approx", k, rank)
+      .select(col("qid"), col("vec_id"), col(rank))
+
+  /** Exact rerank of a (qid, vec_id) shortlist: only the survivors join
+    * their full-precision vectors back from `e` by id. */
+  private def rerank(cand: DF, e: DF, k: Int): DF =
+    knn(cand.join(e.select(col("vec_id"), col("v"), col("nrm")), "vec_id")
+      .join(probeSide(e), "qid"), k)
+
+  /** Each vector's `keep` nearest cells: vectors (vec_id, v, nrm) against
+    * the broadcast centroids (`cl`, cvec), `crn` ranking cells by r6
+    * squared distance `fdist`, ties to the lower cell label. */
+  private[graft] def nearestCells(vecs: DF, cents: DF, cl: String,
+      keep: Int): DF =
+    vecs.crossJoin(broadcast(cents))
+      .withColumn("fdist", sqDist(col("v"), col("cvec")))
+      .withColumn("crn", row_number().over(
+        Window.partitionBy(col("vec_id")).orderBy(col("fdist"), col(cl))))
+      .filter(col("crn") <= keep)
+
+  /** An assignment's home cells: (vec_id, cell, v, nrm) at crn = 1. */
+  private def homeCells(asg: DF, cl: String): DF =
+    asg.filter(col("crn") === 1)
+      .select(col("vec_id"), col(cl).as("cell"), col("v"), col("nrm"))
+
+  /** Per-`by` mean vector `cvec`: components fixed to DECIMAL(12,9) before
+    * the sum, so the per-(group, pos) totals are exact and
+    * order-independent, then r6(sum / count) back in position order. */
+  private def meanVec(df: DF, by: String, vec: Column): DF =
+    df.select(col(by), posexplode(vec).as(Seq("pos", "ev")))
+      .groupBy(col(by), col("pos"))
+      .agg(sum(dec(col("ev").cast("double"), 12, 9)).as("sv"),
+        count(lit(1)).as("n"))
+      .select(col(by), col("pos"), r6(dbl(col("sv")) / col("n")).as("c"))
+      .groupBy(col(by))
+      .agg(transform(sort_array(collect_list(struct(col("pos"), col("c")))),
+        x => x.getField("c")).as("cvec"))
+
+  // argmin via min(struct(dist, cl, carry)) — lexicographic struct
+  // ordering = (dist, then cl) with cl unique, identical to a row_number
+  // window but partial+final aggregated: map-side combine ships ONE
+  // candidate per vector per partition instead of window-sorting all k
+  // copies.
+  private def argmin(pts: DF, cents: DF, vec: String, carry: String): DF =
+    pts.crossJoin(broadcast(cents))
+      .withColumn("dist", sqDist(col(vec), col("cvec")))
+      .groupBy(col("vec_id"))
+      .agg(min(struct(col("dist"), col("cl"), col(carry))).as("arg"))
+
+  /** Lloyd k-means over points (vec_id, `vec`): init = the k lowest
+    * vec_ids, then 2 re-estimations; returns the centroids (cl, cvec)
+    * the 3rd, final assignment runs against. */
+  private def lloyd(pts: DF, vec: String, k: Long): DF = {
+    var cents = pts.filter(col("vec_id") < k)
+      .select(col("vec_id").as("cl"), col(vec).as("cvec"))
+    for (_ <- 1 to 2)
+      cents = meanVec(argmin(pts, cents, vec, vec)
+        .select(col("arg.cl").as("cl"), col(s"arg.$vec").as("x")),
+        "cl", col("x"))
+    cents
   }
+
+  /** Brute-force cosine top-5 neighbours for the 50 query vectors. */
+  val knnTop5: QFn = (s, dir) =>
+    knn(brute(unitBase(s, dir)), 5).orderBy(col("qid"), col("rn"))
 
   /** kNN classification (r8) — the consumer of the similarity stack: each
     * of the 50 query vectors takes the MAJORITY LABEL of its cosine top-5
@@ -65,28 +170,13 @@ object VectorQ {
     * qknn_cosine_top5; at scale the candidate stage swaps to any ANN tier
     * (LSH/IVF/SQ/PQ — same vote contract) since the vote only needs the
     * top-5 set, not exact global order. */
-  val knnClassify: QFn = (s, dir) => {
-    val e = unitBase(s, dir)
-    val q = e.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    val wv = Window.partitionBy(col("qid"))
-      .orderBy(col("votes").desc, col("label"))
-    q.crossJoin(e)
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos_sim",
-        r6(gdot(col("qv"), col("v")) / (col("qn") * col("nrm"))))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .groupBy(col("qid"), col("label"))
-      .agg(count(lit(1)).as("votes"))
-      .withColumn("rk", row_number().over(wv))
-      .filter(col("rk") === 1)
+  val knnClassify: QFn = (s, dir) =>
+    topPer(nearest(brute(unitBase(s, dir)), 5)
+        .groupBy(col("qid"), col("label"))
+        .agg(count(lit(1)).as("votes")), "qid", "votes", 1, "rk", "label")
       .select(col("qid"), col("label").cast("long").as("pred_label"),
         col("votes"))
       .orderBy(col("qid"))
-  }
 
   /** Mean 64-d vector per label. Components are fixed to DECIMAL(12,9)
     * before the sum so the per-(label,pos) totals are exact and
@@ -213,18 +303,7 @@ object VectorQ {
     * by design and the oracle runs the identical algorithm. */
   val annLshKnn: QFn = (s, dir) => {
     val e = unitBase(s, dir).withColumn("bucket", lshBucket(col("v")))
-    val q = e.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("nrm").as("qn"), col("bucket"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    q.join(e.select(col("vec_id"), col("v"), col("nrm"), col("bucket")), "bucket")
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos_sim",
-        r6(gdot(col("qv"), col("v")) / (col("qn") * col("nrm"))))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 3)
-      .select(col("qid"), col("vec_id"), col("cos_sim"), col("rn"))
+    knn(probeSide(e, col("bucket")).join(e, "bucket"), 3)
       .orderBy(col("qid"), col("rn"))
   }
 
@@ -257,34 +336,19 @@ object VectorQ {
     * AnnQualitySpec. The oracle runs the identical probe sequence. */
   val annMultiprobeKnn: QFn = (s, dir) => {
     val e = unitBase(s, dir).withColumn("bucket", lshBucket(col("v")))
-    val q = e.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"),
-        explode(array((-1 to 7).map(f => lshBucketFlip(col("v"), f)): _*))
-          .as("bucket"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    q.join(e.select(col("vec_id"), col("v"), col("nrm"), col("bucket")), "bucket")
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos_sim",
-        r6(gdot(col("qv"), col("v")) / (col("qn") * col("nrm"))))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 3)
-      .select(col("qid"), col("vec_id"), col("cos_sim"), col("rn"))
-      .orderBy(col("qid"), col("rn"))
+    val probes = probeSide(e,
+      explode(array((-1 to 7).map(f => lshBucketFlip(col("v"), f)): _*))
+        .as("bucket"))
+    knn(probes.join(e, "bucket"), 3).orderBy(col("qid"), col("rn"))
   }
 
-  /** IVF-style approximate kNN: coarse cells are the per-label centroids
-    * (rounded, so both engines hold identical cell geometry); every vector
-    * is assigned to its nearest centroid, queries probe the 2 nearest
-    * cells, and exact cosine ranks only the probed candidates. The other
-    * canonical ANN layout next to ann_lsh_knn — candidates shrink from |N|
-    * to ~2|N|/cells, and at scale the centroid set stays broadcastable. */
   /** The shared IVF coarse stage: per-label centroids (rounded, identical
     * cell geometry both engines), every vector scored against the
     * broadcast centroid set, `crn` ranking cells by distance per vector.
     * Consumed by ann_ivf_knn (probe + exact cosine) and ann_ivfpq_knn
-    * (probe + PQ-residual ADC + rerank). */
-  /** Coarse-quantizer artifact: the assignment is a trained INDEX —
+    * (probe + PQ-residual ADC + rerank).
+    *
+    * Coarse-quantizer artifact: the assignment is a trained INDEX —
     * ann_ivf_knn, ann_ivfpq_knn, and the recall report all consume the
     * same geometry, so it is built once per (JVM, dir) and MATERIALIZED
     * to a scratch parquet sidecar (r15 — the SQ8 sidecar pattern,
@@ -308,51 +372,37 @@ object VectorQ {
     // `exists()` would treat as built, and independent sidecars no
     // longer serialize on one global VectorQ lock.
     val side = core.sidecarOnce(s, dir, "ivf_coarse") { tmp =>
-      ivfCoarseBuild(s, dir).filter(col("crn") <= 2)
+      val cents = meanVec(t(s, dir, "embeddings"), "label", col("embedding"))
+        .select(col("label").as("clabel"), col("cvec"))
+      nearestCells(unitBase(s, dir).select(col("vec_id"), col("v"),
+          col("nrm")), cents, "clabel", 2)
         .write.mode("overwrite").parquet(tmp.toString)
     }
     s.read.parquet(side)
   }
 
-  private def ivfCoarseBuild(s: SparkSession, dir: String) = {
-    val centroids = t(s, dir, "embeddings")
-      .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "ev")))
-      .groupBy(col("label"), col("pos"))
-      .agg(sum(dec(col("ev").cast("double"), 12, 9)).as("sv"),
-        count(lit(1)).as("cn"))
-      .select(col("label"), col("pos"), r6(dbl(col("sv")) / col("cn")).as("c"))
-      .groupBy(col("label"))
-      .agg(transform(sort_array(collect_list(struct(col("pos"), col("c")))),
-        x => x.getField("c")).as("cvec"))
-    val e = unitBase(s, dir)
-    val dist = r6(gdot(col("v"), col("v")) - lit(2) * gdot(col("v"), col("cvec")) +
-      gdot(col("cvec"), col("cvec")))
-    val wCell = Window.partitionBy(col("vec_id"))
-      .orderBy(col("fdist"), col("clabel"))
-    e.select(col("vec_id"), col("v"), col("nrm"))
-      .crossJoin(broadcast(centroids.select(col("label").as("clabel"), col("cvec"))))
-      .withColumn("fdist", dist)
-      .withColumn("crn", row_number().over(wCell))
-  }
+  /** The IVF tiers' probe side: the 50 queries, each in its 2 nearest
+    * coarse cells (the only rows the ivfCoarse artifact holds). */
+  private def ivfProbes(asg: DF): DF =
+    probeSide(asg, col("clabel").as("cell"))
 
+  /** IVF-style approximate kNN: coarse cells are the per-label centroids
+    * (rounded, so both engines hold identical cell geometry); every vector
+    * is assigned to its nearest centroid, queries probe the 2 nearest
+    * cells, and exact cosine ranks only the probed candidates. The other
+    * canonical ANN layout next to ann_lsh_knn — candidates shrink from |N|
+    * to ~2|N|/cells, and at scale the centroid set stays broadcastable. */
   val annIvfKnn: QFn = (s, dir) => {
     val asg = ivfCoarse(s, dir)
-    val cells = asg.filter(col("crn") === 1)
-      .select(col("vec_id"), col("v"), col("nrm"), col("clabel").as("cell"))
-    val probes = asg.filter(col("crn") <= 2 && col("vec_id") < 50)
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("nrm").as("qn"), col("clabel").as("cell"))
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    probes.join(cells, "cell")
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos_sim",
-        r6(gdot(col("qv"), col("v")) / (col("qn") * col("nrm"))))
-      .withColumn("rn", row_number().over(wTop).cast("long"))
-      .filter(col("rn") <= 3)
-      .select(col("qid"), col("vec_id"), col("cos_sim"), col("rn"))
+    knn(ivfProbes(asg).join(homeCells(asg, "clabel"), "cell"), 3)
       .orderBy(col("qid"), col("rn"))
   }
+
+  /** `df` restricted to vectors whose document is lang = 'en'. */
+  private def enOnly(s: SparkSession, dir: String, df: DF): DF =
+    df.join(t(s, dir, "documents")
+        .select(col("doc_id").as("vec_id"), col("lang")), Seq("vec_id"))
+      .filter(col("lang") === "en")
 
   /** Metadata-filtered ANN (r13) — the production "top-5 among vectors
     * WHERE lang = 'en'" shape: the predicate (metadata joined from
@@ -369,24 +419,8 @@ object VectorQ {
     * probe join — strictly cheaper than unfiltered IVF. */
   val annFilteredKnn: QFn = (s, dir) => {
     val asg = ivfCoarse(s, dir)
-    val meta = t(s, dir, "documents")
-      .select(col("doc_id").as("vec_id"), col("lang"))
-    val cells = asg.filter(col("crn") === 1)
-      .select(col("vec_id"), col("v"), col("nrm"), col("clabel").as("cell"))
-      .join(meta, Seq("vec_id"))
-      .filter(col("lang") === "en")
-    val probes = asg.filter(col("crn") <= 2 && col("vec_id") < 50)
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("nrm").as("qn"), col("clabel").as("cell"))
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    probes.join(cells, Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos_sim",
-        r6(gdot(col("qv"), col("v")) / (col("qn") * col("nrm"))))
-      .withColumn("rn", row_number().over(wTop).cast("long"))
-      .filter(col("rn") <= 5)
-      .select(col("qid"), col("vec_id"), col("cos_sim"), col("rn"))
+    knn(ivfProbes(asg)
+        .join(enOnly(s, dir, homeCells(asg, "clabel")), Seq("cell")), 5)
       .orderBy(col("qid"), col("rn"))
   }
 
@@ -396,21 +430,7 @@ object VectorQ {
   private[graft] def bruteFilteredTop5(s: SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
     val e = unitBase(s, dir)
-    val meta = t(s, dir, "documents")
-      .select(col("doc_id").as("vec_id"), col("lang"))
-    val base = e.join(meta, Seq("vec_id")).filter(col("lang") === "en")
-      .select(col("vec_id"), col("v"), col("nrm"))
-    val q = e.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("nrm").as("qn"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    q.crossJoin(base)
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos_sim",
-        r6(gdot(col("qv"), col("v")) / (col("qn") * col("nrm"))))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 5)
+    knn(probeSide(e).crossJoin(enOnly(s, dir, e)), 5)
       .select(col("qid"), col("vec_id"), col("rn"))
   }
 
@@ -436,38 +456,25 @@ object VectorQ {
       // a half-written index and replayed builders elect one winner.
       core.publishOnce(s, new org.apache.hadoop.fs.Path(core.registryRoot),
           "ann_index_" + core.dirKey(dir)) { root =>
-        val centroids = t(s, dir, "embeddings")
-          .filter(col("vec_id") % 4 =!= 0)
-          .select(col("label"),
-            posexplode(col("embedding")).as(Seq("pos", "ev")))
-          .groupBy(col("label"), col("pos"))
-          .agg(sum(dec(col("ev").cast("double"), 12, 9)).as("sv"),
-            count(lit(1)).as("cn"))
-          .select(col("label"), col("pos"),
-            r6(dbl(col("sv")) / col("cn")).as("c"))
-          .groupBy(col("label"))
-          .agg(transform(sort_array(collect_list(struct(col("pos"),
-            col("c")))), x => x.getField("c")).as("cvec"))
-        centroids.coalesce(1).write.mode("overwrite")
-          .parquet(s"$root/centroids")
-        val cents = s.read.parquet(s"$root/centroids")
-          .select(col("label").as("clabel"), col("cvec"))
-        val dist = r6(gdot(col("v"), col("v")) -
-          lit(2) * gdot(col("v"), col("cvec")) +
-          gdot(col("cvec"), col("cvec")))
-        val wCell = Window.partitionBy(col("vec_id"))
-          .orderBy(col("fdist"), col("clabel"))
-        unitBase(s, dir).filter(col("vec_id") % 4 =!= 0)
-          .select(col("vec_id"), col("v"), col("nrm"))
-          .crossJoin(broadcast(cents))
-          .withColumn("fdist", dist)
-          .withColumn("crn", row_number().over(wCell))
-          .filter(col("crn") === 1)
-          .select(col("vec_id"), col("clabel").as("cell"), col("v"),
-            col("nrm"))
+        meanVec(t(s, dir, "embeddings").filter(col("vec_id") % 4 =!= 0),
+            "label", col("embedding"))
+          .coalesce(1).write.mode("overwrite").parquet(s"$root/centroids")
+        homeCells(indexCells(s, dir, s"$root", batch = false, 1), "clabel")
           .write.mode("overwrite").parquet(s"$root/base")
       }.toString
     }
+
+  /** The standing index's nearest cells for the history (vec_id % 4 ≠ 0)
+    * or the new batch (vec_id % 4 = 0), against its PERSISTED centroids
+    * under `root`. */
+  private def indexCells(s: SparkSession, dir: String, root: String,
+      batch: Boolean, keep: Int): DF = {
+    val part = if (batch) col("vec_id") % 4 === 0 else col("vec_id") % 4 =!= 0
+    nearestCells(
+      unitBase(s, dir).filter(part).select(col("vec_id"), col("v"), col("nrm")),
+      s.read.parquet(s"$root/centroids")
+        .select(col("label").as("clabel"), col("cvec")), "clabel", keep)
+  }
 
   /** Standing-index ANN maintenance (r11) — probe + upsert a NEW batch
     * against the persisted IVF index (annIndexDir): the per-batch
@@ -488,40 +495,14 @@ object VectorQ {
     * build is paid once (ScalingSpec gates the amortization). */
   val incrementalAnn: QFn = (s, dir) => {
     val root = annIndexDir(s, dir)
-    val cents = s.read.parquet(s"$root/centroids")
-      .select(col("label").as("clabel"), col("cvec"))
     val base = s.read.parquet(s"$root/base")
-    val dist = r6(gdot(col("v"), col("v")) -
-      lit(2) * gdot(col("v"), col("cvec")) +
-      gdot(col("cvec"), col("cvec")))
-    val wCell = Window.partitionBy(col("vec_id"))
-      .orderBy(col("fdist"), col("clabel"))
-    val asg = unitBase(s, dir).filter(col("vec_id") % 4 === 0)
-      .select(col("vec_id"), col("v"), col("nrm"))
-      .crossJoin(broadcast(cents))
-      .withColumn("fdist", dist)
-      .withColumn("crn", row_number().over(wCell))
+    val asg = indexCells(s, dir, root, batch = true, 2)
       .ckpt() // consumed by the upsert write AND the probe
-    asg.filter(col("crn") === 1)
-      .select(col("vec_id"), col("clabel").as("cell"), col("v"), col("nrm"))
-      .write.mode("overwrite").parquet(s"$root/delta")
-    val probes = asg.filter(col("crn") <= 2)
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("nrm").as("qn"), col("clabel").as("cell"))
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    val res = probes
-      .join(base.select(col("vec_id"), col("v"), col("nrm"), col("cell")),
-        "cell")
-      // nullif: a zero-norm (all-zero) batch vector has no defined cosine
-      // — null, not an ANSI divide-by-zero abort (fixtures are zero-free;
-      // EdgeCorpusSpec manufactures the case)
-      .withColumn("cos_sim",
-        r6(gdot(col("qv"), col("v")) /
-          nullif(col("qn") * col("nrm"), lit(0.0))))
-      .withColumn("rn", row_number().over(wTop).cast("long"))
-      .filter(col("rn") <= 3)
-      .select(col("qid"), col("vec_id"), col("cos_sim"), col("rn"))
+    homeCells(asg, "clabel").write.mode("overwrite").parquet(s"$root/delta")
+    // every probe is a batch vector and every candidate history, so the
+    // kernel's self filter never fires here
+    val res = knn(asQueries(asg, col("clabel").as("cell")).join(base, "cell"),
+      3)
     val summary = base.agg(count(lit(1)).as("n_index_base"))
       .crossJoin(s.read.parquet(s"$root/delta")
         .agg(count(lit(1)).as("n_upserted")))
@@ -545,22 +526,9 @@ object VectorQ {
     * independently — embarrassingly parallel). */
   val annIndexCompact: QFn = (s, dir) => {
     val root = annIndexDir(s, dir)
-    val cents = s.read.parquet(s"$root/centroids")
-      .select(col("label").as("clabel"), col("cvec"))
-    val base = s.read.parquet(s"$root/base")
-    val dist = r6(gdot(col("v"), col("v")) -
-      lit(2) * gdot(col("v"), col("cvec")) +
-      gdot(col("cvec"), col("cvec")))
-    val wCell = Window.partitionBy(col("vec_id"))
-      .orderBy(col("fdist"), col("clabel"))
-    val delta = unitBase(s, dir).filter(col("vec_id") % 4 === 0)
-      .select(col("vec_id"), col("v"), col("nrm"))
-      .crossJoin(broadcast(cents))
-      .withColumn("fdist", dist)
-      .withColumn("crn", row_number().over(wCell))
-      .filter(col("crn") === 1)
-      .select(col("vec_id"), col("clabel").as("cell"), col("v"), col("nrm"))
-    base.unionByName(delta)
+    s.read.parquet(s"$root/base")
+      .unionByName(homeCells(indexCells(s, dir, root, batch = true, 1),
+        "clabel"))
       .write.mode("overwrite").parquet(s"$root/compacted")
     s.read.parquet(s"$root/compacted")
       .groupBy(col("cell"))
@@ -575,25 +543,14 @@ object VectorQ {
     * approximate tier measured against brute force on the same 50
     * queries, as an oracle-checked report instead of spec-only gates
     * (AnnQualitySpec keeps its enrichment gates; this key makes the
-    * recall numbers themselves reproducible evidence). Per tier: k is
-    * the tier's own emission contract (3 for the probe tiers, 5 for the
-    * rerank tiers), hits = |tier results ∩ brute top-k|, recall =
-    * hits / |brute top-k| — the standard ANN evaluation (Faiss's
-    * recall@k). The Spark side COMPOSES the tier queries themselves and
-    * the oracle nests each tier's own SQL as a CTE, so any tier drift
-    * breaks both sides identically — the report can never go stale
-    * against the tiers it grades. */
+    * recall numbers themselves reproducible evidence). Per tier (the
+    * one [[RecallTiers]] table both engines read): hits = |tier results
+    * ∩ brute top-k|, recall = hits / |brute top-k| — the standard ANN
+    * evaluation (Faiss's recall@k). The Spark side COMPOSES the tier
+    * queries themselves and the oracle nests each tier's own SQL as a
+    * CTE, so any tier drift breaks both sides identically — the report
+    * can never go stale against the tiers it grades. */
   val annRecallReport: QFn = (s, dir) => {
-    val tiers: Seq[(String, QFn, Int)] = Seq(
-      ("ann_hnsw_knn", annHnswKnn, 5),
-      ("ann_ivf_knn", annIvfKnn, 3),
-      ("ann_ivfpq_knn", annIvfPqKnn, 5),
-      ("ann_lsh_knn", annLshKnn, 3),
-      ("ann_multiprobe_knn", annMultiprobeKnn, 3),
-      ("ann_opq_knn", annOpqKnn, 5),
-      ("ann_pq_knn", annPqKnn, 5),
-      ("ann_randproj_knn", annRandProjKnn, 5),
-      ("ann_sq_knn", annSqKnn, 5))
     def row(name: String, tier: org.apache.spark.sql.DataFrame, k: Int,
         baseline: org.apache.spark.sql.DataFrame) = {
       val hits = tier.select(col("qid"), col("vec_id"))
@@ -625,14 +582,13 @@ object VectorQ {
     // intermediate is eager-checkpointed inside its thread, so the
     // final union is a 10-row assembly; values are byte-identical to
     // the serial composition (same per-tier plans, same baselines).
-    type DF = org.apache.spark.sql.DataFrame
-    // Pool sized to the 12 independent chains (r16 — was 6: two chains
-    // always waited for a slot even when executor slots sat idle) and a
-    // CONFIGURABLE chain timeout (r16, verdict #5/#7: a hard-coded 20 min
-    // would kill a cold 100 TB chain; deployments size it to their build
-    // cost, the registry-lock-timeout pattern).
+    // One thread per chain, the tiers plus the 2 baselines (r16 — at 6,
+    // two chains always waited for a slot even when executor slots sat
+    // idle), and a CONFIGURABLE chain timeout (r16, verdict #5/#7: a
+    // hard-coded 20 min would kill a cold 100 TB chain; deployments size
+    // it to their build cost, the registry-lock-timeout pattern).
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      sys.props.getOrElse("graft.report.poolSize", "12").toInt)
+      RecallTiers.size + 2)
     val chainTimeoutSec =
       sys.props.getOrElse("graft.report.chainTimeoutSec", "1200").toLong
     def submit(body: => DF): java.util.concurrent.Future[DF] =
@@ -648,11 +604,10 @@ object VectorQ {
         // the filtered tier grades against its OWN ground truth — brute
         // top-5 over the same lang='en' candidate set (r13)
         val bruteFFut = submit(bruteFilteredTop5(s.newSession(), dir).ckpt())
-        val tierFuts = (tiers :+ (("ann_filtered_knn", annFilteredKnn, 5)))
-          .map { case (name, fn, k) =>
-            (name, k, submit(fn(s.newSession(), dir)
-              .select(col("qid"), col("vec_id")).ckpt()))
-          }
+        val tierFuts = RecallTiers.map { case (name, k) =>
+          (name, k, submit(queries(name)(s.newSession(), dir)
+            .select(col("qid"), col("vec_id")).ckpt()))
+        }
         val brute = get(bruteFut)
         val bruteF = get(bruteFFut)
         tierFuts.map { case (name, k, fut) =>
@@ -663,6 +618,17 @@ object VectorQ {
       } finally pool.shutdown()
     rows.reduce(_ unionByName _).orderBy(col("tier"))
   }
+
+  /** The tiers ann_recall_report grades, each at k = its emission
+    * contract: 3 for the LSH, multiprobe and IVF probe tiers, 5 for the
+    * others. ann_randproj_knn emits only its top-3 yet is graded at 5, so
+    * its recall tops out at 0.6. ann_filtered_knn grades against the
+    * brute FILTERED baseline (r13), every other tier against plain brute. */
+  private val RecallTiers: Seq[(String, Int)] = Seq(
+    "ann_filtered_knn" -> 5, "ann_hnsw_knn" -> 5, "ann_ivf_knn" -> 3,
+    "ann_ivfpq_knn" -> 5, "ann_lsh_knn" -> 3, "ann_multiprobe_knn" -> 3,
+    "ann_opq_knn" -> 5, "ann_pq_knn" -> 5, "ann_randproj_knn" -> 5,
+    "ann_sq_knn" -> 5)
 
   /** Near-dup cluster assignment: min-label propagation iterated **to
     * fixpoint** over the banded near-dup graph — what a real dedup
@@ -692,53 +658,16 @@ object VectorQ {
       .orderBy(col("vec_id"))
   }
 
-  /** Distributed k-means over the embedding corpus (k = ceil(n/64)
-    * derived from the corpus count, 3 Lloyd iterations) — the
-    * semantic-curation primitive: cluster-then-sample /
-    * cluster-then-dedup (SemDeDup-style) pipelines run exactly this before
-    * any per-cluster policy. Deterministic end to end, so it carries a
-    * full DuckDB oracle (the 3 iterations unrolled as a CTE chain):
-    * init = the k lowest-vec_id vectors; assignment = argmin of r6-rounded
-    * squared euclidean (ties to the lower cluster id); means = exact
-    * DECIMAL(12,9) component sums / count, r6-rounded — the same
-    * conventions the ann_ivf_knn oracle already proves cross-engine.
-    *
-    * Scale shape: each iteration is one broadcast of k centroids against
-    * the corpus (no shuffle for assignment — k·dim doubles) plus one
-    * partial+final aggregate keyed on (cluster, pos) for the means. At
-    * 100 TB this is the canonical Lloyd layout; iteration count is a fixed
-    * budget (3), which is how production pipelines run it (convergence to
-    * tolerance is a stopping-rule refinement, not a different plan). */
-  /** The shared kmeans pipeline ending in the FINAL assignment
-    * (vec_id, v, cl, dist) — consumed by kmeans_embed and by the
-    * SemDeDup composition in semdedup_prune. */
   /** Target mean cluster size for the corpus-scaled k (SemDeDup scales k
     * with corpus size so within-cluster pair work stays O(n·target), not
     * O(n²/k) with a frozen k — the round-4 verdict's one scale-killer). */
   val KmeansTarget = 64
-
-  private def kmDist = r6(gdot(col("v"), col("v")) -
-    lit(2) * gdot(col("v"), col("cvec")) + gdot(col("cvec"), col("cvec")))
-
-  // argmin via min(struct(dist, cl, v)) — lexicographic struct ordering
-  // = (dist, then cl) with cl unique, identical to a row_number window
-  // but partial+final aggregated: map-side combine ships ONE candidate
-  // per vector per partition instead of window-sorting all k copies.
-  private def kmAssign(e: org.apache.spark.sql.DataFrame,
-      cents: org.apache.spark.sql.DataFrame) =
-    e.crossJoin(broadcast(cents))
-      .withColumn("dist", kmDist)
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("dist"), col("cl"), col("v"))).as("m"))
-      .select(col("vec_id"), col("m.v").as("v"), col("m.cl").as("cl"),
-        col("m.dist").as("dist"))
 
   /** FINAL kmeans centroids (cl, cvec) — the geometry after the 2 Lloyd
     * re-estimations, shared by kmeansAssignFinal (which runs the 3rd,
     * final assignment over it) and the ann_hnsw_knn graph build (which
     * needs crn ≤ 2 cell probes against the same corpus-scaled cells). */
   private[graft] def kmeansCentsFinal(s: SparkSession, dir: String) = {
-    val e = unitBase(s, dir).select(col("vec_id"), col("v"))
     // k = ceil(n / target): n comes from TABLE STATISTICS (parquet footer
     // row counts via aggregate pushdown, cached per session — r9 verdict:
     // a per-invocation count() scan is the wrong cost model at 100 TB),
@@ -748,24 +677,17 @@ object VectorQ {
       graft.Tables.statsRowCount(s, dir, "embeddings").toDouble
         / KmeansTarget)
       .toLong
-    var cents = e.filter(col("vec_id") < k)
-      .select(col("vec_id").as("cl"), col("v").as("cvec"))
-    for (_ <- 1 to 2) { // 2 re-estimations; the 3rd assignment is final
-      cents = kmAssign(e, cents)
-        .select(col("cl"), posexplode(col("v")).as(Seq("pos", "ev")))
-        .groupBy(col("cl"), col("pos"))
-        .agg(sum(dec(col("ev"), 12, 9)).as("sv"), count(lit(1)).as("n"))
-        .select(col("cl"), col("pos"), r6(dbl(col("sv")) / col("n")).as("c"))
-        .groupBy(col("cl"))
-        .agg(transform(sort_array(collect_list(struct(col("pos"), col("c")))),
-          x => x.getField("c")).as("cvec"))
-    }
-    cents
+    lloyd(unitBase(s, dir).select(col("vec_id"), col("v")), "v", k)
   }
 
+  /** The shared kmeans pipeline ending in the FINAL assignment
+    * (vec_id, v, cl, dist) — consumed by kmeans_embed and by the
+    * SemDeDup composition in semdedup_prune. */
   private[graft] def kmeansAssignFinal(s: SparkSession, dir: String) =
-    kmAssign(unitBase(s, dir).select(col("vec_id"), col("v")),
-      kmeansCentsFinal(s, dir))
+    argmin(unitBase(s, dir).select(col("vec_id"), col("v")),
+        kmeansCentsFinal(s, dir), "v", "v")
+      .select(col("vec_id"), col("arg.v").as("v"), col("arg.cl").as("cl"),
+        col("arg.dist").as("dist"))
 
   /** ann_hnsw_knn geometry: out-degree M of the neighbor graph, beam
     * width, and fixed search rounds — shared with the oracle generator
@@ -801,34 +723,15 @@ object VectorQ {
       hnswBuildRuns.incrementAndGet()
       val cents = kmeansCentsFinal(s, dir)
         .select(col("cl").as("hcl"), col("cvec"))
-      val e = unitBase(s, dir)
-      val dist = r6(gdot(col("v"), col("v")) -
-        lit(2) * gdot(col("v"), col("cvec")) +
-        gdot(col("cvec"), col("cvec")))
-      val wCell = Window.partitionBy(col("vec_id"))
-        .orderBy(col("fdist"), col("hcl"))
-      val asg = e.select(col("vec_id"), col("v"), col("nrm"))
-        .crossJoin(broadcast(cents))
-        .withColumn("fdist", dist)
-        .withColumn("crn", row_number().over(wCell))
-        .filter(col("crn") <= 2)
+      val asg = nearestCells(unitBase(s, dir).select(col("vec_id"), col("v"),
+          col("nrm")), cents, "hcl", 2)
         .select(col("vec_id"), col("v"), col("nrm"), col("hcl"), col("crn"))
         .ckpt() // consumed by members, probes, AND entries
       val members = asg.filter(col("crn") === 1)
         .select(col("vec_id"), col("v"), col("nrm"), col("hcl"))
-      val probes = asg
-        .select(col("vec_id").as("src"), col("v").as("sv"),
-          col("nrm").as("sn"), col("hcl"))
-      val wM = Window.partitionBy(col("src"))
-        .orderBy(col("cos_sim").desc, col("dst"))
-      val graph = probes.join(members, "hcl")
-        .filter(col("vec_id") =!= col("src"))
-        .select(col("src"), col("vec_id").as("dst"),
-          r6(gdot(col("sv"), col("v")) / (col("sn") * col("nrm")))
-            .as("cos_sim"))
-        .withColumn("rk", row_number().over(wM))
-        .filter(col("rk") <= HnswM)
-        .select(col("src"), col("dst"))
+      val graph = nearest(asQueries(asg, col("hcl")).join(members, "hcl"),
+          HnswM)
+        .select(col("qid").as("src"), col("vec_id").as("dst"))
       // entry table rides the same artifact so consumers never recompute
       // the assignment: per query (vec_id < 50), the lowest-id member of
       // its own cell — the deterministic entry vertex.
@@ -843,26 +746,6 @@ object VectorQ {
     (s.read.parquet(s"$dest/graph"), s.read.parquet(s"$dest/entries"))
   }
 
-  /** Graph-based ANN (r14, verdict #1) — the NSW/HNSW-style tier the
-    * ladder lacked: greedy BEAM SEARCH over the bounded-degree neighbor
-    * graph (hnswGraph: top-M = 8 cosine edges per vector through the
-    * corpus-scaled kmeans cell router), FIXED rounds so the whole search
-    * is relationally expressible and the oracle replays the identical
-    * bounded rounds as generated CTEs (the scc_components/BFS
-    * precedent). Per query: start at the deterministic entry vertex
-    * (lowest-id member of the query's own cell), then 4 rounds of
-    * {expand the beam's out-edges, union into the visited set, keep the
-    * beam = top-12 visited by rounded cosine (vec_id ties)}; the final
-    * top-5 ranks the WHOLE visited set (standard HNSW emits from
-    * visited, not the last beam), self excluded.
-    *
-    * Scale shape: the graph is n·M edges built from ~64-row cells
-    * (O(n·128) pair work — k tracks the corpus, the SemDeDup guarantee);
-    * the search touches ≤ |Q|·beam·M·rounds edge rows per query batch —
-    * independent of n — and every step is a broadcast-sized equi-join.
-    * Candidates examined ≤ 4·12·8 ≈ 384/query, an n-INDEPENDENT budget
-    * (the IVF tier's probe mass is 2·n/|cells|); recall@5 is gated ≥
-    * the IVF tier in AnnQualitySpec and graded in ann_recall_report. */
   private val hnswSearchCache = graft.Tables.sessionScopedCache[
     (String, Int), org.apache.spark.sql.DataFrame]()
 
@@ -886,26 +769,18 @@ object VectorQ {
     val (graph, entries) = hnswGraph(s, dir)
     val e = unitBase(s, dir)
     val base = e.select(col("vec_id").as("vid"), col("v"), col("nrm"))
-    val qs = e.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("nrm").as("qn"))
+    val qs = probeSide(e)
     // the candidate set is beam-budget-bounded (≤ |Q|·(1 + b·M·R) ids),
     // so it BROADCASTS against the vector tables — the corpus side
     // streams through scan-side hash joins and never shuffles (warm
     // search shuffle is n-independent, gated in ScalingSpec)
-    def score(cand: org.apache.spark.sql.DataFrame) =
+    def score(cand: DF) =
       base.join(broadcast(cand), "vid").join(broadcast(qs), "qid")
         .select(col("qid"), col("vid"),
-          r6(gdot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-            .as("cos_sim"))
-    val wBeam = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("vid"))
-    def topBeam(scored: org.apache.spark.sql.DataFrame) =
-      scored.withColumn("rb", row_number().over(wBeam))
-        .filter(col("rb") <= HnswBeam)
+          cosine(col("qv"), col("qn"), col("v"), col("nrm")).as("cos_sim"))
+    def topBeam(scored: DF) =
+      topPer(scored, "qid", "cos_sim", HnswBeam, "rb", "vid")
         .select(col("qid"), col("vid"))
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("vid"))
     // The whole search moves ≤ |Q|·beam·M·rounds rows — size the loop's
     // ~14 micro-shuffles to the beam domain, not the corpus scan setting
     // (the unigram/BPE per-stage decision); eager-checkpoint the result
@@ -928,20 +803,55 @@ object VectorQ {
         visited = visited.unionByName(expand).distinct().ckpt()
         if (r < HnswRounds) beam = topBeam(score(visited))
       }
-      score(visited)
-        .filter(col("vid") =!= col("qid"))
-        .withColumn("rn", row_number().over(wTop).cast("long"))
-        .filter(col("rn") <= topK)
+      topPer(score(visited).filter(col("vid") =!= col("qid")),
+          "qid", "cos_sim", topK, "rn", "vid")
         .select(col("qid"), col("vid").as("vec_id"), col("cos_sim"),
-          col("rn"))
+          col("rn").cast("long").as("rn"))
         .ckpt()
     }
     res
   }
 
+  /** Graph-based ANN (r14, verdict #1) — the NSW/HNSW-style tier the
+    * ladder lacked: greedy BEAM SEARCH over the bounded-degree neighbor
+    * graph (hnswGraph: top-M = 8 cosine edges per vector through the
+    * corpus-scaled kmeans cell router), FIXED rounds so the whole search
+    * is relationally expressible and the oracle replays the identical
+    * bounded rounds as generated CTEs (the scc_components/BFS
+    * precedent). Per query: start at the deterministic entry vertex
+    * (lowest-id member of the query's own cell), then 4 rounds of
+    * {expand the beam's out-edges, union into the visited set, keep the
+    * beam = top-12 visited by rounded cosine (vec_id ties)}; the final
+    * top-5 ranks the WHOLE visited set (standard HNSW emits from
+    * visited, not the last beam), self excluded.
+    *
+    * Scale shape: the graph is n·M edges built from ~64-row cells
+    * (O(n·128) pair work — k tracks the corpus, the SemDeDup guarantee);
+    * the search touches ≤ |Q|·beam·M·rounds edge rows per query batch —
+    * independent of n — and every step is a broadcast-sized equi-join.
+    * Candidates examined ≤ 4·12·8 ≈ 384/query, an n-INDEPENDENT budget
+    * (the IVF tier's probe mass is 2·n/|cells|); recall@5 is gated ≥
+    * the IVF tier in AnnQualitySpec and graded in ann_recall_report. */
   val annHnswKnn: QFn = (s, dir) =>
     hnswSearch(s, dir, 5).orderBy(col("qid"), col("rn"))
 
+  /** Distributed k-means over the embedding corpus (k = ceil(n/64)
+    * derived from the corpus count, 3 Lloyd iterations) — the
+    * semantic-curation primitive: cluster-then-sample /
+    * cluster-then-dedup (SemDeDup-style) pipelines run exactly this before
+    * any per-cluster policy. Deterministic end to end, so it carries a
+    * full DuckDB oracle (the 3 iterations unrolled as a CTE chain):
+    * init = the k lowest-vec_id vectors; assignment = argmin of r6-rounded
+    * squared euclidean (ties to the lower cluster id); means = exact
+    * DECIMAL(12,9) component sums / count, r6-rounded — the same
+    * conventions the ann_ivf_knn oracle already proves cross-engine.
+    *
+    * Scale shape: each iteration is one broadcast of k centroids against
+    * the corpus (no shuffle for assignment — k·dim doubles) plus one
+    * partial+final aggregate keyed on (cluster, pos) for the means. At
+    * 100 TB this is the canonical Lloyd layout; iteration count is a fixed
+    * budget (3), which is how production pipelines run it (convergence to
+    * tolerance is a stopping-rule refinement, not a different plan). */
   val kmeansEmbed: QFn = (s, dir) =>
     kmeansAssignFinal(s, dir)
       .select(col("vec_id"), col("cl").as("cluster"), col("dist"))
@@ -966,7 +876,7 @@ object VectorQ {
     val pruned = a.join(b, Seq("cl"))
       .filter(col("a_id") < col("b_id"))
       .withColumn("cos_sim",
-        r6(gdot(col("av"), col("bv")) / (col("an") * col("bn"))))
+        cosine(col("av"), col("an"), col("bv"), col("bn")))
       .filter(col("cos_sim") >= 0.3)
       .groupBy(col("cl")).agg(countDistinct(col("b_id")).as("n_pruned"))
     asg.groupBy(col("cl")).agg(count(lit(1)).as("n_vecs"))
@@ -1017,28 +927,11 @@ object VectorQ {
       .withColumn("qvd", col("qv").cast("array<double>"))
     val q = codes.select(col("vec_id").as("qid"), col("sc").as("qsc"),
       col("qvd").as("qqv")).filter(col("qid") < 50)
-    val w1 = Window.partitionBy(col("qid"))
-      .orderBy(col("approx").desc, col("vec_id"))
-    val w2 = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    val cand20 = q.crossJoin(codes)
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("approx",
-        gdot(col("qqv"), col("qvd")) * col("qsc") * col("sc") / lit(16129.0))
-      .withColumn("r1", row_number().over(w1))
-      .filter(col("r1") <= 20)
-      .select(col("qid"), col("vec_id"))
+    val cand20 = shortlist(q.crossJoin(codes),
+      gdot(col("qqv"), col("qvd")) * col("qsc") * col("sc") / lit(16129.0),
+      20, "r1")
     // Exact rerank: only the 20·|queries| survivors touch full doubles.
-    cand20
-      .join(e.select(col("vec_id"), col("v"), col("nrm")), "vec_id")
-      .join(e.select(col("vec_id").as("qid"), col("v").as("qfull"),
-        col("nrm").as("qn")), "qid")
-      .withColumn("cos_sim",
-        r6(gdot(col("qfull"), col("v")) / (col("qn") * col("nrm"))))
-      .withColumn("rn", row_number().over(w2).cast("long"))
-      .filter(col("rn") <= 5)
-      .select(col("qid"), col("vec_id"), col("cos_sim"), col("rn"))
-      .orderBy(col("qid"), col("rn"))
+    rerank(cand20, e, 5).orderBy(col("qid"), col("rn"))
   }
 
   /** PQ geometry: 4 subspaces × 16 dims (the 64-d corpus), 16 codes per
@@ -1095,40 +988,6 @@ object VectorQ {
   private def pqKnnOver(s: SparkSession, dir: String, tag: String,
       e: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val dist = r6(gdot(col("sv"), col("sv")) -
-      lit(2) * gdot(col("sv"), col("cvec")) + gdot(col("cvec"), col("cvec")))
-    def assign(sub: org.apache.spark.sql.DataFrame,
-        cents: org.apache.spark.sql.DataFrame) =
-      sub.crossJoin(broadcast(cents))
-        .withColumn("dist", dist)
-        .groupBy(col("vec_id"))
-        .agg(min(struct(col("dist"), col("cl"), col("sv"))).as("m"))
-        .select(col("vec_id"), col("m.sv").as("sv"), col("m.cl").as("cl"))
-    // per-subspace codebook + final winning-centroid per vector
-    def reconPartOver(enc: org.apache.spark.sql.DataFrame, m: Int)
-        : org.apache.spark.sql.DataFrame = {
-      val sub = enc.select(col("vec_id"),
-        slice(col("pv"), m * PqSub + 1, PqSub).as("sv"))
-      var cents = sub.filter(col("vec_id") < PqK)
-        .select(col("vec_id").as("cl"), col("sv").as("cvec"))
-      for (_ <- 1 to 2) {
-        cents = assign(sub, cents)
-          .select(col("cl"), posexplode(col("sv")).as(Seq("pos", "ev")))
-          .groupBy(col("cl"), col("pos"))
-          .agg(sum(dec(col("ev"), 12, 9)).as("sv"), count(lit(1)).as("n"))
-          .select(col("cl"), col("pos"), r6(dbl(col("sv")) / col("n")).as("c"))
-          .groupBy(col("cl"))
-          .agg(transform(
-            sort_array(collect_list(struct(col("pos"), col("c")))),
-            x => x.getField("c")).as("cvec"))
-      }
-      // final assignment carries the winning CENTROID (the code's vector)
-      sub.crossJoin(broadcast(cents))
-        .withColumn("dist", dist)
-        .groupBy(col("vec_id"))
-        .agg(min(struct(col("dist"), col("cl"), col("cvec"))).as("mm"))
-        .select(col("vec_id"), lit(m).as("m"), col("mm.cvec").as("cvec"))
-    }
     // ONE atomically-published sidecar dir (r16, core.sidecarOnce —
     // generation dir + rename) holding both the reconstruction table
     // and, as a second tiny parquet, the 50 encode-space query vectors —
@@ -1141,13 +1000,8 @@ object VectorQ {
       // (the OPQ rotation would otherwise re-evaluate under every one
       // of the 4 subspaces × 3 training scans)
       val et = e.select(col("vec_id"), col("pv")).ckpt()
-      def reconPart(m: Int): org.apache.spark.sql.DataFrame =
-        reconPartOver(et, m)
-      (0 until PqM).map(reconPart).reduce(_ unionByName _)
-        .groupBy(col("vec_id"))
-        .agg(flatten(transform(
-          sort_array(collect_list(struct(col("m"), col("cvec")))),
-          x => x.getField("cvec"))).as("vhat"))
+      pqRecon(m => et.select(col("vec_id"),
+          slice(col("pv"), m * PqSub + 1, PqSub).as("sv")), "vhat")
         .write.mode("overwrite").parquet(s"$tmp/recon")
       e.filter(col("vec_id") < 50)
         .select(col("vec_id").as("qid"), col("pv").as("qv"))
@@ -1155,27 +1009,25 @@ object VectorQ {
     }
     val recon = s.read.parquet(s"$side/recon")
     val q = s.read.parquet(s"$side/q")
-    val w1 = Window.partitionBy(col("qid"))
-      .orderBy(col("approx").desc, col("vec_id"))
-    val w2 = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    val cand20 = q.crossJoin(recon)
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("approx", r6(gdot(col("qv"), col("vhat"))))
-      .withColumn("r1", row_number().over(w1))
-      .filter(col("r1") <= 20)
-      .select(col("qid"), col("vec_id"))
-    cand20
-      .join(e.select(col("vec_id"), col("v"), col("nrm")), "vec_id")
-      .join(e.select(col("vec_id").as("qid"), col("v").as("qfull"),
-        col("nrm").as("qn")), "qid")
-      .withColumn("cos_sim",
-        r6(gdot(col("qfull"), col("v")) / (col("qn") * col("nrm"))))
-      .withColumn("rn", row_number().over(w2).cast("long"))
-      .filter(col("rn") <= 5)
-      .select(col("qid"), col("vec_id"), col("cos_sim"), col("rn"))
+    rerank(shortlist(q.crossJoin(recon), r6(gdot(col("qv"), col("vhat"))),
+        20, "r1"), e, 5)
       .orderBy(col("qid"), col("rn"))
   }
+
+  /** The reconstruction `out`: per subspace m, a Lloyd codebook over its
+    * points `sub(m)` = (vec_id, sv) (init = the PqK lowest vec_ids) and
+    * each vector's winning centroid (the code's vector); the PqM winners
+    * concatenated in subspace order. */
+  private def pqRecon(sub: Int => DF, out: String): DF =
+    (0 until PqM).map { m =>
+      val pts = sub(m)
+      argmin(pts, lloyd(pts, "sv", PqK), "sv", "cvec")
+        .select(col("vec_id"), lit(m).as("m"), col("arg.cvec").as("cvec"))
+    }.reduce(_ unionByName _)
+      .groupBy(col("vec_id"))
+      .agg(flatten(transform(
+        sort_array(collect_list(struct(col("m"), col("cvec")))),
+        x => x.getField("cvec"))).as(out))
 
   /** Orthogonal rotation for the OPQ tier — the non-parametric OPQ
     * baseline (Ge et al. CVPR'13 §4 / Jégou's structured rotation):
@@ -1258,76 +1110,19 @@ object VectorQ {
           .select(col("vec_id"), col("v"),
             col("clabel").as("cell"), col("cvec"))
           .ckpt()
-        val dist = r6(gdot(col("sv"), col("sv")) -
-          lit(2) * gdot(col("sv"), col("cvec")) +
-          gdot(col("cvec"), col("cvec")))
-        // per-subspace residual codebook + winning residual centroid
-        def reconPart(m: Int): org.apache.spark.sql.DataFrame = {
-          val sub = home.select(col("vec_id"),
-            zip_with(slice(col("v"), m * PqSub + 1, PqSub),
-              slice(col("cvec"), m * PqSub + 1, PqSub),
-              (a, b) => r6(a - b)).as("sv"))
-          var cents = sub.filter(col("vec_id") < PqK)
-            .select(col("vec_id").as("cl"), col("sv").as("cvec"))
-          for (_ <- 1 to 2) {
-            cents = sub.crossJoin(broadcast(cents))
-              .withColumn("dist", dist)
-              .groupBy(col("vec_id"))
-              .agg(min(struct(col("dist"), col("cl"), col("sv"))).as("m"))
-              .select(col("vec_id"), col("m.sv").as("sv"),
-                col("m.cl").as("cl"))
-              .select(col("cl"), posexplode(col("sv")).as(Seq("pos", "ev")))
-              .groupBy(col("cl"), col("pos"))
-              .agg(sum(dec(col("ev"), 12, 9)).as("sv"),
-                count(lit(1)).as("n"))
-              .select(col("cl"), col("pos"),
-                r6(dbl(col("sv")) / col("n")).as("c"))
-              .groupBy(col("cl"))
-              .agg(transform(
-                sort_array(collect_list(struct(col("pos"), col("c")))),
-                x => x.getField("c")).as("cvec"))
-          }
-          sub.crossJoin(broadcast(cents))
-            .withColumn("dist", dist)
-            .groupBy(col("vec_id"))
-            .agg(min(struct(col("dist"), col("cl"), col("cvec"))).as("mm"))
-            .select(col("vec_id"), lit(m).as("m"), col("mm.cvec").as("cvec"))
-        }
-        val rhat = (0 until PqM).map(reconPart).reduce(_ unionByName _)
-          .groupBy(col("vec_id"))
-          .agg(flatten(transform(
-            sort_array(collect_list(struct(col("m"), col("cvec")))),
-            x => x.getField("cvec"))).as("rhat"))
+        // per-subspace residual points, r6-rounded at formation
+        val rhat = pqRecon(m => home.select(col("vec_id"),
+          zip_with(slice(col("v"), m * PqSub + 1, PqSub),
+            slice(col("cvec"), m * PqSub + 1, PqSub),
+            (a, b) => r6(a - b)).as("sv")), "rhat")
         home.join(rhat, "vec_id")
           .select(col("vec_id"), col("cell"),
             zip_with(col("cvec"), col("rhat"), (a, b) => a + b).as("vhat"))
           .write.mode("overwrite").parquet(tmp.toString)
     }
-    val recon = s.read.parquet(side)
-    val e = unitBase(s, dir)
-    val probes = asg.filter(col("crn") <= 2 && col("vec_id") < 50)
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("clabel").as("cell"))
-    val w1 = Window.partitionBy(col("qid"))
-      .orderBy(col("approx").desc, col("vec_id"))
-    val w2 = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    val cand20 = probes.join(recon, "cell")
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("approx", r6(gdot(col("qv"), col("vhat"))))
-      .withColumn("r1", row_number().over(w1))
-      .filter(col("r1") <= 20)
-      .select(col("qid"), col("vec_id"))
-    cand20
-      .join(e.select(col("vec_id"), col("v"), col("nrm")), "vec_id")
-      .join(e.select(col("vec_id").as("qid"), col("v").as("qfull"),
-        col("nrm").as("qn")), "qid")
-      .withColumn("cos_sim",
-        r6(gdot(col("qfull"), col("v")) / (col("qn") * col("nrm"))))
-      .withColumn("rn", row_number().over(w2).cast("long"))
-      .filter(col("rn") <= 5)
-      .select(col("qid"), col("vec_id"), col("cos_sim"), col("rn"))
-      .orderBy(col("qid"), col("rn"))
+    val cand20 = shortlist(ivfProbes(asg).join(s.read.parquet(side), "cell"),
+      r6(gdot(col("qv"), col("vhat"))), 20, "r1")
+    rerank(cand20, unitBase(s, dir), 5).orderBy(col("qid"), col("rn"))
   }
 
   /** Sign matrix for the JL projection: ±1 per (projected dim j, source
@@ -1338,13 +1133,34 @@ object VectorQ {
   private[graft] def rpSign(j: Int, d: Int): Double =
     if ((((j * 64 + d) * 2654435761L) % 97) % 2 == 0) 1.0 else -1.0
 
+  /** `cols` of `e` plus the JL projection `pv` (v dotted with each of the
+    * RpDims sign rows) and its norm `pnrm`, computed once (checkpointed)
+    * for the query side and the base side alike. */
+  private def jlProject(e: DF, cols: Column*): DF = {
+    val pv = array((0 until RpDims).map(j =>
+      gdot(col("v"), array((0 until 64).map(d => lit(rpSign(j, d))): _*))
+    ): _*)
+    e.select(cols :+ pv.as("pv"): _*)
+      .withColumn("pnrm", sqrt(gdot(col("pv"), col("pv"))))
+      .ckpt()
+  }
+
+  /** The JL-space shortlist over a [[jlProject]] frame: projected cosine
+    * top-k per query, ranked in `rank`. */
+  private def jlTop(p: DF, k: Int, rank: String): DF =
+    shortlist(p.filter(col("vec_id") < 50)
+        .select(col("vec_id").as("qid"), col("pv").as("qpv"),
+          col("pnrm").as("qpn"))
+        .crossJoin(p.select(col("vec_id"), col("pv"), col("pnrm"))),
+      cosine(col("qpv"), col("qpn"), col("pv"), col("pnrm")), k, rank)
+
   /** Random-projection (Johnson–Lindenstrauss) kNN (r10) — the
     * DIMENSIONALITY-REDUCTION tier of the ANN ladder (every other tier
     * shrinks the CANDIDATE SET; this one shrinks the per-comparison
     * COST): project 64-d vectors onto 32 fixed ±1 directions (the
     * Achlioptas 2003 database-friendly JL construction — signs, not
     * Gaussians), rank candidates by cosine in the projected space
-    * (4× cheaper per pair), then exact-rerank the top-10 to the final
+    * (4× cheaper per pair), then exact-rerank the top-20 to the final
     * top-3. JL preserves distances to within ε ≈ √(log n / k) w.h.p. —
     * at k=32 on THIS corpus (isotropic vectors, true-neighbor cosine
     * ~0.3 vs projection noise ~1/√k ≈ 0.18) that is a coarse filter,
@@ -1359,39 +1175,8 @@ object VectorQ {
     * dot-product pattern over identical literals; cosines r6-round
     * before ranking with vec_id tiebreaks; rerank is the qknn shape. */
   val annRandProjKnn: QFn = (s, dir) => {
-    val e = unitBase(s, dir)
-    val signRows = (0 until RpDims).map { j =>
-      array((0 until 64).map(d => lit(rpSign(j, d))): _*)
-    }
-    val pv = array(signRows.map(sr => gdot(col("v"), sr)): _*)
-    val p = e.select(col("vec_id"), col("v"), col("nrm"), pv.as("pv"))
-      .withColumn("pnrm", sqrt(gdot(col("pv"), col("pv"))))
-      .ckpt() // projection computed once, reused by q + base
-    val q = p.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("qid"), col("pv").as("qpv"),
-        col("pnrm").as("qpn"))
-    val w1 = Window.partitionBy(col("qid"))
-      .orderBy(col("approx").desc, col("vec_id"))
-    val w2 = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    val cand10 = q.crossJoin(p.select(col("vec_id"), col("pv"),
-        col("pnrm")))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("approx",
-        r6(gdot(col("qpv"), col("pv")) / (col("qpn") * col("pnrm"))))
-      .withColumn("r1", row_number().over(w1))
-      .filter(col("r1") <= 20)
-      .select(col("qid"), col("vec_id"))
-    cand10
-      .join(p.select(col("vec_id"), col("v"), col("nrm")), "vec_id")
-      .join(p.select(col("vec_id").as("qid"), col("v").as("qfull"),
-        col("nrm").as("qn")), "qid")
-      .withColumn("cos_sim",
-        r6(gdot(col("qfull"), col("v")) / (col("qn") * col("nrm"))))
-      .withColumn("rn", row_number().over(w2).cast("long"))
-      .filter(col("rn") <= 3)
-      .select(col("qid"), col("vec_id"), col("cos_sim"), col("rn"))
-      .orderBy(col("qid"), col("rn"))
+    val p = jlProject(unitBase(s, dir), col("vec_id"), col("v"), col("nrm"))
+    rerank(jlTop(p, 20, "r1"), p, 3).orderBy(col("qid"), col("rn"))
   }
 
   /** Reciprocal-rank fusion (r10, Cormack et al. SIGIR'09 — public
@@ -1410,52 +1195,59 @@ object VectorQ {
     * distributed, independent of corpus size past the ranker stages. */
   val rrfFusion: QFn = (s, dir) => {
     val e = unitBase(s, dir)
-    // ranker A: exact cosine top-10 (the qknn shape)
-    val wA = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    val q = e.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("nrm").as("qn"))
-    val rankA = q.crossJoin(e.select(col("vec_id"), col("v"), col("nrm")))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos_sim",
-        r6(gdot(col("qv"), col("v")) / (col("qn") * col("nrm"))))
-      .withColumn("ra", row_number().over(wA))
-      .filter(col("ra") <= 10)
-      .select(col("qid"), col("vec_id"), col("ra"))
-    // ranker B: JL-projected cosine top-10 (the compressed view)
-    val signRows = (0 until RpDims).map { j =>
-      array((0 until 64).map(d => lit(rpSign(j, d))): _*)
-    }
-    val pv = array(signRows.map(sr => gdot(col("v"), sr)): _*)
-    val p = e.select(col("vec_id"), pv.as("pv"))
-      .withColumn("pnrm", sqrt(gdot(col("pv"), col("pv"))))
-      .ckpt()
-    val wB = Window.partitionBy(col("qid"))
-      .orderBy(col("approx").desc, col("vec_id"))
-    val rankB = p.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("qid"), col("pv").as("qpv"),
-        col("pnrm").as("qpn"))
-      .crossJoin(p.select(col("vec_id"), col("pv"), col("pnrm")))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("approx",
-        r6(gdot(col("qpv"), col("pv")) / (col("qpn") * col("pnrm"))))
-      .withColumn("rb", row_number().over(wB))
-      .filter(col("rb") <= 10)
-      .select(col("qid"), col("vec_id"), col("rb"))
-    val wF = Window.partitionBy(col("qid"))
-      .orderBy(col("rrf").desc, col("vec_id"))
-    rankA.join(rankB, Seq("qid", "vec_id"), "full_outer")
-      .select(col("qid"), col("vec_id"),
-        r6(coalesce(lit(1.0) / (lit(60) + col("ra")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60) + col("rb")), lit(0.0)))
-          .as("rrf"),
-        coalesce(col("ra"), lit(0)).as("rank_exact"),
-        coalesce(col("rb"), lit(0)).as("rank_jl"))
-      .withColumn("rn", row_number().over(wF).cast("long"))
-      .filter(col("rn") <= 5)
-      .orderBy(col("qid"), col("rn"))
+    // ranker A: exact cosine top-10 (the qknn shape); ranker B:
+    // JL-projected cosine top-10 (the compressed view)
+    rrfFuse(nearest(brute(e), 10, "ra").select(col("qid"), col("vec_id"),
+        col("ra")),
+      jlTop(jlProject(e, col("vec_id")), 10, "rb"), "rank_exact", "rank_jl")
   }
+
+  /** RRF fusion of two rankings (qid, vec_id, ra) and (qid, vec_id, rb):
+    * score = Σ 1/(60+rank) over the legs the candidate appears in, top-5
+    * per query, the two provenance ranks out as `outA`/`outB` (0 =
+    * unranked by that leg) — the ONE fusion contract rrf_fusion and both
+    * hybrid keys share (the substitution claim hybrid_retrieval
+    * documents: any dense tier slot-replaces the brute leg). */
+  private def rrfFuse(a: DF, b: DF, outA: String, outB: String): DF =
+    topPer(a.join(b, Seq("qid", "vec_id"), "full_outer")
+        .select(col("qid"), col("vec_id"),
+          r6(coalesce(lit(1.0) / (lit(60) + col("ra")), lit(0.0)) +
+            coalesce(lit(1.0) / (lit(60) + col("rb")), lit(0.0)))
+            .as("rrf"),
+          coalesce(col("ra"), lit(0)).as(outA),
+          coalesce(col("rb"), lit(0)).as(outB)), "qid", "rrf", 5, "rn")
+      .withColumn("rn", col("rn").cast("long"))
+      .orderBy(col("qid"), col("rn"))
+
+  /** Lexical leg shared by both hybrid keys: inverted-index token-set
+    * Jaccard, top-10 per query (qid < 50) via the posting join. */
+  private[graft] def lexicalRank(s: SparkSession, dir: String)
+      : org.apache.spark.sql.DataFrame = {
+    val toks = t(s, dir, "documents").select(col("doc_id"),
+      array_distinct(TextOps.tokens(col("text"))).as("ts"))
+      .ckpt() // feeds postings (x2) and both size joins
+    val sizes = toks.select(col("doc_id"), size(col("ts")).as("n"))
+    val qt = toks.filter(col("doc_id") < 50)
+      .select(col("doc_id").as("qid"), explode(col("ts")).as("w"))
+    val ct = toks.select(col("doc_id"), explode(col("ts")).as("w"))
+    topPer(qt.join(ct, "w")
+        .filter(col("doc_id") =!= col("qid"))
+        .groupBy(col("qid"), col("doc_id"))
+        .agg(count(lit(1)).as("inter"))
+        .join(sizes.select(col("doc_id").as("qid"), col("n").as("qn")),
+          Seq("qid"))
+        .join(sizes, Seq("doc_id"))
+        .select(col("qid"), col("doc_id").as("vec_id"),
+          r6(dbl(col("inter")) / (col("qn") + col("n") - col("inter")))
+            .as("jac")), "qid", "jac", 10, "rl")
+      .select(col("qid"), col("vec_id"), col("rl"))
+  }
+
+  /** A hybrid key's fusion: the dense ranking (qid, vec_id, ra) with the
+    * lexical leg. */
+  private def hybrid(s: SparkSession, dir: String, dense: DF): DF =
+    rrfFuse(dense, lexicalRank(s, dir).withColumnRenamed("rl", "rb"),
+      "rank_vec", "rank_lex")
 
   /** Hybrid lexical + vector retrieval (r14) — the production
     * hybrid-search shape the fusion family lacked: each of the 50 query
@@ -1475,72 +1267,9 @@ object VectorQ {
     * docs with ≥ 1 shared token by construction, never a scan of
     * non-matching docs; both rank windows are WindowGroupLimit-pruned
     * top-10. */
-  /** Lexical leg shared by both hybrid keys: inverted-index token-set
-    * Jaccard, top-10 per query (qid < 50) via the posting join. */
-  private[graft] def lexicalRank(s: SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
-    val toks = t(s, dir, "documents").select(col("doc_id"),
-      array_distinct(TextOps.tokens(col("text"))).as("ts"))
-      .ckpt() // feeds postings (x2) and both size joins
-    val sizes = toks.select(col("doc_id"), size(col("ts")).as("n"))
-    val qt = toks.filter(col("doc_id") < 50)
-      .select(col("doc_id").as("qid"), explode(col("ts")).as("w"))
-    val ct = toks.select(col("doc_id"), explode(col("ts")).as("w"))
-    val wL = Window.partitionBy(col("qid"))
-      .orderBy(col("jac").desc, col("vec_id"))
-    qt.join(ct, "w")
-      .filter(col("doc_id") =!= col("qid"))
-      .groupBy(col("qid"), col("doc_id"))
-      .agg(count(lit(1)).as("inter"))
-      .join(sizes.select(col("doc_id").as("qid"), col("n").as("qn")),
-        Seq("qid"))
-      .join(sizes, Seq("doc_id"))
-      .select(col("qid"), col("doc_id").as("vec_id"),
-        r6(dbl(col("inter")) / (col("qn") + col("n") - col("inter")))
-          .as("jac"))
-      .withColumn("rl", row_number().over(wL))
-      .filter(col("rl") <= 10)
-      .select(col("qid"), col("vec_id"), col("rl"))
-  }
-
-  /** RRF fusion of a dense ranking (qid, vec_id, rv) with the lexical
-    * ranking (qid, vec_id, rl): score = Σ 1/(60+rank) over the legs the
-    * candidate appears in, top-5 per query — the ONE fusion contract
-    * both hybrid keys share (the substitution claim hybrid_retrieval
-    * documents: any dense tier slot-replaces the brute leg). */
-  private def rrfFuse(rankV: org.apache.spark.sql.DataFrame,
-      rankL: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val wF = Window.partitionBy(col("qid"))
-      .orderBy(col("rrf").desc, col("vec_id"))
-    rankV.join(rankL, Seq("qid", "vec_id"), "full_outer")
-      .select(col("qid"), col("vec_id"),
-        r6(coalesce(lit(1.0) / (lit(60) + col("rv")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60) + col("rl")), lit(0.0)))
-          .as("rrf"),
-        coalesce(col("rv"), lit(0)).as("rank_vec"),
-        coalesce(col("rl"), lit(0)).as("rank_lex"))
-      .withColumn("rn", row_number().over(wF).cast("long"))
-      .filter(col("rn") <= 5)
-      .orderBy(col("qid"), col("rn"))
-  }
-
-  val hybridRetrieval: QFn = (s, dir) => {
-    val e = unitBase(s, dir)
-    val wV = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    val rankV = e.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("nrm").as("qn"))
-      .crossJoin(e.select(col("vec_id"), col("v"), col("nrm")))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos_sim",
-        r6(gdot(col("qv"), col("v")) / (col("qn") * col("nrm"))))
-      .withColumn("rv", row_number().over(wV))
-      .filter(col("rv") <= 10)
-      .select(col("qid"), col("vec_id"), col("rv"))
-    rrfFuse(rankV, lexicalRank(s, dir))
-  }
+  val hybridRetrieval: QFn = (s, dir) =>
+    hybrid(s, dir, nearest(brute(unitBase(s, dir)), 10, "ra")
+      .select(col("qid"), col("vec_id"), col("ra")))
 
   /** ANN-BACKED hybrid retrieval (r15, verdict #4): the identical RRF
     * fusion contract with the brute-force dense leg slot-replaced by
@@ -1552,11 +1281,9 @@ object VectorQ {
     * hybrid_retrieval is exactly the ANN tier's recall gap —
     * AnnQualitySpec gates the fused ranking's recall ≥ the
     * lexical-only leg's. */
-  val hybridRetrievalAnn: QFn = (s, dir) => {
-    val rankV = hnswSearch(s, dir, 10)
-      .select(col("qid"), col("vec_id"), col("rn").cast("int").as("rv"))
-    rrfFuse(rankV, lexicalRank(s, dir))
-  }
+  val hybridRetrievalAnn: QFn = (s, dir) =>
+    hybrid(s, dir, hnswSearch(s, dir, 10)
+      .select(col("qid"), col("vec_id"), col("rn").cast("int").as("ra")))
 
   /** Maximal Marginal Relevance selection (r9, Carbonell & Goldstein
     * SIGIR'98 — public algorithm) — the DIVERSITY-aware consumer of the
@@ -1752,9 +1479,6 @@ object VectorQ {
        |SELECT id AS vec_id, min(r) AS cluster_id FROM walk
        |GROUP BY id ORDER BY vec_id""".stripMargin
 
-  /** k-means oracle: the 3 Lloyd iterations unrolled as CTEs. `distSql`
-    * and the mean computation mirror the Spark side's r6/DECIMAL(12,9)
-    * conventions exactly (proven cross-engine by ann_ivf_knn). */
   /** The kmeans CTE chain ending in the final assignment `a3(vec_id, v,
     * cl, dist)` — shared by the kmeans_embed and semdedup_prune oracles. */
   private def kmeansCtes: String = {
@@ -1789,14 +1513,13 @@ object VectorQ {
        |${assignCte("a3", "c2")}""".stripMargin
   }
 
+  /** k-means oracle: the 3 Lloyd iterations unrolled as CTEs. `distSql`
+    * and the mean computation mirror the Spark side's r6/DECIMAL(12,9)
+    * conventions exactly (proven cross-engine by ann_ivf_knn). */
   private def kmeansSql: String =
     s"""WITH $kmeansCtes
        |SELECT vec_id, cl AS cluster, dist FROM a3 ORDER BY vec_id""".stripMargin
 
-  /** ann_hnsw_knn oracle: the kmeans-centroid chain (c2 = the final
-    * cells), crn ≤ 2 probe assignment, top-M edges, then the fixed
-    * beam-search rounds unrolled from the same HnswM/HnswBeam/HnswRounds
-    * constants the Spark side runs. */
   /** The HNSW graph-build + bounded-beam-search CTE chain, WITHOUT the
     * leading WITH or the final SELECT — ends in the scored visited set
     * `hs$HnswRounds`. Shared by the ann_hnsw_knn oracle (top-5 final)
@@ -1869,6 +1592,10 @@ object VectorQ {
        |$rounds""".stripMargin
   }
 
+  /** ann_hnsw_knn oracle: the kmeans-centroid chain (c2 = the final
+    * cells), crn ≤ 2 probe assignment, top-M edges, then the fixed
+    * beam-search rounds unrolled from the same HnswM/HnswBeam/HnswRounds
+    * constants the Spark side runs. */
   private def hnswSql: String =
     s"""WITH $hnswCtes
        |SELECT qid, vid AS vec_id, cos_sim, rn FROM (
@@ -2140,10 +1867,6 @@ object VectorQ {
        |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin
   }
 
-  /** Recall-report oracle: each tier's OWN oracle SQL nested verbatim as
-    * a CTE (a CTE body is a full SELECT, so the tiers' inner WITH chains
-    * scope privately), joined per tier against the brute top-k — any
-    * drift in a tier's oracle changes this one identically. */
   /** Brute filtered-baseline oracle: cosine top-5 over the lang='en'
     * candidate subset (queries unfiltered) — ground truth for the
     * filtered tier. */
@@ -2166,15 +1889,16 @@ object VectorQ {
        |SELECT qid, vec_id, cos_sim, rn FROM r
        |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin
 
+  /** Recall-report oracle: each tier's OWN oracle SQL nested verbatim as
+    * a CTE (a CTE body is a full SELECT, so the tiers' inner WITH chains
+    * scope privately), joined per tier against the brute top-k — any
+    * drift in a tier's oracle changes this one identically. */
   private def annRecallSql(base: Map[String, String]): String = {
     // (tier, k, baseline CTE) — the filtered tier grades against the
     // brute FILTERED baseline, every other tier against plain brute
-    val tiers = Seq(("ann_filtered_knn", 5, "brute_f"),
-      ("ann_hnsw_knn", 5, "brute"),
-      ("ann_ivf_knn", 3, "brute"), ("ann_ivfpq_knn", 5, "brute"),
-      ("ann_lsh_knn", 3, "brute"), ("ann_multiprobe_knn", 3, "brute"),
-      ("ann_opq_knn", 5, "brute"), ("ann_pq_knn", 5, "brute"),
-      ("ann_randproj_knn", 5, "brute"), ("ann_sq_knn", 5, "brute"))
+    val tiers = RecallTiers.map { case (n, k) =>
+      (n, k, if (n == "ann_filtered_knn") "brute_f" else "brute")
+    }
     val tierCtes = (Seq(("brute", base("qknn_cosine_top5")),
       ("brute_f", bruteFilteredSql)) ++
       tiers.map { case (n, _, _) => (n, base(n)) })
@@ -2196,6 +1920,13 @@ object VectorQ {
        |    AS recall
        |FROM rep ORDER BY tier""".stripMargin
   }
+
+  /** The DuckDB JL projection of `v`: one list_dot_product per rpSign
+    * row, as ±1.0 literal lists. */
+  private def pvSql: String = "[" + (0 until RpDims).map { j =>
+    "list_dot_product(v, [" + (0 until 64).map(d =>
+      if (rpSign(j, d) > 0) "1.0" else "-1.0").mkString(", ") + "])"
+  }.mkString(",\n      ") + "]"
 
   // lazy: composes oracleBase, which is declared below (object init order)
   lazy val oracle: Map[String, String] = oracleBase +
@@ -2225,13 +1956,7 @@ object VectorQ {
     "ann_opq_knn" -> opqSql,
     "ann_pq_knn" -> pqSql,
     "ann_ivfpq_knn" -> ivfpqSql,
-    "rrf_fusion" -> {
-      val signLists = (0 until RpDims).map { j =>
-        "[" + (0 until 64).map(d =>
-          if (rpSign(j, d) > 0) "1.0" else "-1.0").mkString(", ") + "]"
-      }
-      val pvSql = "[" + signLists.map(sl =>
-        s"list_dot_product(v, $sl)").mkString(",\n      ") + "]"
+    "rrf_fusion" ->
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
          |           FROM embeddings),
          |n2 AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm
@@ -2267,15 +1992,8 @@ object VectorQ {
          |r AS (SELECT *, row_number() OVER (PARTITION BY qid
          |        ORDER BY rrf DESC, vec_id) AS rn FROM f)
          |SELECT qid, vec_id, rrf, rank_exact, rank_jl, rn FROM r
-         |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin
-    },
-    "ann_randproj_knn" -> {
-      val signLists = (0 until RpDims).map { j =>
-        "[" + (0 until 64).map(d =>
-          if (rpSign(j, d) > 0) "1.0" else "-1.0").mkString(", ") + "]"
-      }
-      val pvSql = "[" + signLists.map(sl =>
-        s"list_dot_product(v, $sl)").mkString(",\n      ") + "]"
+         |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin,
+    "ann_randproj_knn" ->
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
          |           FROM embeddings),
          |p AS (
@@ -2302,8 +2020,7 @@ object VectorQ {
          |r AS (SELECT *, row_number() OVER (PARTITION BY qid
          |        ORDER BY cos_sim DESC, vec_id) AS rn FROM x)
          |SELECT qid, vec_id, cos_sim, rn FROM r WHERE rn <= 3
-         |ORDER BY qid, rn""".stripMargin
-    },
+         |ORDER BY qid, rn""".stripMargin,
     "kmeans_embed" -> kmeansSql,
     "semdedup_prune" -> semdedupSql,
     "neardup_clusters" -> neardupClustersSql,

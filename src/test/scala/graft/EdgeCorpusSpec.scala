@@ -233,6 +233,37 @@ class EdgeCorpusSpec extends SparkSpec {
     assert(v1.getAs[Long]("n_sat") == 1L)
   }
 
+  /** edgeVecDir's vectors zero-padded to 64 dims: the same cosines, and
+    * the 8 components the LSH sign buckets read. */
+  private lazy val edgeVec64Dir: String = {
+    val dir = Files.createTempDirectory("edge_vecs64").toString
+    spark.read.parquet(s"$edgeVecDir/embeddings.parquet")
+      .withColumn("embedding",
+        concat(col("embedding"), array_repeat(lit(0.0f), 60)))
+      .write.parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
+  test("similarity keys survive the zero vector: a zero-norm side scores " +
+      "NULL cosine and ranks last, never an ANSI divide-by-zero") {
+    for (k <- Seq("qknn_cosine_top5", "ann_lsh_knn", "ann_multiprobe_knn",
+        "ann_ivf_knn", "ann_sq_knn", "ann_randproj_knn")) {
+      val rows = SparkEntry.queries(k)(spark, edgeVec64Dir).collect()
+        .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("vec_id"),
+          Option(r.getAs[java.lang.Double]("cos_sim")), r.getAs[Long]("rn")))
+      val shown = s"$k: ${rows.mkString(", ")}"
+      assert(rows.forall { case (q, v, c, _) => c.isEmpty == (q == 0 || v == 0) },
+        shown)
+      for ((_, rs) <- rows.groupBy(_._1); a <- rs; b <- rs
+           if a._3.isEmpty && b._3.nonEmpty)
+        assert(a._4 > b._4, s"NULL ranked above a score: $shown")
+      if (k == "qknn_cosine_top5")
+        assert(rows.filter(_._1 == 0L).map(_._2).toSeq == Seq(1L, 2L), shown)
+    }
+    for (k <- Seq("knn_classify", "rrf_fusion", "semdedup_prune"))
+      assert(SparkEntry.queries(k)(spark, edgeVec64Dir).collect().nonEmpty, k)
+  }
+
   test("pack_sequences: token-less docs pack without advancing the offset") {
     val bins = SparkEntry.queries("pack_sequences")(spark, edgeDir).collect()
     assert(bins.map(_.getAs[Long]("n_docs")).sum == 4)

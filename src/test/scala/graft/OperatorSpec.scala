@@ -388,6 +388,53 @@ class OperatorSpec extends SparkSpec {
       graft.queries.VectorQ.mmrGreedy(
         scala.collection.immutable.TreeMap(mmrRel: _*)(ord), mmrSim, k))
 
+  /** VectorQ's search kernel on hand-built 4-d vectors, query 0 against
+    * itself, an exact match (7), an r6 tie (3 and 5 both score 0.707107)
+    * and the zero vector (4); the base runs in both row orders, so the
+    * tie-break cannot pass by input order. Rows: (vec_id, cos_sim, rn). */
+  private def kernelTop(k: Int): Seq[Seq[(Long, Option[Double], Int)]] = {
+    import spark.implicits._
+    Tables.prepareSession(spark) // registers graft_dot
+    val rows = Seq((0L, Seq(1.0, 0.0, 0.0, 0.0), 1.0),
+      (5L, Seq(1.0, 1.0, 0.0, 0.0), math.sqrt(2)),
+      (3L, Seq(1.0, 0.0, 1.0, 0.0), math.sqrt(2)),
+      (4L, Seq(0.0, 0.0, 0.0, 0.0), 0.0), (7L, Seq(2.0, 0.0, 0.0, 0.0), 2.0))
+    Seq(rows, rows.reverse).map { rs =>
+      val base = rs.toDF("vec_id", "v", "nrm").coalesce(1)
+      val q = base.filter(col("vec_id") === 0L).select(col("vec_id").as("qid"),
+        col("v").as("qv"), col("nrm").as("qn"))
+      graft.queries.VectorQ.nearest(q.crossJoin(base), k).orderBy("rn")
+        .collect().toSeq.map(r => (r.getAs[Long]("vec_id"),
+          Option(r.getAs[java.lang.Double]("cos_sim")).map(_.doubleValue),
+          r.getAs[Int]("rn")))
+    }
+  }
+
+  test("search kernel: r6 ties go to the lower vec_id, a zero-norm NULL " +
+      "ranks last, the query never ranks itself, the cut at k holds") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    kernelTop(10).foreach { got =>
+      assert(got.map(_._1) == Seq(7L, 3L, 5L, 4L), got)
+      assert(got.map(_._2) == Seq(Some(1.0), Some(0.707107), Some(0.707107),
+        None), got)
+      assert(got.map(_._3) == Seq(1, 2, 3, 4), got)
+    }
+    kernelTop(2).foreach(got => assert(got.map(_._1) == Seq(7L, 3L), got))
+  }
+
+  test("nearestCells: an fdist tie goes to the lower cell label") {
+    import spark.implicits._
+    Tables.prepareSession(spark)
+    // (1,0,0,0) is at squared distance 1 from cells 9 and 2, 16 from 5
+    val cents = Seq(9L -> Seq(0.0, 0.0, 0.0, 0.0), 5L -> Seq(5.0, 0.0, 0.0,
+      0.0), 2L -> Seq(2.0, 0.0, 0.0, 0.0)).toDF("cl", "cvec")
+    val vecs = Seq((1L, Seq(1.0, 0.0, 0.0, 0.0), 1.0)).toDF("vec_id", "v", "nrm")
+    val got = graft.queries.VectorQ.nearestCells(vecs, cents, "cl", 2)
+      .orderBy("crn").collect().toSeq
+      .map(r => (r.getAs[Long]("cl"), r.getAs[Double]("fdist")))
+    assert(got == Seq(2L -> 1.0, 9L -> 1.0), got)
+  }
+
   test("mmrGreedy: step 1 is the relevance argmax with max_sim 0.0") {
     mmrPicks(1).foreach { p =>
       assert(p.map(x => (x.step, x.vecId, x.rel, x.maxSim, x.score)) ==
